@@ -17,6 +17,13 @@ primary-key conflict; this sink's default upsert=True adds
 `Prefer: resolution=merge-duplicates`, making re-runs idempotent.
 Set upsert=False for bit-exact reference wire behavior.
 
+Payload: each row posts as one JSON object. Columns named in
+`json_columns` already hold JSON text (the packed `data` column of
+`functions.packing.to_jsonb_records`); that text is spliced into the
+body verbatim, so a `jsonb` target stores the object the reference
+posts (etl_supabase.py:61-66,79) rather than a string scalar, spelled
+exactly as in the CSV cell.
+
 Scale posture: batch size bounds memory per task; retries bound
 transient failures; per-partition row/batch counts flow back through
 accumulators instead of prints (ref :73/:81/:85).
@@ -45,10 +52,23 @@ class RestSinkConfig:
     upsert: bool = True
 
 
-def _post_chunk(cfg: RestSinkConfig, rows: list[dict]) -> None:
-    """POST one chunk with retry/backoff. 4xx fails fast (a malformed
-    payload won't improve on retry); 5xx / connection errors retry."""
-    body = json.dumps(rows, ensure_ascii=False, default=str).encode("utf-8")
+def _row_json(row: dict, json_columns: frozenset[str]) -> str:
+    """One row as a JSON object; values of `json_columns` are JSON text
+    spliced in as they are (null stays null)."""
+    plain = {k: v for k, v in row.items() if k not in json_columns}
+    body = json.dumps(plain, ensure_ascii=False, default=str)[:-1]
+    for k in json_columns & row.keys():
+        sep = "," if len(body) > 1 else ""
+        v = row[k]
+        body += f"{sep}{json.dumps(k, ensure_ascii=False)}:{'null' if v is None else v}"
+    return body + "}"
+
+
+def _post_chunk(cfg: RestSinkConfig, rows: list[str]) -> None:
+    """POST one chunk of rendered rows with retry/backoff. 4xx fails
+    fast (a malformed payload won't improve on retry); 5xx / connection
+    errors retry."""
+    body = ("[" + ",".join(rows) + "]").encode("utf-8")
     headers = {
         "Content-Type": "application/json",
         "Prefer": "resolution=merge-duplicates,return=minimal"
@@ -80,16 +100,20 @@ def _post_chunk(cfg: RestSinkConfig, rows: list[dict]) -> None:
         time.sleep(cfg.backoff_s * (2 ** (attempt - 1)))
 
 
-def upsert_rest(df: DataFrame, cfg: RestSinkConfig) -> dict[str, int]:
+def upsert_rest(
+    df: DataFrame, cfg: RestSinkConfig, json_columns: tuple[str, ...] = ()
+) -> dict[str, int]:
     """Write a DataFrame to a PostgREST-style endpoint in bounded
-    batches, partition-parallel. Returns {'rows': n, 'batches': m}
-    observed via accumulators."""
+    batches, partition-parallel. `json_columns` name string
+    columns that hold JSON text to post as JSON values. Returns
+    {'rows': n, 'batches': m} observed via accumulators."""
     sc = df.sparkSession.sparkContext
     rows_acc = sc.accumulator(0)
     batches_acc = sc.accumulator(0)
+    spliced = frozenset(json_columns)
 
     def _write_partition(it):
-        buf: list[dict] = []
+        buf: list[str] = []
 
         def flush():
             if buf:
@@ -99,7 +123,7 @@ def upsert_rest(df: DataFrame, cfg: RestSinkConfig) -> dict[str, int]:
                 buf.clear()
 
         for row in it:
-            buf.append(row.asDict(recursive=True))
+            buf.append(_row_json(row.asDict(recursive=True), spliced))
             if len(buf) >= cfg.chunk_size:
                 flush()
         flush()

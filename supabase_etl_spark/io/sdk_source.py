@@ -7,6 +7,9 @@ single-threaded, unpartitioned. The Spark-4 Python Data Source API
 source: one InputPartition per (ticker, statement) so a 500-ticker
 backfill fans out across executors (SURVEY §4.2 "vnstock-style SDK
 source"), with the SDK call happening inside `read()` on the executor.
+The batch reader's `statements` option (comma-separated, default all
+three) limits the fetch to the named statements, so a one-statement
+table plans one partition per ticker and makes one SDK call.
 
 Re-implementing vnstock is a non-goal (SURVEY §7.3); the fetch is a
 deterministic synthetic generator with the reference's wide shape —
@@ -52,15 +55,29 @@ def _fetch(ticker: str, statement: str, years: range):
     return rows
 
 
+def _statements(options) -> tuple[str, ...]:
+    """The `statements` option as a tuple in STATEMENTS order (all three
+    when unset); an unknown name fails at planning time."""
+    wanted = options.get("statements")
+    if wanted is None:
+        return STATEMENTS
+    names = set(wanted.split(","))
+    unknown = names - set(STATEMENTS)
+    if unknown:
+        raise ValueError(f"unknown statements {sorted(unknown)}; expected some of {STATEMENTS}")
+    return tuple(s for s in STATEMENTS if s in names)
+
+
 class FinancialStatementsReader(DataSourceReader):
     def __init__(self, options):
         self.tickers = options.get("tickers", "FPT").split(",")
+        self.statements = _statements(options)
         self.start = int(options.get("start_year", "2019"))
         self.end = int(options.get("end_year", "2024"))
 
     def partitions(self):
         return [
-            InputPartition((t, s)) for t in self.tickers for s in STATEMENTS
+            InputPartition((t, s)) for t in self.tickers for s in self.statements
         ]
 
     def read(self, partition):
@@ -105,7 +122,8 @@ class FinancialStatementsStreamReader(SimpleDataSourceStreamReader):
 
 class FinancialStatementsDataSource(DataSource):
     """spark.read.format('financial_statements')
-    .option('tickers', 'FPT,VNM').load()  — batch; or
+    .option('tickers', 'FPT,VNM').option('statements', 'cash_flow')
+    .load()  — batch; or
     spark.readStream.format('financial_statements').load() — incremental
     by year with checkpointed offsets."""
 
@@ -124,4 +142,10 @@ class FinancialStatementsDataSource(DataSource):
 
 
 def register(spark) -> None:
+    """Register the source on ``spark``'s session unless it already is:
+    registering again re-pickles the class and makes Spark log a
+    "replaced a previously registered data source" warning."""
+    name = FinancialStatementsDataSource.name()
+    if spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists(name):
+        return
     spark.dataSource.register(FinancialStatementsDataSource)

@@ -2,11 +2,14 @@
 
 Reference (etl_supabase.py:111-158): extract 3 statement tables →
 row-loop transform → CSV → chunked REST upsert → storage upload, all
-sequential, single-threaded. Here each stage is a lazy plan; `write`
-actions are the only materialization points, and every sink runs
-partition-parallel. Config is injected per-run — no module-level env
-coupling (the reference raises at import if SUPABASE_SERVICE_KEY is
-unset, :17-18; SURVEY §3 EP3 explicitly forbids replicating that).
+sequential, single-threaded, each statement fetched once. Here each
+table is extracted once too: its packed records are persisted, the row
+count fills that cache, and the CSV write and the REST upsert read the
+cached copy; the cache is released when the table is done, also when a
+sink fails (see docs/ORCHESTRATION.md, "Per table"). Config is
+injected per-run — no module-level env coupling (the reference raises
+at import if SUPABASE_SERVICE_KEY is unset, :17-18; SURVEY §3 EP3
+explicitly forbids replicating that).
 
 Orchestration (reference op O1, .github/workflows/etl.yml:4-28): the
 reference's only execution mode is a daily GitHub Actions cron running
@@ -30,7 +33,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from supabase_etl_spark.functions.packing import to_jsonb_records
 from supabase_etl_spark.io.rest_sink import RestSinkConfig, upload_to_storage, upsert_rest
@@ -59,48 +61,50 @@ class PipelineConfig:
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, dict]:
     """Extract → transform → load for every configured source table.
 
-    Returns per-table metrics: rows transformed, REST batches posted,
-    files written. Stage boundaries mirror EP1 (SURVEY §3) with
-    partition-parallel sinks instead of sequential prints.
+    Returns per-table metrics: rows transformed, the CSV directory, the
+    REST sink's delivered rows and batches, the storage object. Each
+    table's source is read once: the sinks share its persisted records.
     """
     report: dict[str, dict] = {}
     for table, source_fn in cfg.sources.items():
         metrics: dict = {}
         raw = source_fn(spark)
 
-        records = to_jsonb_records(raw, ticker_default=cfg.ticker_default)
-        metrics["rows"] = records.count()
+        records = to_jsonb_records(raw, ticker_default=cfg.ticker_default).persist()
+        try:
+            metrics["rows"] = records.count()
+            if cfg.csv_dir:
+                csv_path = os.path.join(cfg.csv_dir, table)
+                write_csv(records, csv_path, single_file=True)
+                metrics["csv_path"] = csv_path
 
-        if cfg.csv_dir:
-            csv_path = os.path.join(cfg.csv_dir, table)
-            write_csv(records, csv_path, single_file=True)
-            metrics["csv_path"] = csv_path
+            if cfg.rest_base_url:
+                sink_cfg = RestSinkConfig(
+                    base_url=cfg.rest_base_url,
+                    table=table,
+                    api_key=cfg.rest_api_key,
+                    chunk_size=cfg.chunk_size,
+                )
+                metrics["rest"] = upsert_rest(records, sink_cfg, json_columns=("data",))
 
-        if cfg.rest_base_url:
-            sink_cfg = RestSinkConfig(
-                base_url=cfg.rest_base_url,
-                table=table,
-                api_key=cfg.rest_api_key,
-                chunk_size=cfg.chunk_size,
-            )
-            metrics["rest"] = upsert_rest(records, sink_cfg)
-
-        if cfg.storage_base_url and cfg.csv_dir:
-            csv_part = next(
-                f
-                for f in os.listdir(metrics["csv_path"])
-                if f.endswith(".csv") and not f.startswith(".")
-            )
-            local = os.path.join(metrics["csv_path"], csv_part)
-            remote = f"etl/{table}.csv"
-            upload_to_storage(
-                local,
-                remote,
-                cfg.storage_base_url,
-                bucket=cfg.storage_bucket,
-                api_key=cfg.rest_api_key,
-            )
-            metrics["storage_object"] = remote
+            if cfg.storage_base_url and cfg.csv_dir:
+                csv_part = next(
+                    f
+                    for f in os.listdir(metrics["csv_path"])
+                    if f.endswith(".csv") and not f.startswith(".")
+                )
+                local = os.path.join(metrics["csv_path"], csv_part)
+                remote = f"etl/{table}.csv"
+                upload_to_storage(
+                    local,
+                    remote,
+                    cfg.storage_base_url,
+                    bucket=cfg.storage_bucket,
+                    api_key=cfg.rest_api_key,
+                )
+                metrics["storage_object"] = remote
+        finally:
+            records.unpersist()
 
         report[table] = metrics
     return report
@@ -110,7 +114,8 @@ def sdk_sources(tickers: str = "FPT") -> dict[str, Callable[[SparkSession], Data
     """Reference-shaped sources: one table per (ticker, statement), e.g.
     fpt_income_statement / fpt_balance_sheet / fpt_cash_flow for the
     reference's single-ticker run (etl_supabase.py:115-119, :145-147),
-    extracted through the partitioned Python Data Source (op S1)."""
+    extracted through the partitioned Python Data Source (op S1). Each
+    table reads only its own statement: one partition, one SDK call."""
     from supabase_etl_spark.io import sdk_source
 
     sources: dict[str, Callable[[SparkSession], DataFrame]] = {}
@@ -119,12 +124,13 @@ def sdk_sources(tickers: str = "FPT") -> dict[str, Callable[[SparkSession], Data
 
             def fn(spark: SparkSession, ticker=ticker, stmt=stmt) -> DataFrame:
                 sdk_source.register(spark)
-                df = (
+                return (
                     spark.read.format("financial_statements")
                     .option("tickers", ticker)
+                    .option("statements", stmt)
                     .load()
+                    .drop("statement")
                 )
-                return df.filter(F.col("statement") == stmt).drop("statement")
 
             sources[f"{ticker.lower()}_{stmt}"] = fn
     return sources

@@ -8,6 +8,7 @@ CSV → REST upsert → storage upload) against the mock.
 
 from __future__ import annotations
 
+import csv
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -53,6 +54,14 @@ def mock_server():
 
 def _base(srv):
     return f"http://127.0.0.1:{srv.server_address[1]}/rest/v1"
+
+
+def _csv_rows(csv_dir):
+    """Data rows of a single-file Spark CSV directory (Spark escapes
+    quotes inside a quoted cell with a backslash)."""
+    part = next(p for p in csv_dir.iterdir() if p.suffix == ".csv")
+    with open(part, newline="", encoding="utf-8") as fh:
+        return list(csv.reader(fh, escapechar="\\", doublequote=False))[1:]
 
 
 def test_chunking_and_headers(spark, mock_server):
@@ -122,6 +131,15 @@ def test_pipeline_end_to_end(spark, mock_server, tmp_path):
 
     rest_reqs = [r for r in store["requests"] if r["path"].startswith("/rest")]
     assert rest_reqs[0]["rows"][0]["ticker"] == "FPT"
+    # `data` posts as the JSON object the CSV cell holds (a jsonb value,
+    # not a string scalar), spelled as in the CSV
+    posted = {(r["ticker"], r["year"]): r["data"] for q in rest_reqs for r in q["rows"]}
+    assert len(posted) == 2
+    for cell_ticker, cell_year, cell_data in _csv_rows(tmp_path / "fpt_income_statement"):
+        data = posted[(cell_ticker, int(cell_year))]
+        assert isinstance(data, dict)
+        assert data == json.loads(cell_data)
+    assert posted[("FPT", 2021)] == {"Doanh thu": None}
     storage_reqs = [r for r in store["requests"] if r["path"].startswith("/storage")]
     assert storage_reqs and storage_reqs[0]["path"].endswith("?upsert=true")
     st_hdr = {k.lower(): v for k, v in storage_reqs[0]["headers"].items()}

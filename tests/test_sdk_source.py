@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from supabase_etl_spark.io.sdk_source import (
     METRICS,
     STATEMENTS,
@@ -19,6 +21,33 @@ def test_partitions_fan_out_per_ticker_statement():
     assert len(parts) == 2 * len(STATEMENTS)
     assert ("FPT", "income_statement") in parts
     assert ("VNM", "cash_flow") in parts
+
+
+def test_statements_option_limits_partitions_and_rows(spark):
+    one = FinancialStatementsReader({"tickers": "FPT", "statements": "cash_flow"})
+    assert [p.value for p in one.partitions()] == [("FPT", "cash_flow")]
+    rows = list(one.read(one.partitions()[0]))
+    assert rows and {r[2] for r in rows} == {"cash_flow"}
+    with pytest.raises(ValueError, match="unknown statements"):
+        FinancialStatementsReader({"statements": "cashflow"})
+
+    register(spark)
+    df = (
+        spark.read.format("financial_statements")
+        .option("tickers", "FPT")
+        .option("statements", "cash_flow")
+        .load()
+    )
+    assert df.rdd.getNumPartitions() == 1
+    assert {r["statement"] for r in df.collect()} == {"cash_flow"}
+
+
+def test_register_skips_an_already_registered_source(spark, monkeypatch):
+    register(spark)
+    calls = []
+    monkeypatch.setattr(type(spark.dataSource), "register", lambda self, ds: calls.append(ds))
+    register(spark)
+    assert calls == []
 
 
 def test_fetch_is_deterministic():
