@@ -59,8 +59,11 @@ def nan_to_null(col: Column | str) -> Column:
 
 
 def nan_to_null_all(df: DataFrame) -> DataFrame:
-    """Apply nan_to_null to every float/double column of a DataFrame."""
-    for field in df.schema.fields:
-        if isinstance(field.dataType, (T.FloatType, T.DoubleType)):
-            df = df.withColumn(field.name, nan_to_null(F.col(f"`{field.name}`")))
-    return df
+    """Apply nan_to_null to every float/double column of a DataFrame, in
+    one select (a `withColumn` per column re-analyzes the plan each time)."""
+    return df.select(*[
+        nan_to_null(F.col(f"`{f.name}`")).alias(f.name)
+        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
+        else F.col(f"`{f.name}`")
+        for f in df.schema.fields
+    ])

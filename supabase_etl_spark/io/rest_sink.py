@@ -17,16 +17,31 @@ primary-key conflict; this sink's default upsert=True adds
 `Prefer: resolution=merge-duplicates`, making re-runs idempotent.
 Set upsert=False for bit-exact reference wire behavior.
 
-Payload: each row posts as one JSON object. Columns named in
-`json_columns` already hold JSON text (the packed `data` column of
-`functions.packing.to_jsonb_records`); that text is spliced into the
-body verbatim, so a `jsonb` target stores the object the reference
-posts (etl_supabase.py:61-66,79) rather than a string scalar, spelled
-exactly as in the CSV cell.
+Payload: each row posts as one JSON object, rendered once in the JVM
+by Spark's JSON writer (`to_json`, nulls kept) — the writer that spells
+the packed `data` column (`functions.packing.pack_json`) and so the CSV
+cell. Columns named in `json_columns` already hold JSON text; that text
+is spliced into the object verbatim (a null as `null`), so a `jsonb`
+target stores the object the reference posts (etl_supabase.py:61-66,79)
+rather than a string scalar. The rendered rows cross to the Python
+poster as UTF-8 lines, as `DataFrame.toJSON` sends them. Spellings that
+differ from Python's `json.dumps`:
+
+    Spark type     posted as
+    decimal        a number: 1.23
+    timestamp      ISO-8601 in the session time zone, e.g.
+                   "2024-01-02T03:04:05.000Z" under UTC
+    date           "2024-01-02"
+    double NaN     the string "NaN" (Infinity likewise), never the bare
+                   token, which strict parsers such as PostgREST reject
+    binary         base64: "AQI="
+
+Strings, integers, booleans, arrays, structs and nulls parse to the
+same JSON values as `json.dumps` of the row would give.
 
 Scale posture: batch size bounds memory per task; retries bound
-transient failures; per-partition row/batch counts flow back through
-accumulators instead of prints (ref :73/:81/:85).
+transient failures; per-partition row, batch and retry counts flow back
+through accumulators instead of prints (ref :73/:81/:85).
 """
 
 from __future__ import annotations
@@ -36,8 +51,12 @@ import time
 import urllib.error
 import urllib.request
 from dataclasses import dataclass
+from itertools import islice
 
-from pyspark.sql import DataFrame
+from pyspark.core.rdd import RDD
+from pyspark.serializers import UTF8Deserializer
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -52,23 +71,31 @@ class RestSinkConfig:
     upsert: bool = True
 
 
-def _row_json(row: dict, json_columns: frozenset[str]) -> str:
-    """One row as a JSON object; values of `json_columns` are JSON text
-    spliced in as they are (null stays null)."""
-    plain = {k: v for k, v in row.items() if k not in json_columns}
-    body = json.dumps(plain, ensure_ascii=False, default=str)[:-1]
-    for k in json_columns & row.keys():
-        sep = "," if len(body) > 1 else ""
-        v = row[k]
-        body += f"{sep}{json.dumps(k, ensure_ascii=False)}:{'null' if v is None else v}"
-    return body + "}"
+def _row_text(df: DataFrame, json_columns: tuple[str, ...]) -> Column:
+    """Each row as the text of one JSON object: the plain columns through
+    Spark's JSON writer, then each `json_columns` value spliced in as it
+    is (null as null)."""
+    members = [
+        F.concat(
+            F.lit(json.dumps(c, ensure_ascii=False) + ":"),
+            F.coalesce(F.col(f"`{c}`"), F.lit("null")),
+        )
+        for c in df.columns
+        if c in json_columns
+    ]
+    plain = [F.col(f"`{c}`") for c in df.columns if c not in json_columns]
+    if plain:
+        obj = F.to_json(F.struct(*plain), {"ignoreNullFields": "false"})
+        members.insert(0, obj.substr(F.lit(2), F.length(obj) - 2))  # without its braces
+    return F.concat(F.lit("{"), F.concat_ws(",", *members), F.lit("}"))
 
 
-def _post_chunk(cfg: RestSinkConfig, rows: list[str]) -> None:
-    """POST one chunk of rendered rows with retry/backoff. 4xx fails
-    fast (a malformed payload won't improve on retry); 5xx / connection
-    errors retry."""
-    body = ("[" + ",".join(rows) + "]").encode("utf-8")
+def _post_chunk(cfg: RestSinkConfig, rows: list[bytes]) -> int:
+    """POST one chunk of rendered rows (UTF-8 JSON objects) with
+    retry/backoff. 4xx fails fast (a malformed payload won't improve on
+    retry); 5xx / connection errors retry. Returns the number of POSTs
+    re-sent."""
+    body = b"[" + b",".join(rows) + b"]"
     headers = {
         "Content-Type": "application/json",
         "Prefer": "resolution=merge-duplicates,return=minimal"
@@ -86,7 +113,7 @@ def _post_chunk(cfg: RestSinkConfig, rows: list[str]) -> None:
             with urllib.request.urlopen(req, timeout=cfg.timeout_s) as resp:
                 if resp.status >= 400:
                     raise urllib.error.HTTPError(url, resp.status, resp.reason, resp.headers, None)
-                return
+                return attempt
         except urllib.error.HTTPError as e:
             if 400 <= e.code < 500:
                 raise  # fail fast, like raise_for_status (ref :83)
@@ -106,30 +133,27 @@ def upsert_rest(
     """Write a DataFrame to a PostgREST-style endpoint in bounded
     batches, partition-parallel. `json_columns` name string
     columns that hold JSON text to post as JSON values. Returns
-    {'rows': n, 'batches': m} observed via accumulators."""
+    {'rows': n, 'batches': m, 'retries': r} observed via accumulators;
+    `retries` counts POSTs re-sent after a 5xx or a connection error."""
     sc = df.sparkSession.sparkContext
     rows_acc = sc.accumulator(0)
     batches_acc = sc.accumulator(0)
-    spliced = frozenset(json_columns)
+    retries_acc = sc.accumulator(0)
 
-    def _write_partition(it):
-        buf: list[str] = []
+    def _write_partition(lines):
+        while chunk := list(islice(lines, cfg.chunk_size)):
+            retries_acc.add(_post_chunk(cfg, chunk))
+            rows_acc.add(len(chunk))
+            batches_acc.add(1)
 
-        def flush():
-            if buf:
-                _post_chunk(cfg, buf)
-                rows_acc.add(len(buf))
-                batches_acc.add(1)
-                buf.clear()
-
-        for row in it:
-            buf.append(_row_json(row.asDict(recursive=True), spliced))
-            if len(buf) >= cfg.chunk_size:
-                flush()
-        flush()
-
-    df.foreachPartition(_write_partition)
-    return {"rows": rows_acc.value, "batches": batches_acc.value}
+    # The rendered rows cross to Python as UTF-8 lines, the route
+    # DataFrame.toJSON takes, and are posted as the bytes that arrive:
+    # the poster unpickles no Rows and decodes no text.
+    lines = getattr(df.select(_row_text(df, json_columns))._jdf, "as")(
+        sc._jvm.org.apache.spark.sql.Encoders.STRING()
+    ).toJavaRDD()
+    RDD(lines, sc, UTF8Deserializer(use_unicode=False)).foreachPartition(_write_partition)
+    return {"rows": rows_acc.value, "batches": batches_acc.value, "retries": retries_acc.value}
 
 
 def upload_to_storage(

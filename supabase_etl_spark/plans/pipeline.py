@@ -62,8 +62,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, dict]:
     """Extract → transform → load for every configured source table.
 
     Returns per-table metrics: rows transformed, the CSV directory, the
-    REST sink's delivered rows and batches, the storage object. Each
-    table's source is read once: the sinks share its persisted records.
+    REST sink's delivered rows, batches and retries, the storage object.
+    Each table's source is read once: the sinks share its persisted
+    records.
     """
     report: dict[str, dict] = {}
     for table, source_fn in cfg.sources.items():

@@ -82,7 +82,7 @@ def test_one_extraction_per_table(spark, postgrest_mock, tmp_path):
         ids = sorted(row["data"]["id"] for batch in posts.get(table, []) for row in batch)
         assert ids == list(range(n_rows))
 
-    assert report["empty"]["rest"] == {"rows": 0, "batches": 0}
+    assert report["empty"]["rest"] == {"rows": 0, "batches": 0, "retries": 0}
     assert "empty" not in posts
     assert _persistent_rdd_ids(spark) <= before
 

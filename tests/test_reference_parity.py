@@ -127,3 +127,31 @@ def test_nan_vs_null_distinction(spark):
     vals = [r["v"] for r in nan_to_null_all(df).collect()]
     assert vals.count(None) == 2 and 1.5 in vals
     assert not any(isinstance(v, float) and math.isnan(v) for v in vals)
+
+
+def test_nan_to_null_all_keeps_schema_and_values(spark):
+    from pyspark.sql import types as T
+
+    from supabase_etl_spark.functions.nulls import nan_to_null_all
+
+    schema = T.StructType([
+        T.StructField("f", T.FloatType(), False),
+        T.StructField("i", T.IntegerType(), False),
+        T.StructField("Doanh thu", T.DoubleType(), True),
+        T.StructField("s", T.StringType(), True),
+    ])
+    df = spark.createDataFrame(
+        [(float("nan"), 1, 2.5, "a"), (1.5, 2, float("nan"), None)], schema
+    )
+    out = nan_to_null_all(df)
+    assert out.columns == df.columns
+    assert [(f.dataType, f.nullable) for f in out.schema.fields] == [
+        (T.FloatType(), True),  # a NaN may become null
+        (T.IntegerType(), False),
+        (T.DoubleType(), True),
+        (T.StringType(), True),
+    ]
+    assert sorted(out.collect(), key=lambda r: r["i"]) == [
+        (None, 1, 2.5, "a"),
+        (1.5, 2, None, None),
+    ]

@@ -2,13 +2,17 @@
 
 Asserts: chunk sizes ≤ 300 (ref :71,:77-78), upsert headers, retry on
 5xx with eventual success, fail-fast on 4xx, at-least-once delivery
-accounting, and the EP1 pipeline end-to-end (extract → jsonb records →
+accounting, the JSON spelling of every column type, one Spark job per
+upsert, and the EP1 pipeline end-to-end (extract → jsonb records →
 CSV → REST upsert → storage upload) against the mock.
 """
 
 from __future__ import annotations
 
+import base64
 import csv
+import datetime
+import decimal
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -28,6 +32,7 @@ class _MockPostgrest(BaseHTTPRequestHandler):
             "path": self.path,
             "rows": json.loads(body) if body and self.path.startswith("/rest") else None,
             "raw_len": len(body),
+            "body": body,
             "headers": dict(self.headers),
         }
         self.store["requests"].append(entry)
@@ -69,7 +74,7 @@ def test_chunking_and_headers(spark, mock_server):
     df = spark.range(750).selectExpr("id", "id * 2 AS v").coalesce(1)
     cfg = RestSinkConfig(base_url=_base(srv), table="t1", api_key="k123", chunk_size=300)
     metrics = upsert_rest(df, cfg)
-    assert metrics == {"rows": 750, "batches": 3}
+    assert metrics == {"rows": 750, "batches": 3, "retries": 0}
     sizes = sorted(len(r["rows"]) for r in store["requests"])
     assert sizes == [150, 300, 300]
     # urllib normalizes header casing on the wire — compare case-insensitively
@@ -89,6 +94,7 @@ def test_retry_on_500_then_success(spark, mock_server):
     assert metrics["rows"] == 10
     # 2 failures + 1 success = 3 POSTs, at-least-once visible on the wire
     assert len(store["requests"]) == 3
+    assert metrics["retries"] == 2
 
 
 def test_fail_fast_on_400(spark, mock_server):
@@ -99,6 +105,94 @@ def test_fail_fast_on_400(spark, mock_server):
     with pytest.raises(Exception):
         upsert_rest(df, cfg)
     assert len(store["requests"]) == 1  # no retry on 4xx
+
+
+def _strict_rows(store):
+    """Every posted row, parsed by a JSON parser that rejects the
+    non-standard NaN/Infinity literals, as PostgREST does."""
+
+    def reject(token):
+        raise ValueError(f"invalid JSON constant {token}")
+
+    return [
+        row
+        for r in store["requests"]
+        for row in json.loads(r["body"], parse_constant=reject)
+    ]
+
+
+def test_payload_type_matrix(spark, mock_server):
+    """Each column type as Spark's JSON writer spells it (the writer of
+    the packed `data` column and the CSV cell): NaN as "NaN", decimal as
+    a number, timestamp as ISO-8601 UTC, binary as base64."""
+    from pyspark.sql import Row
+
+    srv, store = mock_server
+    df = spark.createDataFrame(
+        [(
+            1, 2**40, True, 'say "hi"\nDoanh thu năm', float("nan"), 1e16, 0.1,
+            decimal.Decimal("1.23"), datetime.datetime(2024, 1, 2, 3, 4, 5),
+            datetime.date(2024, 1, 2), None, [1, 2], Row(x=1, y="z"),
+            bytearray(b"\x01\x02"), "v", 2024,
+        )],
+        "i int, big bigint, flag boolean, s string, nan double, large double, "
+        "small double, dec decimal(10,2), ts timestamp, d date, missing int, "
+        "arr array<int>, st struct<x:int,y:string>, bin binary, `a b` string, "
+        "`Năm` int",
+    )
+    cfg = RestSinkConfig(base_url=_base(srv), table="types", backoff_s=0.01)
+    assert upsert_rest(df, cfg)["rows"] == 1
+
+    (row,) = _strict_rows(store)
+    assert list(row) == df.columns  # every key, in column order, nulls kept
+    assert row["missing"] is None
+    assert row["nan"] == "NaN"
+    assert row["large"] == 1e16 and row["small"] == 0.1
+    assert row["dec"] == 1.23
+    assert row["ts"] == "2024-01-02T03:04:05.000Z"
+    assert row["d"] == "2024-01-02"
+    assert base64.b64decode(row["bin"]) == b"\x01\x02" and row["bin"] == "AQI="
+    assert row["i"] == 1 and row["big"] == 2**40 and row["flag"] is True
+    assert row["s"] == 'say "hi"\nDoanh thu năm'
+    assert row["arr"] == [1, 2]
+    assert row["st"] == {"x": 1, "y": "z"}
+    assert row["a b"] == "v" and row["Năm"] == 2024
+
+
+def test_json_column_only_frame(spark, mock_server):
+    """A frame of one `json_columns` column: its text is spliced in as
+    the value, a null as null."""
+    srv, store = mock_server
+    df = spark.createDataFrame(
+        [('{"Doanh thu": 1.5, "nested": [1, {"a": null}]}',), (None,)], "data string"
+    ).coalesce(1)
+    cfg = RestSinkConfig(base_url=_base(srv), table="spliced", backoff_s=0.01)
+    assert upsert_rest(df, cfg, json_columns=("data",))["rows"] == 2
+    assert _strict_rows(store) == [
+        {"data": {"Doanh thu": 1.5, "nested": [1, {"a": None}]}},
+        {"data": None},
+    ]
+
+
+def test_upsert_runs_one_job_on_a_cached_frame(spark, mock_server):
+    """The sink is one pass over its input: no collect, count or second
+    scan of the frame it posts."""
+    srv, _ = mock_server
+    df = spark.range(40).selectExpr("id", "CAST(id AS string) AS data").repartition(3)
+    df.persist()
+    try:
+        df.count()
+        sc = spark.sparkContext
+        sc.setJobGroup("rest-sink-jobs", "upsert_rest on a cached frame")
+        try:
+            cfg = RestSinkConfig(base_url=_base(srv), table="jobs", chunk_size=7)
+            assert upsert_rest(df, cfg, json_columns=("data",))["rows"] == 40
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("rest-sink-jobs")) == 1
+    finally:
+        df.unpersist()
 
 
 def test_pipeline_end_to_end(spark, mock_server, tmp_path):
