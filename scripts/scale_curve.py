@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from supabase_etl_spark.pinning import pin  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # default 1/3/10; VERDICT r9 task 5 runs 1/30/100 for the flagship
 # pipelines via SPARK_GRAFT_BLOWUPS=1,30,100
@@ -431,10 +433,9 @@ def main() -> None:
         # is quadratic in posting-list length, so the curve tests
         # whether constant duplicate density (disjoint per-copy
         # shingles) keeps posting lists, and thus growth, linear.
-        sh = (
+        sh = pin(
             D.exploded_shingles(docs)
             .select("doc_id", F.xxhash64("s").alias("s"))
-            .localCheckpoint(eager=False)
         )
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
         a, b = sh.alias("a"), sh.alias("b")
@@ -715,7 +716,7 @@ def main() -> None:
         # embedding_kmeans_lloyd's loop shape (llm_curation.py): 3
         # chained rounds of broadcast-centroid assignment (exact
         # decimal distances over exploded components) + mean recompute,
-        # localCheckpoint-truncated per round. Linear curve = each
+        # pin-truncated per round. Linear curve = each
         # round is one corpus scan + a k x dim agg; super-linear would
         # mean the chained lineage is re-executing earlier rounds.
         e = blowup_embeddings(docs.__mult__)
@@ -723,10 +724,10 @@ def main() -> None:
             "vec_id",
             F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "v"),
         )
-        cents = (
+        cents = pin(
             vals.filter(F.col("vec_id") < 8)
-            .select(F.col("vec_id").alias("cid"), "pos", F.col("v").alias("m"))
-            .localCheckpoint()
+            .select(F.col("vec_id").alias("cid"), "pos", F.col("v").alias("m")),
+            eager=True,
         )
         a = None
         for i in range(3):
@@ -738,14 +739,14 @@ def main() -> None:
                 .groupBy("vec_id", "cid")
                 .agg(F.sum(term).alias("d2"))
             )
-            a = (
+            a = pin(
                 d.groupBy("vec_id")
                 .agg(F.min(F.struct("d2", "cid")).alias("b"))
-                .select("vec_id", F.col("b.cid").alias("cid"))
-                .localCheckpoint()
+                .select("vec_id", F.col("b.cid").alias("cid")),
+                eager=True,
             )
             if i < 2:
-                cents = (
+                cents = pin(
                     vals.join(a, "vec_id")
                     .groupBy("cid", "pos")
                     .agg(
@@ -753,8 +754,8 @@ def main() -> None:
                             F.sum(F.col("v").cast("decimal(28,6)")).cast("double")
                             / F.count(F.lit(1))
                         ).alias("m")
-                    )
-                    .localCheckpoint()
+                    ),
+                    eager=True,
                 )
         a.groupBy("cid").count().write.format("noop").mode("overwrite").save()
 
@@ -829,11 +830,10 @@ def main() -> None:
         d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
             F.col("ay") - F.col("by")
         ) * (F.col("ay") - F.col("by"))
-        nbr = (
+        nbr = pin(
             probe.join(right, ["pcx", "pcy"])
             .filter((F.col("ida") != F.col("idb")) & (d2 <= eps2))
             .select("ida", "idb")
-            .localCheckpoint(eager=False)
         )
         core = (
             nbr.groupBy("ida")
@@ -1169,7 +1169,7 @@ def main() -> None:
 
         mult = docs.__mult__
         ids = spark.range(100 * mult).select(F.col("id").alias("doc_id"))
-        dec = M.decode_gray_with_ahash(M.generate_images(ids)).localCheckpoint()
+        dec = pin(M.decode_gray_with_ahash(M.generate_images(ids)), eager=True)
         hashed = dec.select("uri", "ahash")
         cand = (
             hashed.alias("x")
@@ -1244,12 +1244,12 @@ def main() -> None:
                 ).cast("double") / F.lit(2147483648.0) - F.lit(0.5),
             ).alias("embedding"),
         )
-        hashed = vec.select(
+        hashed = pin(vec.select(
             "vec_id",
             "embedding",
             F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("nrm"),
             lsh_bucket(F.col("embedding")),
-        ).localCheckpoint()
+        ), eager=True)
         a = hashed.select("bucket", F.col("vec_id").alias("node"),
                           F.col("embedding").alias("ea"), F.col("nrm").alias("na"))
         b = hashed.select("bucket", F.col("vec_id").alias("neighbor"),
@@ -1285,9 +1285,9 @@ def main() -> None:
             F.concat(F.col("uri"), F.lit(".r2")).alias("uri"), "content"
         )
         corpus = orig.select("uri", "content").unionByName(res)
-        feats = M.audio_canonical_features(
+        feats = pin(M.audio_canonical_features(
             corpus, CANON_RATE, AUDIO_BLOCKS
-        ).localCheckpoint()
+        ), eager=True)
         doc_id = F.regexp_extract("uri", r"doc://(\d+)", 1).cast("bigint")
         variant = F.when(F.col("uri").endswith(".r2"), 1).otherwise(0)
         coarse = [
@@ -1332,7 +1332,7 @@ def main() -> None:
             F.concat(F.col("uri"), F.lit(".d2")).alias("uri"), "content"
         )
         corpus = orig.select("uri", "content").unionByName(dec)
-        feats = M.video_canonical_features(corpus, VCANON_FPS).localCheckpoint()
+        feats = pin(M.video_canonical_features(corpus, VCANON_FPS), eager=True)
         doc_id = F.regexp_extract("uri", r"doc://(\d+)", 1).cast("bigint")
         variant = F.when(F.col("uri").endswith(".d2"), 1).otherwise(0)
         coarse = F.array_join(

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.operators.text import tokens
+from supabase_etl_spark.pinning import pin
 
 SHINGLE_K = 3  # word n-gram width
 
@@ -124,9 +125,9 @@ def jaccard_pairs(
     shingles (p ≈ n²/2⁶⁵ ≈ 2e-11 at 27k shingles) would add 1 to one
     pair's intersection — accepted and documented.
     """
-    sh = exploded_shingles(docs, id_col).select(
+    sh = pin(exploded_shingles(docs, id_col).select(
         id_col, F.xxhash64("s").alias("s")
-    ).localCheckpoint(eager=False)  # sizes + both join sides (scan-leaf lint)
+    ))  # sizes + both join sides (scan-leaf lint)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -169,9 +170,9 @@ def jaccard_pairs_prefix(
     frame) instead of two sorts of the exploded corpus.
     """
     assert threshold == 0.8, "prefix bound hardcoded for t=0.8 (see docstring)"
-    sh = exploded_shingles(docs, id_col).select(
+    sh = pin(exploded_shingles(docs, id_col).select(
         id_col, F.xxhash64("s").alias("s")
-    ).localCheckpoint(eager=False)  # df, rank, sizes, re-expansion sides (scan-leaf lint)
+    ))  # df, rank, sizes, re-expansion sides (scan-leaf lint)
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w_rank = Window.partitionBy(id_col).orderBy("df", "s")
     w_n = w_rank.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -181,9 +182,9 @@ def jaccard_pairs_prefix(
         .withColumn("n", F.count(F.lit(1)).over(w_n))
     )
     prefix_len = F.col("n") - F.floor((4 * F.col("n") + 4) / 5) + 1
-    prefix = ranked.filter(F.col("rn") <= prefix_len).select(
+    prefix = pin(ranked.filter(F.col("rn") <= prefix_len).select(
         id_col, "s", "rn", "n"
-    ).localCheckpoint(eager=False)  # self-joined (scan-leaf lint)
+    ))  # self-joined (scan-leaf lint)
     # Candidate pruning (the other two PPJoin bounds — measured on the
     # 10x scale curve, these cut candidate pairs ~1.2M → ~tens of k
     # BEFORE the per-shingle re-expansion join, which is |cand| x

@@ -473,7 +473,7 @@ def decode_gray_with_ahash(df: DataFrame, content_col: str = "content") -> DataF
     for compositions that need the perceptual signature AND the pixel
     vectors (candidate generation + structural verify), so the image
     set is never decoded twice (VERDICT r8 task 5). Callers should
-    pin the result (localCheckpoint) when consuming it from more than
+    pin the result (pinning.pin) when consuming it from more than
     one side of a join: mapInPandas re-executes per consumer."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

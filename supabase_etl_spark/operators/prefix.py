@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from supabase_etl_spark.pinning import pin
+
 _PID = "__pfx_pid"
 _LOCAL = "__pfx_local"
 _OFF = "__pfx_off"
@@ -40,7 +42,7 @@ def distributed_cumsum(
     for exactness."""
     spark = df.sparkSession
     par = num_partitions or spark.sparkContext.defaultParallelism
-    # localCheckpoint is CORRECTNESS here, not an optimization: `local`
+    # the eager pin is CORRECTNESS here, not an optimization: `local`
     # and `offsets` below both consume `ranged`, and without
     # materialization each consumer re-evaluates the plan —
     # repartitionByRange re-SAMPLES its range boundaries per
@@ -50,10 +52,10 @@ def distributed_cumsum(
     # (observed: chained cumsums over a groupBy output produced a
     # wrong KS statistic; pinned by
     # tests/test_prefix_sum.py::test_chained_cumsum_over_shuffle_output).
-    ranged = (
+    ranged = pin(
         df.repartitionByRange(par, *order)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=True,
     )
     wloc = (
         Window.partitionBy(_PID)
@@ -99,10 +101,10 @@ def distributed_cumsums(
     par = num_partitions or spark.sparkContext.defaultParallelism
     # Same correctness checkpoint as distributed_cumsum: both consumers
     # must see ONE materialized range partitioning.
-    ranged = (
+    ranged = pin(
         df.repartitionByRange(par, *order)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=True,
     )
     wloc = (
         Window.partitionBy(_PID)

@@ -1,41 +1,30 @@
-"""Pin-durability policy for shared-frame checkpoints.
+"""The engine's one pin primitive.
 
-The engine pins every multi-consumer intermediate with
-``localCheckpoint(eager=False)`` — the scan-once discipline the
-scan-leaf lint enforces (tests/test_scan_leaf_lint.py). Local
-checkpoints write their blocks to EXECUTOR-LOCAL storage
-(MEMORY_AND_DISK) and TRUNCATE lineage: on a healthy cluster that is
-the cheapest way to stop Catalyst re-deriving a shared frame per
-consumer, but a lost executor makes its blocks unrecoverable — the job
-fails instead of recomputing (SCALE.md §pin-durability states the
-operating policy).
+The engine pins every multi-consumer intermediate with ``pin(df)`` —
+the scan-once discipline the scan-leaf lint enforces
+(tests/test_scan_leaf_lint.py) — and materializes frames whose values
+depend on being computed once (a ``spark_partition_id`` binding, a
+sampled range partitioning) with ``pin(df, eager=True)``. No module
+outside this one calls ``localCheckpoint`` or ``checkpoint``
+(tests/test_pin_durability.py lints the source).
 
-This module is the 100 TB escape hatch (VERDICT r12 task 6): one
-environment switch re-routes EVERY pin site in the engine without
-touching the ~170 call sites or changing any query's values:
+``SPARK_GRAFT_PIN_MODE`` picks the durability of every pin, read on
+each call, for every session (SCALE.md §pin-durability):
 
-    SPARK_GRAFT_PIN_MODE=local     (default) stock localCheckpoint —
-                                   fastest; blocks die with executors.
-                                   Right for on-demand / non-preemptible
-                                   clusters and local runs.
-    SPARK_GRAFT_PIN_MODE=reliable  reliable ``checkpoint`` to
-                                   SPARK_GRAFT_CHECKPOINT_DIR (HDFS/S3
-                                   on a cluster): blocks survive
-                                   executor loss at the cost of a write
-                                   to durable storage. Right for
-                                   preemptible/spot fleets.
-    SPARK_GRAFT_PIN_MODE=none      identity — no pin at all; full
-                                   lineage is kept, so any executor loss
-                                   recovers by recompute, at the cost of
-                                   the per-consumer re-scans the pins
-                                   exist to avoid. Right only when
-                                   durable storage is unavailable AND
-                                   preemption is frequent.
+    local     (default) ``localCheckpoint``: blocks in executor-local
+              storage (MEMORY_AND_DISK), lineage truncated. Fastest;
+              a lost executor's blocks are unrecoverable, so the job
+              fails instead of recomputing. Right for on-demand /
+              non-preemptible clusters and local runs.
+    reliable  ``checkpoint`` to SPARK_GRAFT_CHECKPOINT_DIR (HDFS/S3 on
+              a cluster) unless the context already has a checkpoint
+              directory: blocks survive executor loss at the cost of a
+              write to durable storage. Right for preemptible/spot
+              fleets.
 
-The dispatcher is installed by ``session.get_spark`` (our factory);
-sessions the round driver builds itself never see it, so the driver
-contract is unchanged. Installation is idempotent and the default mode
-calls straight through to the stock implementation.
+Both modes materialize, so results are identical under either. There
+is no unpinned mode: the correctness pins above return wrong values
+without one.
 """
 
 from __future__ import annotations
@@ -44,47 +33,24 @@ import os
 
 from pyspark.sql import DataFrame
 
-_STOCK_LOCAL_CHECKPOINT = None
-
 
 def pin_mode() -> str:
     mode = os.environ.get("SPARK_GRAFT_PIN_MODE", "local")
-    if mode not in ("local", "reliable", "none"):
-        raise ValueError(
-            f"SPARK_GRAFT_PIN_MODE={mode!r}: expected local|reliable|none"
-        )
+    if mode not in ("local", "reliable"):
+        raise ValueError(f"SPARK_GRAFT_PIN_MODE={mode!r}: expected local|reliable")
     return mode
 
 
-def _dispatching_local_checkpoint(self: DataFrame, eager: bool = True):
-    mode = pin_mode()
-    if mode == "none":
-        return self
-    if mode == "reliable":
-        sc = self.sparkSession.sparkContext
+def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once and truncate its lineage. Lazy by
+    default: the first action over the result writes the blocks."""
+    if pin_mode() == "reliable":
+        sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
-            ckdir = os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/spark-graft-checkpoints"
+            sc.setCheckpointDir(
+                os.environ.get(
+                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/spark-graft-checkpoints"
+                )
             )
-            sc.setCheckpointDir(ckdir)
-        return self.checkpoint(eager=eager)
-    return _STOCK_LOCAL_CHECKPOINT(self, eager=eager)
-
-
-def install_pin_policy() -> None:
-    """Route ``DataFrame.localCheckpoint`` through the pin-mode
-    dispatcher (idempotent; stock behavior under the default mode).
-
-    Spark 4 note: ``pyspark.sql.DataFrame`` is the dispatch base; the
-    classic engine's instances carry their own override on
-    ``pyspark.sql.classic.dataframe.DataFrame``, so that is the class
-    to patch (patching only the base would never be reached)."""
-    global _STOCK_LOCAL_CHECKPOINT
-    if _STOCK_LOCAL_CHECKPOINT is not None:
-        return
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _ClassicDF
-    except ImportError:  # pre-4.0 layout: one concrete class
-        _ClassicDF = DataFrame
-    _STOCK_LOCAL_CHECKPOINT = _ClassicDF.localCheckpoint
-    _ClassicDF.localCheckpoint = _dispatching_local_checkpoint
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -60,14 +60,14 @@ class QuerySpec:
     # one justification string here — a genuine multi-pass over the
     # source (self-join, bounds probe, second pass at a different
     # granularity), never silent lineage recompute, which is fixed by
-    # localCheckpoint(eager=False)-pinning the shared frame instead.
+    # pinning the shared frame instead (pinning.pin).
     scans: tuple[str, ...] = field(default_factory=tuple)
     # Sanctioned parquet-scan leaves INSIDE pinned builder frames
-    # (VERDICT r12 task 3 — the scan-leaf lint's blind spot: a
-    # localCheckpoint truncates its subtree to a LogicalRDD, so
-    # recompute inside the pin's one-time materialization is invisible
-    # to the consumer-plan lint). tests/test_pin_interior_lint.py spies
-    # on every localCheckpoint call the query makes and audits each
+    # (VERDICT r12 task 3 — the scan-leaf lint's blind spot: a pin
+    # truncates its subtree to a LogicalRDD, so recompute inside the
+    # pin's one-time materialization is invisible to the consumer-plan
+    # lint). tests/test_pin_interior_lint.py spies on every pin the
+    # query makes and audits each
     # BUILDER frame's own physical plan with the same
     # distinct-paths + 1 budget; the query's total builder excess must
     # be <= len(pin_scans), one justification string per sanctioned

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import davg, dsum, sql_davg, sql_dsum
 
@@ -1010,8 +1011,8 @@ def agg_hll_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "view").select("user_id")
     b = ev.filter(F.col("event_type") == "purchase").select("user_id")
-    a = a.localCheckpoint(eager=False)  # sketch + exact passes (scan-leaf lint)
-    b = b.localCheckpoint(eager=False)  # sketch + exact passes (scan-leaf lint)
+    a = pin(a)  # sketch + exact passes (scan-leaf lint)
+    b = pin(b)  # sketch + exact passes (scan-leaf lint)
     sk = (
         a.agg(F.hll_sketch_agg("user_id").alias("sk_a"))
         .crossJoin(b.agg(F.hll_sketch_agg("user_id").alias("sk_b")))
@@ -1491,7 +1492,7 @@ def agg_herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(28,6)")).cast("double").alias("cust_rev")
         )
     )
-    rev = rev.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    rev = pin(rev)  # shared frame (scan-leaf lint)
     seg = rev.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum(F.col("cust_rev").cast("decimal(28,6)")).cast("double").alias("seg_rev"),
@@ -1896,7 +1897,7 @@ def agg_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = cust.filter(F.col("c_acctbal") > 0).select(
         "c_nationkey", F.col("c_acctbal").alias("x")
     )
-    pos = pos.localCheckpoint(eager=False)  # totals + rows + inner (scan-leaf lint)
+    pos = pin(pos)  # totals + rows + inner (scan-leaf lint)
     tot = pos.agg(
         (F.sum(F.col("x").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)))
         .alias("mu"),
@@ -2041,12 +2042,12 @@ def agg_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("l_quantity").cast("bigint").alias("x"),
         F.floor(F.col("l_extendedprice") / 2000.0).cast("bigint").alias("y"),
     )
-    cells = (
+    cells = pin(
         pts.groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c")),
         # grid-sized table feeding the pair join twice, the tie terms,
         # and the total: truncate so the corpus scans once
-        .localCheckpoint()
+        eager=True,
     )
     a, b = cells.alias("a"), cells.alias("b")
     kind = (
@@ -2640,7 +2641,7 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "treat",
         "metric",
     )
-    cells = cells.localCheckpoint(eager=False)  # rank + sums (scan-leaf lint)
+    cells = pin(cells)  # rank + sums (scan-leaf lint)
     wr = Window.partitionBy("block").orderBy("metric", "treat")
     ranked = cells.select(
         "block", "treat", F.row_number().over(wr).cast("bigint").alias("r")
@@ -3116,7 +3117,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsequent operation (union, θ, membership counts) runs on ≤k-row
     arrays in 1-row frames. This is the sketch-mergeability argument
     verbatim: 100 TB reduces to k numbers per set per partition."""
-    ev = (
+    ev = pin(  # consumed by the sketch AND the exact panel
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
         .select(
@@ -3124,8 +3125,8 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.to_date("ts").alias("d"),
         )
-        .distinct()
-        .localCheckpoint()  # consumed by the sketch AND the exact panel
+        .distinct(),
+        eager=True,
     )
     h = (
         F.conv(
@@ -3158,6 +3159,9 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replayed the whole sketch-build subtree (el distinct + two-level
     # KMV), doubling every stage of the build. One global pivot
     # aggregate extracts both sketches in a single pass of the build.
+    # A missing event class leaves its sketch NULL: the pivot's one
+    # row is dropped so the query returns zero rows, as the oracle's
+    # cross join of the two sketches does.
     un = kmv.groupBy().agg(
         F.first(F.when(F.col("s") == "click", F.col("ks")), ignorenulls=True).alias(
             "ka"
@@ -3165,7 +3169,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first(F.when(F.col("s") == "purchase", F.col("ks")), ignorenulls=True).alias(
             "kb"
         ),
-    ).select(
+    ).filter(F.col("ka").isNotNull() & F.col("kb").isNotNull()).select(
         "ka",
         "kb",
         F.slice(F.array_sort(F.array_union("ka", "kb")), 1, KMV_K).alias("ku"),
@@ -3459,10 +3463,10 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("pos"),
     )
     par = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = pin(
         per_v.repartitionByRange(par, "v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=True,
     )
     wloc = Window.partitionBy("_pid").orderBy("v").rowsBetween(
         Window.unboundedPreceding, -1

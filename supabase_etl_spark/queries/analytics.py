@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.joins import broadcast_bounded
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
 
@@ -336,7 +337,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.broadcast(load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"))
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
+    raw = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -349,23 +350,22 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin's builder (directly + via outw) — without this inner pin
         # the 5-table star join runs twice per edges materialization
         # (pin-interior lint, r13)
-        .localCheckpoint(eager=False)
     )
     outw = raw.groupBy(F.col("src").alias("o_src")).agg(
         F.sum("w").cast("bigint").alias("total")
     )
-    edges = (
+    edges = pin(  # 625-row edge table; truncate the star-join lineage
         raw.join(outw, raw.src == outw.o_src)
         .select(
             "src",
             "dst",
             (F.col("w").cast("double") / F.col("total").cast("double")).alias("w_frac"),
-        )
-        .localCheckpoint()  # 625-row edge table; truncate the star-join lineage
+        ),
+        eager=True,
     )
-    nodes = load_table(spark, sf_dir, "nation").select(
+    nodes = pin(load_table(spark, sf_dir, "nation").select(
         F.col("n_name").alias("v")
-    ).localCheckpoint(eager=False)  # consumed every iteration (scan-leaf lint)
+    ))  # consumed every iteration (scan-leaf lint)
     n_nodes = nodes.count()
     ranks = nodes.select("v", (F.lit(1.0) / n_nodes).alias("rank"))
     for _ in range(PR_ITERATIONS):
@@ -956,7 +956,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    edges = (
+    edges = pin(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -967,7 +967,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # multi-consumer edge list: pin once (scan-leaf lint) — without
         # it the basket self-join re-runs per consumer
-        .localCheckpoint(eager=False)
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (
@@ -1106,19 +1105,17 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash-join row scan — no cross join, no window over the event
     stream; stage tables shrink monotonically."""
     e = load_table(spark, sf_dir, "events")
-    views = (
+    views = pin(  # 2 consumers (scan-leaf lint)
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
     )
     span = F.expr(f"INTERVAL {FUNNEL_WINDOW_DAYS} DAYS")
-    clicks = (
+    clicks = pin(  # 2 consumers (scan-leaf lint)
         views.join(e.filter(F.col("event_type") == "click"), "user_id")
         .filter((F.col("ts") > F.col("t_view")) & (F.col("ts") <= F.col("t_view") + span))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
     )
     purchases = (
         clicks.join(e.filter(F.col("event_type") == "purchase"), "user_id")
@@ -1518,6 +1515,7 @@ def merge_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LPA_ITERATIONS = 3
+LPA_PIN_EVERY = 4  # eager labels pin every k rounds: lineage bounded in rounds
 
 
 @query(
@@ -1568,6 +1566,13 @@ LPA_ITERATIONS = 3
     """,
     tags=("graph",),
     bench=True,
+    # the eager sym pin's builder lists 4 lineitem FileScan leaves
+    # (budget 2); its final AQE plan runs 1 FileScan + 2 ReusedExchange
+    # (sf0.001): the excess is static, not an extra physical scan
+    pin_scans=(
+        "sym builder: edges self-join side b re-lists li (ReusedExchange 1 of 2)",
+        "sym builder: union's mirrored leg re-lists edges (ReusedExchange 2 of 2)",
+    ),
 )
 def graph_label_propagation(
     spark: SparkSession,
@@ -1603,9 +1608,11 @@ def graph_label_propagation(
     joins), and the round's two aggregations share ONE exchange
     hashed on ``node`` (guide §2.4: hash(node) satisfies the
     (node, lbl) clustering requirement, so Catalyst plans both aggs
-    exchange-free after the explicit repartition). Rounds stay
-    un-pinned: a 3-round lineage is shallow, and one AQE execution
-    reuses its own exchanges where per-round pins could not. On an
+    exchange-free after the explicit repartition). Rounds are pinned
+    only every LPA_PIN_EVERY rounds, so the default 3 run un-pinned:
+    a 3-round lineage is shallow, and one AQE execution reuses its own
+    exchanges where per-round pins could not; a longer run keeps its
+    plan bounded by the pin interval. On an
     UNBOUNDED graph the partial-aggregating two-exchange shape
     (map-side combine before a (node,lbl)-keyed shuffle) is the
     honest layout — ``bounded_graph=False`` restores it by dropping
@@ -1629,13 +1636,13 @@ def graph_label_propagation(
         # materialization, where the union's two branches share the
         # distinct exchange via ReusedExchange
     )
-    sym = (
+    sym = pin(
         edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
+        .distinct(),
         # eager (r14): one clean materialization up front; per-round
         # consumers then scan cached blocks instead of re-entering a
         # nested lazy-pin AQE execution per round (scan-leaf lint)
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -1643,7 +1650,7 @@ def graph_label_propagation(
     # r13: the per-round "most frequent label, ties to smallest" pick is
     # a partial-aggregating min(struct(-count, lbl)) instead of a
     # row_number window — same winner by lexicographic struct order.
-    for _ in range(iterations):
+    for i in range(1, iterations + 1):
         msgs = sym.join(
             broadcast_bounded(labels, bounded_graph), sym["v"] == labels["node"]
         ).select(sym["u"].alias("node"), "lbl")
@@ -1662,6 +1669,8 @@ def graph_label_propagation(
             )
             .select("node", F.col("b.lbl").alias("lbl"))
         )
+        if i % LPA_PIN_EVERY == 0 and i < iterations:
+            labels = pin(labels, eager=True)
     return (
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_nodes"), F.min("node").alias("min_node"))
@@ -1972,9 +1981,9 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ev.groupBy("user_id").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
-    dev = ev.join(med, "user_id").select(
+    dev = pin(ev.join(med, "user_id").select(
         "user_id", "event_id", "value", F.abs(F.col("value") - F.col("med")).alias("adev")
-    ).localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
+    ))  # 2 consumers (scan-leaf lint)
     mad = dev.groupBy("user_id").agg(
         F.expr("percentile(adev, 0.5)").alias("mad")
     )
@@ -2046,7 +2055,7 @@ def graph_kcore(
     Per round: one degree agg + two semi-joins restricting the
     symmetric edge list — Pregel's message shape, all hash-keyed on
     vertex id, nothing quadratic; the edge frame is
-    localCheckpoint-truncated per round so plan analysis stays flat in
+    pin-truncated per round so plan analysis stays flat in
     the round count (the r4 LPA lesson). At 100 TB degrees skew
     (celebrity vertices), but the agg is a map-side-combinable count —
     the skew lands on one combiner key, not a shuffle hot spot."""
@@ -2057,7 +2066,7 @@ def graph_kcore(
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    e = (
+    e = pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -2067,11 +2076,10 @@ def graph_kcore(
         .distinct()
         # multi-consumer edge list: pin once (scan-leaf lint) — without
         # it the basket self-join re-runs per consumer
-        .localCheckpoint(eager=False)
     )
-    sym = e.unionByName(
+    sym = pin(e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
+    ))
     for _ in range(rounds):
         alive = (
             sym.groupBy("u")
@@ -2079,11 +2087,10 @@ def graph_kcore(
             .filter(F.col("deg") >= k)
             .select("u")
         )
-        sym = (
+        sym = pin(
             sym.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
     return (
         sym.groupBy("u")
@@ -2225,7 +2232,7 @@ def events_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # baskets feeds the item counts AND both self-join sides: pin once
     # (scan-leaf lint) so the dedup agg runs a single time
-    baskets = ev.select("user_id", "event_type").distinct().localCheckpoint(eager=False)
+    baskets = pin(ev.select("user_id", "event_type").distinct())
     n = baskets.agg(F.countDistinct("user_id").alias("n_baskets"))
     item = baskets.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     a, b = baskets.alias("a"), baskets.alias("b")
@@ -2570,7 +2577,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, no float drift across engines). Each round is one
     equi-join (current dists x edges) plus one min-aggregation — the
     Pregel shape shared with graph_pagerank/_min_label_fixpoint; the
-    driver loop iterates over PLANS with per-round localCheckpoint
+    driver loop iterates over PLANS with per-round pin
     truncation and stops as soon as a round relaxes nothing (graph
     diameter rounds in practice, |V|-1 worst case, RuntimeError past
     the bound rather than a silently wrong fixpoint). The oracle is
@@ -2595,7 +2602,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
+    edges = pin(  # <=600-row edge table; truncate the star-join lineage
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -2603,10 +2610,10 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n2, c.c_nationkey == n2.c_nk)
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
-        .agg((F.count(F.lit(1)) % 7 + 1).cast("bigint").alias("wi"))
-        .localCheckpoint()  # <=600-row edge table; truncate the star-join lineage
+        .agg((F.count(F.lit(1)) % 7 + 1).cast("bigint").alias("wi")),
+        eager=True,
     )
-    dist = (
+    dist = pin(
         load_table(spark, sf_dir, "nation")
         .select(F.col("n_name").alias("v"))
         .withColumn(
@@ -2614,8 +2621,8 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("v") == SSSP_SOURCE, F.lit(0).cast("bigint")).otherwise(
                 F.lit(None).cast("bigint")
             ),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     for _ in range(SSSP_MAX_ROUNDS):
         relaxed = (
@@ -2624,7 +2631,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("v"))
             .agg(F.min(F.col("dist") + F.col("wi")).alias("cand"))
         )
-        nxt = (
+        nxt = pin(
             dist.join(relaxed, "v", "left")
             .select(
                 "v",
@@ -2632,8 +2639,8 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("dist", F.lit(None).cast("bigint")),
                     F.col("cand"),
                 ).alias("dist"),
-            )
-            .localCheckpoint()
+            ),
+            eager=True,
         )
         n_changed = (
             nxt.join(dist.select("v", F.col("dist").alias("old")), "v")
@@ -3414,13 +3421,13 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("last_seen") - F.unix_micros("first_seen"))
         / F.lit(3600000000.0)
     )
-    obs = per_user.select(
+    obs = pin(per_user.select(
         F.when(F.col("first_purchase").isNotNull(), dur)
         .otherwise(cens)
         .cast("bigint")
         .alias("t_obs"),
         F.col("first_purchase").isNotNull().alias("is_event"),
-    ).localCheckpoint(eager=False)  # 3 consumers (scan-leaf lint)
+    ))  # 3 consumers (scan-leaf lint)
     tot = obs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     drops = obs.groupBy(F.col("t_obs").alias("t")).agg(
         F.count(F.lit(1)).cast("bigint").alias("leaving")
@@ -3578,9 +3585,9 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond any realistic degree product.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    e = li.select(
+    e = pin(li.select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct().localCheckpoint(eager=False)  # 3 consumers (scan-leaf lint)
+    ).distinct())  # 3 consumers (scan-leaf lint)
     a1 = e.groupBy("p").agg(F.count(F.lit(1)).alias("a"))
     h1 = (
         e.join(a1, "p")
@@ -3661,7 +3668,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    edges = (
+    edges = pin(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -3674,12 +3681,11 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # through adj — degrees and wedges: pin it once (every graph
         # system materializes the edge list) or the basket self-join
         # re-runs per consumer (the plan read 22 parquet-scan leaves)
-        .localCheckpoint(eager=False)
     )
     adj = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = adj.groupBy(F.col("u").alias("node")).agg(
+    deg = pin(adj.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
-    ).localCheckpoint(eager=False)  # 3 consumers (z, x, y joins)
+    ))  # 3 consumers (z, x, y joins)
     a1, a2 = adj.alias("a1"), adj.alias("a2")
     wedges = a1.join(
         a2, (F.col("a1.u") == F.col("a2.u")) & (F.col("a1.v") < F.col("a2.v"))
@@ -3961,7 +3967,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = flags.groupBy(
         (F.col("hc") * 4 + F.col("hs") * 2 + F.col("hv")).alias("s")
     ).agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("k"))
-    sets = sets.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    sets = pin(sets)  # shared frame (scan-leaf lint)
     v = sets.agg(
         *[
             F.coalesce(
@@ -4169,9 +4175,9 @@ def orders_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derives from it, and without the pin Catalyst re-derives the
     # orders self-join per consumer (the plan read 68 parquet-scan
     # leaves). The expensive corpus self-join now runs exactly once.
-    tri = matches.groupBy("li", "gi", "winner").agg(
+    tri = pin(matches.groupBy("li", "gi", "winner").agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False)
+    ))
     wins = tri.groupBy(F.col("winner").alias("item")).agg(F.sum("c").alias("w"))
     pair_games = tri.groupBy("li", "gi").agg(F.sum("c").alias("g"))
     games = (
@@ -4419,7 +4425,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the months-sized cell table; revenue goes through exact
     decimals at both the cell and cumulative levels."""
     ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts")).localCheckpoint(eager=False)
+    firsts = pin(ev.groupBy("user_id").agg(F.min("ts").alias("first_ts")))
     cohorted = (
         ev.filter(F.col("event_type") == "purchase")
         .join(firsts, "user_id")
@@ -4628,7 +4634,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cur", "nxt")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    trans = trans.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    trans = pin(trans)  # shared frame (scan-leaf lint)
     row_tot = trans.groupBy("cur").agg(F.sum("c").alias("rc"))
     grand = trans.agg(F.sum("c").alias("g"))
     p = F.col("c").cast("double") / F.col("rc")
@@ -4839,7 +4845,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    edges = (
+    edges = pin(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -4850,7 +4856,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # multi-consumer edge list: pin once (scan-leaf lint) — without
         # it the basket self-join re-runs per consumer
-        .localCheckpoint(eager=False)
     )
     adj = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = adj.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
@@ -4937,7 +4942,7 @@ def graph_modularity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    edges = (
+    edges = pin(
         li.alias("a")
         .join(
             li.alias("b"),
@@ -4948,10 +4953,9 @@ def graph_modularity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # multi-consumer edge list: pin once (scan-leaf lint) — without
         # it the basket self-join re-runs per consumer
-        .localCheckpoint(eager=False)
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    labeled = (
+    labeled = pin(
         edges.join(
             F.broadcast(part.select(F.col("p_partkey").alias("u"), F.col("p_brand").alias("cu"))),
             "u",
@@ -4962,7 +4966,6 @@ def graph_modularity_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # 4 consumers (m, within, both degsum legs): pin or the part
         # broadcasts re-scan per consumer (scan-leaf lint)
-        .localCheckpoint(eager=False)
     )
     m = labeled.agg(F.count(F.lit(1)).alias("m"))
     within = (
@@ -5039,9 +5042,9 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically. Endpoints are 2 rows per (user, day) — the sweep
     windows are day-partitioned, never a global sort."""
     ev = load_table(spark, sf_dir, "events")
-    presence = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
+    presence = pin(ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts")
-    ).localCheckpoint(eager=False)  # 2 union legs + sweep (scan-leaf lint)
+    ))  # 2 union legs + sweep (scan-leaf lint)
     endpoints = presence.select(
         "day", F.col("start_ts").alias("at_ts"), F.lit(1).alias("delta"), "user_id"
     ).unionByName(
@@ -5258,7 +5261,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t_obs"),
         F.col("first_purchase").isNotNull().alias("is_event"),
     )
-    obs = obs.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    obs = pin(obs)  # shared frame (scan-leaf lint)
     tot = obs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     drops = obs.groupBy(F.col("t_obs").alias("t")).agg(
         F.count(F.lit(1)).cast("bigint").alias("leaving")
@@ -5496,7 +5499,7 @@ def events_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.sum(F.round("value", 6).cast("decimal(28,6)")).cast("double").alias("total")
     )
-    per_user = per_user.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    per_user = pin(per_user)  # shared frame (scan-leaf lint)
     par = spark.sparkContext.defaultParallelism
     ranged = per_user.repartitionByRange(par, "total", "user_id").withColumn(
         "pid", F.spark_partition_id()
@@ -5687,17 +5690,17 @@ def events_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(w).alias("to_type"),
     ).filter(F.col("to_type").isNotNull())
     wsum = Window.partitionBy("from_type")
-    trans = (
+    trans = pin(
         seq.groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .select(
             "from_type",
             "to_type",
             (F.col("n").cast("double") / F.sum("n").over(wsum)).alias("p"),
-        )
+        ),
         # |states|^2-row table consumed by every iteration step: truncate
         # the lineage so the value iteration never re-scans the corpus
-        .localCheckpoint()
+        eager=True,
     )
     states = trans.select(F.col("from_type").alias("state")).distinct()
     direct = trans.filter(F.col("to_type") == ABSORB_TARGET).select(
@@ -5823,7 +5826,7 @@ def graph_ppr_from_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.broadcast(load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"))
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
+    raw = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -5835,19 +5838,18 @@ def graph_ppr_from_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded (≤ nation² rows), consumed twice inside the edges
         # pin's builder — inner pin keeps the star join single-pass
         # (pin-interior lint, r13)
-        .localCheckpoint(eager=False)
     )
     outw = raw.groupBy(F.col("src").alias("o_src")).agg(
         F.sum("w").cast("bigint").alias("total")
     )
-    edges = (
+    edges = pin(
         raw.join(outw, raw.src == outw.o_src)
         .select(
             "src",
             "dst",
             (F.col("w").cast("double") / F.col("total").cast("double")).alias("w_frac"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
@@ -5859,7 +5861,7 @@ def graph_ppr_from_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("n_name").alias("v"))
     )
     k = seeds.count()
-    nodes = (
+    nodes = pin(
         nation.select(F.col("n_name").alias("v"))
         .join(seeds.select("v", F.lit(True).alias("is_seed")), "v", "left")
         .select(
@@ -5868,8 +5870,8 @@ def graph_ppr_from_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.coalesce("is_seed", F.lit(False)), F.lit(1.0) / k)
             .otherwise(0.0)
             .alias("restart"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     ranks = nodes.select("v", F.col("restart").alias("rank"))
     for _ in range(PR_ITERATIONS):
@@ -6074,7 +6076,7 @@ def graph_ktruss(
     by e(y,z) — all hash equi-joins keyed on vertex ids, never a cross
     product; canonical ordering (u<v) halves the edge list and makes
     each wedge counted once. Per round the edge frame shrinks
-    monotonically and is localCheckpoint-truncated so the plan stays
+    monotonically and is pin-truncated so the plan stays
     flat in the round count. At 100 TB the wedge join skews on hub
     vertices — the production mitigation is degree-ordered orientation
     (orient each edge low-degree → high-degree), which this canonical
@@ -6086,7 +6088,7 @@ def graph_ktruss(
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    edges = (
+    edges = pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -6094,7 +6096,6 @@ def graph_ktruss(
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def support(e: DataFrame) -> DataFrame:
@@ -6133,9 +6134,9 @@ def graph_ktruss(
 
     for _ in range(rounds):
         sup = support(edges).filter(F.col("sup") >= k - 2).select("u", "v")
-        edges = edges.join(
+        edges = pin(edges.join(
             broadcast_bounded(sup, bounded_graph), ["u", "v"], "left_semi"
-        ).localCheckpoint(eager=False)
+        ))
     return (
         support(edges)
         .select("u", "v", F.col("sup").cast("bigint").alias("support"))
@@ -6387,7 +6388,7 @@ def events_competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("last_seen"))
     )
     us = lambda c: F.unix_micros(c)  # noqa: E731
-    obs = per_user.select(
+    obs = pin(per_user.select(
         F.when(purchase_first, "purchase")
         .when(F.col("t_error").isNotNull(), "error")
         .otherwise("censor")
@@ -6395,7 +6396,7 @@ def events_competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor((us(t_end) - us(F.col("first_seen"))) / F.lit(3600000000.0))
         .cast("bigint")
         .alias("t_obs"),
-    ).localCheckpoint(eager=False)  # 3 consumers (scan-leaf lint)
+    ))  # 3 consumers (scan-leaf lint)
     tot = obs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     drops = obs.groupBy(F.col("t_obs").alias("t")).agg(
         F.count(F.lit(1)).cast("bigint").alias("leaving")
@@ -6932,7 +6933,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    e = (
+    e = pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -6942,7 +6943,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # multi-consumer edge list: pin once (scan-leaf lint) — without
         # it the basket self-join re-runs per consumer
-        .localCheckpoint(eager=False)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -7057,11 +7057,11 @@ def events_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one corpus scan (scan-leaf lint): the (type, day) cell rollup
     # carries the demand count per cell, and the spine domains are the
     # distincts of the same rollup (every type/day of events appears)
-    cells = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
+    cells = pin(ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.when(F.col("value") > 200.0, 1).otherwise(0))
         .cast("double")
         .alias("z")
-    ).localCheckpoint(eager=False)
+    ))
     spine = cells.select("event_type").distinct().crossJoin(
         cells.select("day").distinct()
     )
@@ -7226,7 +7226,7 @@ def events_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
     iteration with 'purchase' absorbing (the events_absorbing_markov
     machinery, run once per variant). The ONLY corpus-sized work is
     one lead() window + one first-event agg; all 5 variants iterate on
-    the |states|^2 transition table, localCheckpoint-truncated, so
+    the |states|^2 transition table, pin-truncated, so
     the attribution is O(channels x states^2) metadata arithmetic at
     any corpus scale."""
     e = load_table(spark, sf_dir, "events")
@@ -7236,26 +7236,26 @@ def events_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
         F.lead("event_type").over(w).alias("to_type"),
     ).filter(F.col("to_type").isNotNull())
     wsum = Window.partitionBy("from_type")
-    trans = (
+    trans = pin(
         seq.groupBy("from_type", "to_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             "from_type",
             "to_type",
             (F.col("n").cast("double") / F.sum("n").over(wsum)).alias("p"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     firsts = e.groupBy("user_id").agg(
         F.min(F.struct("ts", "event_id", "event_type"))["event_type"].alias("state")
     )
     n_users = firsts.groupBy().agg(F.count(F.lit(1)).alias("nu"))
-    p0 = (
+    p0 = pin(
         firsts.groupBy("state")
         .agg(F.count(F.lit(1)).alias("c"))
         .crossJoin(F.broadcast(n_users))
-        .select("state", (F.col("c").cast("double") / F.col("nu")).alias("w"))
-        .localCheckpoint()
+        .select("state", (F.col("c").cast("double") / F.col("nu")).alias("w")),
+        eager=True,
     )
 
     def conv_prob(removed: str | None) -> DataFrame:
@@ -7454,7 +7454,7 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t_obs"),
         F.col("first_purchase").isNotNull().alias("is_event"),
     )
-    obs = obs.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    obs = pin(obs)  # shared frame (scan-leaf lint)
     d_t = obs.groupBy(F.col("t_obs").alias("t")).agg(
         F.sum(F.when((F.col("grp") == 1) & F.col("is_event"), 1).otherwise(0))
         .cast("bigint")
@@ -7561,13 +7561,13 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-basket products 6-dp-snapped. Full-entropy p·q products
     round at 6 dp where the grid dwarfs engine rounding skew."""
     li = load_table(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_partkey", F.year("l_shipdate").alias("yr")).agg(
+    per = pin(li.groupBy("l_partkey", F.year("l_shipdate").alias("yr")).agg(
         F.sum(F.col("l_quantity").cast("decimal(28,6)")).cast("double").alias("q"),
         (
             F.sum(F.col("l_extendedprice").cast("decimal(28,6)")).cast("double")
             / F.sum(F.col("l_quantity").cast("decimal(28,6)")).cast("double")
         ).alias("p"),
-    ).localCheckpoint(eager=False)  # 3 consumers (scan-leaf lint)
+    ))  # 3 consumers (scan-leaf lint)
     bounds = per.agg(
         F.min("yr").alias("y0"), (F.min("yr") + 1).alias("y1")
     )
@@ -7945,7 +7945,7 @@ def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("y")
     )
-    daily = daily.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    daily = pin(daily)  # shared frame (scan-leaf lint)
     a, b = daily.alias("a"), daily.alias("b")
     sgn = (
         F.when(F.col("b.y") > F.col("a.y"), 1)
@@ -8152,7 +8152,7 @@ def graph_reciprocity_dyad_census(spark: SparkSession, sf_dir: str) -> DataFrame
     n2 = nation.select(
         F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst")
     )
-    e = (
+    e = pin(
         li.join(sup, li["l_suppkey"] == sup["s_suppkey"])
         .join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .join(cust, orders["o_custkey"] == cust["c_custkey"])
@@ -8160,8 +8160,8 @@ def graph_reciprocity_dyad_census(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(F.broadcast(n2), cust["c_nationkey"] == F.col("ck"))
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     nodes = (
         e.select(F.col("src").alias("v"))
@@ -8291,7 +8291,7 @@ def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t_obs"),
         F.col("first_purchase").isNotNull().alias("is_event"),
     )
-    obs = obs.localCheckpoint(eager=False)  # shared frame (hygiene; km pin hides it from the lint)
+    obs = pin(obs)  # shared frame (hygiene; km pin hides it from the lint)
     tot = obs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     drops = obs.groupBy(F.col("t_obs").alias("t")).agg(
         F.count(F.lit(1)).cast("bigint").alias("leaving")
@@ -8313,7 +8313,7 @@ def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     upto = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    km = risk.filter(F.col("t") < RMST_TAU).select(
+    km = pin(risk.filter(F.col("t") < RMST_TAU).select(
         "t",
         F.exp(
             F.sum(
@@ -8326,7 +8326,7 @@ def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).over(upto)
         ).alias("s"),
         F.lead("t").over(Window.orderBy("t")).alias("t_next"),
-    ).localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
+    ))  # 2 consumers (scan-leaf lint)
     head = km.agg(
         F.lit(1.0).alias("s"),
         F.coalesce(F.min("t"), F.lit(RMST_TAU)).cast("double").alias("width"),
@@ -8430,9 +8430,9 @@ def events_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     the spine, lags, and solve all run on the day-grained table —
     series length × types rows, corpus-size-independent."""
     ev = load_table(spark, sf_dir, "events")
-    cnt = ev.groupBy(
+    cnt = pin(ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x")).localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("x")))
     # spine domains from the day-grained table (scan-leaf lint): the
     # distinct days/types of events == those of its (type, day) rollup
     days = cnt.select("day").distinct()
@@ -8659,7 +8659,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    raw = (
+    raw = pin(
         li.filter(F.col("l_quantity") >= HC_QTY_MIN)
         .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -8669,8 +8669,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     sym = (
         raw.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -9174,7 +9174,7 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    raw = (
+    raw = pin(
         li.filter(F.col("l_quantity") >= HC_QTY_MIN)
         .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -9184,18 +9184,18 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
-    sym = (
+    sym = pin(
         raw.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .union(raw.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     nodes = sym.select("u").distinct()
     p, q = sym.alias("p"), sym.alias("q")
-    d2 = (
+    d2 = pin(
         p.join(q, F.col("p.v") == F.col("q.u"))
         .filter(F.col("q.v") != F.col("p.u"))
         .select(F.col("p.u").alias("s"), F.col("q.v").alias("t"))
@@ -9204,11 +9204,11 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             sym.select(F.col("u").alias("s"), F.col("v").alias("t")),
             ["s", "t"],
             "left_anti",
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     d2a = d2.alias("d2a")
-    d3 = (
+    d3 = pin(
         d2a.join(q, F.col("d2a.t") == F.col("q.u"))
         .filter(F.col("q.v") != F.col("d2a.s"))
         .select(F.col("d2a.s").alias("s"), F.col("q.v").alias("t"))
@@ -9218,8 +9218,8 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["s", "t"],
             "left_anti",
         )
-        .join(d2, ["s", "t"], "left_anti")
-        .localCheckpoint()
+        .join(d2, ["s", "t"], "left_anti"),
+        eager=True,
     )
     mid2 = (
         p.join(q, F.col("p.v") == F.col("q.u"))
@@ -9239,7 +9239,7 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     e1, e2, e3 = sym.alias("e1"), sym.alias("e2"), sym.alias("e3")
-    paths3 = (
+    paths3 = pin(
         e1.join(e2, F.col("e2.u") == F.col("e1.v"))
         .join(e3, F.col("e3.u") == F.col("e2.v"))
         .filter((F.col("e2.v") != F.col("e1.u")) & (F.col("e3.v") != F.col("e2.u")))
@@ -9249,8 +9249,8 @@ def graph_betweenness_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e2.v").alias("m2"),
             F.col("e3.v").alias("t"),
         )
-        .join(d3, ["s", "t"])
-        .localCheckpoint()
+        .join(d3, ["s", "t"]),
+        eager=True,
     )
     sigma3 = paths3.groupBy("s", "t").agg(F.count(F.lit(1)).cast("bigint").alias("sg"))
     mids = paths3.join(sigma3, ["s", "t"]).select(
@@ -9418,9 +9418,9 @@ def events_periodicity_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = types.crossJoin(
         F.broadcast(spark.range(24).select(F.col("id").alias("h")))
     )
-    filled = grid.join(hours, ["event_type", "h"], "left").select(
+    filled = pin(grid.join(hours, ["event_type", "h"], "left").select(
         "event_type", "h", F.coalesce("c", F.lit(0).cast("bigint")).alias("c")
-    ).localCheckpoint(eager=False)  # 24xtypes grid, 2 consumers (scan-leaf lint)
+    ))  # 24xtypes grid, 2 consumers (scan-leaf lint)
     tot = filled.groupBy("event_type").agg(F.sum("c").cast("bigint").alias("n"))
     j = filled.join(tot, "event_type")
     exp = F.col("n") / 24.0
@@ -9532,7 +9532,7 @@ def events_trajectory_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, the SNM argument); arrays are fixed {TRAJ_DAYS}-element."""
     ev = load_table(spark, sf_dir, "events")
     d0 = ev.agg(F.min(F.to_date("ts")).alias("d0"))
-    cells = (
+    cells = pin(
         ev.crossJoin(F.broadcast(d0))
         .withColumn("d", F.datediff(F.to_date("ts"), F.col("d0")) + 1)
         .filter(F.col("d") <= TRAJ_DAYS)
@@ -9544,7 +9544,7 @@ def events_trajectory_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("v")
         )
-    ).localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
+    )  # 2 consumers (scan-leaf lint)
     users = cells.select("user_id").distinct()
     grid = users.crossJoin(
         F.broadcast(spark.range(1, TRAJ_DAYS + 1).select(F.col("id").alias("d")))
@@ -9560,9 +9560,9 @@ def events_trajectory_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("v").cast("decimal(28,6)")).cast("double") / TRAJ_DAYS, 6
         ).alias("mu"),
     )
-    keyed = traj.select(
+    keyed = pin(traj.select(
         "user_id", "t", F.floor(F.col("mu") / TRAJ_TAU).cast("bigint").alias("b")
-    ).localCheckpoint(eager=False)  # self-joined (scan-leaf lint)
+    ))  # self-joined (scan-leaf lint)
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = a.join(
         b,
@@ -9719,7 +9719,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    raw = (
+    raw = pin(
         li.filter(F.col("l_quantity") >= HC_QTY_MIN)
         .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -9729,8 +9729,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     sym = (
         raw.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -10234,12 +10234,12 @@ def events_harrell_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_event"),
         hours(F.col("last_seen"), F.col("first_seen")).alias("t_cens"),
     )
-    norm = subj.select(
+    norm = pin(subj.select(
         "user_id",
         "score",
         F.coalesce("t_event", "t_cens").alias("t"),
         F.col("t_event").isNotNull().cast("int").alias("ev"),
-    ).localCheckpoint(eager=False)  # self-joined (scan-leaf lint)
+    ))  # self-joined (scan-leaf lint)
     a, b = norm.alias("a"), norm.alias("b")
     pairs = a.join(
         b,
@@ -10337,7 +10337,7 @@ def events_interrupted_time_series(spark: SparkSession, sf_dir: str) -> DataFram
         F.row_number().over(Window.orderBy("day")).cast("bigint").alias("t"),
         (F.col("day") >= F.lit(ITS_BREAK).cast("date")).cast("int").alias("post"),
     )
-    idx = idx.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    idx = pin(idx)  # shared frame (scan-leaf lint)
     seg = idx.groupBy("post").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("t").cast("decimal(28,0)")).cast("double").alias("sx"),
@@ -11348,12 +11348,12 @@ def graph_deepwalk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wrnk = Window.partitionBy("src").orderBy(F.desc("w"), "dst")
     wdeg = Window.partitionBy("src")
-    adj = raw.select(
+    adj = pin(raw.select(
         "src",
         "dst",
         F.row_number().over(wrnk).alias("rnk"),
         F.count(F.lit(1)).over(wdeg).alias("deg"),
-    ).localCheckpoint()  # bounded edge table; truncate the star-join lineage
+    ), eager=True)  # bounded edge table; truncate the star-join lineage
     walk = adj.select(F.col("src").alias("start")).distinct().select(
         "start", F.col("start").alias("cur"), F.col("start").alias("path")
     )
@@ -11446,14 +11446,14 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity") >= KATZ_QTY_MIN
     ).select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
+    edges = pin(  # 3 consumers; truncate the star-join lineage
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .select(F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst"))
-        .distinct()
-        .localCheckpoint()  # 3 consumers; truncate the star-join lineage
+        .distinct(),
+        eager=True,
     )
     wc = edges.groupBy(F.col("dst").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("wc")
@@ -11575,7 +11575,7 @@ def graph_louvain_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.broadcast(load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"))
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
+    raw = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -11587,19 +11587,18 @@ def graph_louvain_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded (≤ nation² rows), consumed twice inside the sym pin's
         # builder (direct + reversed union) — inner pin keeps the
         # 4-table star join single-pass (pin-interior lint, r13)
-        .localCheckpoint(eager=False)
     )
-    sym = (
+    sym = pin(  # consumed by deg and kin; truncate star-join lineage
         raw.select("u", "v", "w")
         .unionAll(raw.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
         .groupBy("u", "v")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-        .localCheckpoint()  # consumed by deg and kin; truncate star-join lineage
+        .agg(F.sum("w").cast("bigint").alias("w")),
+        eager=True,
     )
     comm = F.broadcast(
-        load_table(spark, sf_dir, "nation").select(
+        pin(load_table(spark, sf_dir, "nation").select(
             F.col("n_nationkey").alias("v"), F.col("n_regionkey").alias("c")
-        ).localCheckpoint(eager=False)  # 3 consumers (scan-leaf lint)
+        ))  # 3 consumers (scan-leaf lint)
     )
     deg = sym.groupBy("u").agg(F.sum("w").cast("bigint").alias("k"))
     m = sym.agg((F.sum("w") / 2).cast("bigint").alias("m"))

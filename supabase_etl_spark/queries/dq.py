@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 
@@ -326,7 +327,7 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("cohort") == 0, 1)).alias("na"),
         F.count(F.when(F.col("cohort") == 1, 1)).alias("nb"),
     )
-    cnt = cnt.localCheckpoint(eager=False)  # spine + psi terms (scan-leaf lint)
+    cnt = pin(cnt)  # spine + psi terms (scan-leaf lint)
     spine = (
         ev.select("event_type")
         .distinct()
@@ -760,15 +761,15 @@ def dq_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Both running CDFs in ONE distributed prefix pass (the
     # operators/prefix.py construction, two-valued): range-partition
-    # once, localCheckpoint so the sampled range boundaries are fixed
+    # once, pin eagerly so the sampled range boundaries are fixed
     # for every consumer, then partition-local windows + broadcast
     # prefix offsets. Chaining two distributed_cumsum calls instead
     # would re-sample range boundaries between dependent frames.
     par = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = pin(
         per_v.repartitionByRange(par, "v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=True,
     )
     wloc = Window.partitionBy("_pid").orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1052,7 +1053,7 @@ def dq_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("r"), F.col("o_orderpriority").alias("c")
     )
     obs = o.groupBy("r", "c").agg(F.count(F.lit(1)).alias("o"))
-    obs = obs.localCheckpoint(eager=False)  # margins + cells (scan-leaf lint)
+    obs = pin(obs)  # margins + cells (scan-leaf lint)
     rt = obs.groupBy("r").agg(F.sum("o").alias("rt"))
     ct = obs.groupBy("c").agg(F.sum("o").alias("ct"))
     n = obs.agg(F.sum("o").alias("n"))
@@ -2195,7 +2196,7 @@ def dq_association_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = feat.groupBy("pair", "x", "y").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
     )
-    cells = cells.localCheckpoint(eager=False)  # margins + dims (scan-leaf lint)
+    cells = pin(cells)  # margins + dims (scan-leaf lint)
     marg = cells.select(
         "pair",
         "x",
@@ -2311,7 +2312,7 @@ def dq_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("day"),
         F.dayofweek(F.col("ts").cast("date")).alias("dow"),
     ).agg(F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total"))
-    daily = daily.localCheckpoint(eager=False)  # baseline + residuals (scan-leaf lint)
+    daily = pin(daily)  # baseline + residuals (scan-leaf lint)
     baseline = daily.groupBy("dow").agg(
         (
             F.sum(F.col("total").cast("decimal(28,6)")).cast("double")
@@ -2648,7 +2649,7 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.floor(F.col("c_acctbal") / 2000).cast("bigint").alias("band"),
     )
-    rows_ = rows_.localCheckpoint(eager=False)  # 5 consumers (scan-leaf lint)
+    rows_ = pin(rows_)  # 5 consumers (scan-leaf lint)
     bands = rows_.select("band").distinct()
     nb = bands.agg(F.count(F.lit(1)).cast("bigint").alias("n_bands"))
     gl = rows_.groupBy("band").agg(F.count(F.lit(1)).cast("bigint").alias("g"))
@@ -2924,11 +2925,11 @@ def dq_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     day tie-break, and removal is an anti-join on the chosen day —
     both engines walk the same sequence. Scale: the corpus pass is one
     groupBy to days; rounds run on the day-grained table,
-    localCheckpoint-truncated."""
+    pin-truncated."""
     ev = load_table(spark, sf_dir, "events")
-    live = ev.groupBy(F.to_date("ts").alias("day")).agg(
+    live = pin(ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("x")
-    ).localCheckpoint()
+    ), eager=True)
     outs = []
     for r in range(1, ESD_ROUNDS + 1):
         m = live.agg(
@@ -2950,9 +2951,7 @@ def dq_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             F.round(F.abs(F.col("x") - F.col("mu")) / F.col("s"), 9).alias("r_stat"),
         )
-        top = (
-            scored.orderBy(F.col("r_stat").desc(), "day").limit(1).localCheckpoint()
-        )
+        top = pin(scored.orderBy(F.col("r_stat").desc(), "day").limit(1), eager=True)
         outs.append(
             top.select(
                 F.lit(r).alias("round"),
@@ -2962,7 +2961,7 @@ def dq_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "r_stat",
             )
         )
-        live = live.join(top.select("day"), "day", "left_anti").localCheckpoint()
+        live = pin(live.join(top.select("day"), "day", "left_anti"), eager=True)
     out = outs[0]
     for s in outs[1:]:
         out = out.unionByName(s)
@@ -3102,7 +3101,7 @@ def dq_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("vbin"),
         F.hour("ts").cast("bigint").alias("hbin"),
     )
-    f = f.localCheckpoint(eager=False)  # histograms + scoring (scan-leaf lint)
+    f = pin(f)  # histograms + scoring (scan-leaf lint)
     vh = f.groupBy("vbin").agg(F.count(F.lit(1)).cast("double").alias("vc"))
     hh = f.groupBy("hbin").agg(F.count(F.lit(1)).cast("double").alias("hc"))
     vmax = vh.agg(F.max("vc").alias("vm"))
@@ -3212,7 +3211,7 @@ def dq_vif_multicollinearity(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(2.0) * F.col("r12") * F.col("r13") * F.col("r23")
         ).alias("det"),
     )
-    r = r.localCheckpoint(eager=False)  # one 1-row stats table, 3 VIF rows (scan-leaf lint)
+    r = pin(r)  # one 1-row stats table, 3 VIF rows (scan-leaf lint)
     rows = []
     for feat, expr in (
         ("l_quantity", (F.lit(1.0) - F.col("r23") * F.col("r23")) / F.col("det")),
@@ -3298,11 +3297,9 @@ def dq_data_vault_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ck = F.col("o_custkey").cast("string")
     ok = F.col("o_orderkey").cast("string")
-    o = o.select(
+    o = pin(o.select(
         "o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
-    ).localCheckpoint(
-        eager=False
-    )  # hub/link/sat builders (scan-leaf lint)
+    ))  # hub/link/sat builders (scan-leaf lint)
     hub_c = o.select(hk(F.lit("CUST|"), ck).alias("k")).distinct()
     hub_o = o.select(hk(F.lit("ORD|"), ok).alias("k"))
     link = o.select(hk(F.lit("CUST|"), ck, F.lit("||ORD|"), ok).alias("k"))
@@ -3501,11 +3498,11 @@ def dq_isolation_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the spark.ml tree-trainer discipline — instead of re-reading the
     # parquet scan on every level pass. The pin is lazy: the first
     # level's collect materializes it.
-    base = o.select(
+    base = pin(o.select(
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").cast("double").alias("x1"),
         (F.col("o_orderkey") % 1000).cast("double").alias("x2"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def md5mod(s: str, mod: int) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % mod
@@ -3741,10 +3738,10 @@ def dq_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("in_a")).cast("decimal(20,0)").alias("cb"),
     )
     par = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = pin(
         per_v.repartitionByRange(par, "v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=True,
     )
     wloc = Window.partitionBy("_pid").orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0

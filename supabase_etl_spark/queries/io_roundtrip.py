@@ -33,6 +33,7 @@ from supabase_etl_spark.io.writers import (
     write_json,
     write_parquet,
 )
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 
@@ -537,7 +538,7 @@ def io_corrupt_records_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
     # re-expose the pruning trap above. The storage-hygiene sweep
     # classifies (and releases) exactly this kind of bounded
     # checkpoint block.
-    back = back.localCheckpoint(eager=True)
+    back = pin(back, eager=True)
     shutil.rmtree(out, ignore_errors=True)
     return (
         back.groupBy(kind.alias("kind"))
@@ -708,8 +709,8 @@ def io_manifest_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     M.commit(v2_df, table, mode="overwrite")
     v1 = M.read(spark, table, 1)
     v2 = M.read(spark, table, 2)
-    v1 = v1.localCheckpoint(eager=False)  # both except-directions (scan-leaf lint)
-    v2 = v2.localCheckpoint(eager=False)  # both except-directions (scan-leaf lint)
+    v1 = pin(v1)  # both except-directions (scan-leaf lint)
+    v2 = pin(v2)  # both except-directions (scan-leaf lint)
     deletes = v1.exceptAll(v2).select(
         F.lit("delete").alias("change_type"), "o_orderkey", "o_totalprice"
     )

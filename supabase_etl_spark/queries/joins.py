@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.joins import asof_join, bucketed_range_join, range_join
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
 
@@ -648,7 +649,7 @@ def bloom_filter_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter semi-join reduction, scoped so the session
     confs it needs do not leak: the plan executes eagerly (
-    localCheckpoint) inside a save/restore of `_BLOOM_CONFS`, then the
+    an eager pin) inside a save/restore of `_BLOOM_CONFS`, then the
     materialized result is returned. The interesting part — the
     injected `might_contain` filter on the fact scan — is pinned by a
     plan-shape test against `bloom_filter_join_plan`."""
@@ -656,7 +657,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in _BLOOM_CONFS.items():
         spark.conf.set(k, v)
     try:
-        return bloom_filter_join_plan(spark, sf_dir).localCheckpoint(eager=True)
+        return pin(bloom_filter_join_plan(spark, sf_dir), eager=True)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

@@ -45,6 +45,7 @@ from supabase_etl_spark.operators.text import (
     sql_quality_score,
     tokens,
 )
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries.llm_sampling import _bucket, _sql_bucket
 
@@ -168,7 +169,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens(F.col("text")).alias("t"),
         (_bucket(F.col("doc_id")) < DECON_BENCH_PCT).alias("is_bench"),
     )
-    tk = tk.localCheckpoint(eager=False)  # bench + train sides (scan-leaf lint)
+    tk = pin(tk)  # bench + train sides (scan-leaf lint)
     bench_grams = (
         tk.filter("is_bench")
         .select(F.explode(ngrams_all(F.col("t"), DECON_K)).alias("g"))
@@ -670,7 +671,7 @@ def text_repeated_span_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same hashed-slice gram carriage as text_span_splice_dedup (8-byte
     # shuffle keys instead of 8-token strings; counts unchanged absent
     # a 64-bit collision)
-    toked = toked.localCheckpoint(eager=False)  # grams + position spine (scan-leaf lint)
+    toked = pin(toked)  # grams + position spine (scan-leaf lint)
     n_tok = F.size("t")
     grams = toked.select(
         "doc_id",
@@ -867,7 +868,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens(F.col("text")).alias("t"),
         (_bucket(F.col("doc_id")) < DECON_BENCH_PCT).alias("is_bench"),
     )
-    tk = tk.localCheckpoint(eager=False)  # bench + train sides (scan-leaf lint)
+    tk = pin(tk)  # bench + train sides (scan-leaf lint)
     bench_grams = (
         tk.filter("is_bench")
         .select(F.explode(ngrams_all(F.col("t"), DECON_K)).alias("g"))
@@ -1119,7 +1120,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     free corpus scan, same scale shape as sample_domain_mixture."""
     d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    counts = counts.localCheckpoint(eager=False)  # rates + acceptance join (scan-leaf lint)
+    counts = pin(counts)  # rates + acceptance join (scan-leaf lint)
     w_all = Window.partitionBy()
     rates = counts.select(
         "source",
@@ -1329,7 +1330,7 @@ def embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "v0")
     ).select("vec_id", "label", "pos", F.col("v0").cast("double").alias("v"))
-    vals = vals.localCheckpoint(eager=False)  # means + distances (scan-leaf lint)
+    vals = pin(vals)  # means + distances (scan-leaf lint)
     means = vals.groupBy("label", "pos").agg(
         (F.sum(F.col("v").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1))).alias("m")
     )
@@ -1345,7 +1346,7 @@ def embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dist"),
         )
     )
-    dists = dists.localCheckpoint(eager=False)  # stats + outlier rows (scan-leaf lint)
+    dists = pin(dists)  # stats + outlier rows (scan-leaf lint)
     st = dists.groupBy("label").agg(
         (F.sum(F.col("dist").cast("decimal(38,18)")).cast("double") / F.count(F.lit(1))).alias("mu"),
         (
@@ -1446,16 +1447,16 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the shuffle (components of one vector are partition-local,
     so the shuffle carries n x k skinny rows, not n x dim x k); the
     assignment (n rows) and the new centroid table (k x dim rows) are
-    localCheckpoint-materialized so each round is constant plan depth
+    pin-materialized so each round is constant plan depth
     and the corpus is scanned once per round."""
     e = load_table(spark, sf_dir, "embeddings")
     vals = e.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v0")
     ).select("vec_id", "pos", F.col("v0").cast("double").alias("v"))
-    cents = (
+    cents = pin(
         vals.filter(F.col("vec_id") < KMEANS_K)
-        .select(F.col("vec_id").alias("cid"), "pos", F.col("v").alias("m"))
-        .localCheckpoint()
+        .select(F.col("vec_id").alias("cid"), "pos", F.col("v").alias("m")),
+        eager=True,
     )
     outs: list[DataFrame] = []
     for i in range(1, KMEANS_ROUNDS + 1):
@@ -1467,15 +1468,15 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("vec_id", "cid")
             .agg(F.sum(term).alias("dist2"))
         )
-        a = (
+        a = pin(  # n skinny rows; feeds stats AND recompute
             d.groupBy("vec_id")
             .agg(F.min(F.struct("dist2", "cid")).alias("best"))
             .select(
                 "vec_id",
                 F.col("best.cid").alias("cid"),
                 F.col("best.dist2").alias("dist2"),
-            )
-            .localCheckpoint()  # n skinny rows; feeds stats AND recompute
+            ),
+            eager=True,
         )
         outs.append(
             a.groupBy("cid")
@@ -1491,7 +1492,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if i < KMEANS_ROUNDS:
-            cents = (
+            cents = pin(
                 vals.join(a.select("vec_id", "cid"), "vec_id")
                 .groupBy("cid", "pos")
                 .agg(
@@ -1499,8 +1500,8 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.sum(F.col("v").cast("decimal(28,6)")).cast("double")
                         / F.count(F.lit(1))
                     ).alias("m")
-                )
-                .localCheckpoint()
+                ),
+                eager=True,
             )
     out = outs[0]
     for s in outs[1:]:
@@ -1679,12 +1680,12 @@ def sample_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global rank without a single-partition window: range-repartition,
     # rank locally, add broadcast per-partition offsets (same pattern as
     # dedup_sorted_neighborhood)
-    d = d.localCheckpoint(eager=False)  # per-source rank + global rank (scan-leaf lint)
+    d = pin(d)  # per-source rank + global rank (scan-leaf lint)
     par = spark.sparkContext.defaultParallelism
     ranged = d.repartitionByRange(par, "n_chars", "doc_id").withColumn(
         "pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=False)  # rank + offsets; pins pid binding (scan-leaf lint)
+    ranged = pin(ranged)  # rank + offsets; pins pid binding (scan-leaf lint)
     wlocal = Window.partitionBy("pid").orderBy("n_chars", "doc_id")
     local = ranged.withColumn("lrn", F.row_number().over(wlocal))
     offsets = (
@@ -2266,13 +2267,13 @@ def corpus_prepare_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving grams — linear in true contamination.
 
     Scan-once discipline (VERDICT r9 task 1): the tokenized frame is
-    localCheckpoint-pinned so the quality gate, the bench-gram build,
+    pinned so the quality gate, the bench-gram build,
     the train-gram probe stream, and the ledger all read ONE
     materialization instead of re-deriving the corpus (the r9 plan
     held 16 `Scan parquet` leaves); the bench-gram set (consumed by the
     Bloom build and the exact verify join) and the source-grained
     ledger (consumed by the mixture normalizer and the final select)
-    are pinned the same way. localCheckpoint is the registry's ONE
+    are pinned the same way. The pin is the registry's ONE
     sanctioned storage use (the hygiene gate forbids persist residue);
     it stores MEMORY_AND_DISK, so at cluster scale the tokenized frame
     spills — still far better than 16 corpus re-tokenizations."""
@@ -2290,7 +2291,7 @@ def corpus_prepare_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens(F.col("text")).alias("t"),
         (_bucket(F.col("doc_id")) < DECON_BENCH_PCT).alias("is_bench"),
     )
-    tk = base.select(
+    tk = pin(base.select(
         "doc_id",
         "source",
         "lang",
@@ -2299,7 +2300,7 @@ def corpus_prepare_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         (lang_id_from_tokens(F.col("t"), F.col("text")) == F.col("lang")).alias(
             "lang_match"
         ),
-    ).localCheckpoint(eager=False)
+    ))
     n = F.greatest(F.size("t"), F.lit(1))
     mean_wl = (
         F.aggregate(
@@ -2324,11 +2325,10 @@ def corpus_prepare_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (alpha >= 0.8)
         ).alias("q_pass"),
     )
-    bench_grams = (
+    bench_grams = pin(  # consumed by the Bloom build AND the exact verify join
         tk.filter("is_bench")
         .select(F.explode(ngrams_all(F.col("t"), DECON_K)).alias("g"))
         .distinct()
-        .localCheckpoint(eager=False)  # consumed by the Bloom build AND the exact verify join
     )
     bloom = _bloom_bitmap(spark, bench_grams)
     pr = tk.filter(~F.col("is_bench")).select(

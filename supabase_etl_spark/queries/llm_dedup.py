@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators import dedup as D
 from supabase_etl_spark.operators.text import tokens
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import llm_similarity as S
 from supabase_etl_spark.queries import query
 
@@ -205,11 +206,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate stage). Net cost of dropping the cache is ~0.4s at
     # sf0.1 — the price of zero storage pinning. The SIGNATURE table is
     # different: doc_id + 16 longs per doc — the thing every MinHash
-    # system materializes — so it takes a localCheckpoint pin (scan-leaf
+    # system materializes — so it takes a pin (scan-leaf
     # lint) and both band-join sides re-derive their explode from the
     # pinned rows instead of re-running shingle+minhash per side.
     bands = D.band_keys(
-        D.minhash_signature(sids).localCheckpoint(eager=False)
+        pin(D.minhash_signature(sids))
     ).hint("merge")
     cand = (
         bands.alias("a")
@@ -351,9 +352,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         range(1, D.SIMHASH_BITS),
         F.when(F.col("s0") > 0, F.lit(1).cast("bigint")).otherwise(F.lit(0)),
     )
-    sig = bits.select("doc_id", sig_expr.alias("simhash")).localCheckpoint(
-        eager=False
-    )  # doc_id + 1 long per doc; feeds bands AND both hamming lookups
+    # doc_id + 1 long per doc; feeds bands AND both hamming lookups
+    sig = pin(bits.select("doc_id", sig_expr.alias("simhash")))
     band_arr = F.array(
         *[
             F.struct(
@@ -453,10 +453,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. Exact cosine re-rank runs only on candidates."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     planted = e.select((F.col("vec_id") + COPY_OFFSET).alias("vec_id"), "embedding")
-    normed = (
+    normed = pin(  # bands + 2 lookup joins (scan-leaf lint)
         e.unionByName(planted)
         .withColumn("nrm", F.sqrt(D.dot_double(F.col("embedding"), F.col("embedding"))))
-        .localCheckpoint(eager=False)  # bands + 2 lookup joins (scan-leaf lint)
     )
     band_arr = F.array(
         *[
@@ -540,7 +539,7 @@ def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
     filter scan of the round's pinned frame — no join.
 
     r14 (VERDICT r13 task 1 — stage-launch floor, guide §2.4):
-    ``localCheckpoint`` preserves ``outputPartitioning`` into the
+    a pin preserves ``outputPartitioning`` into the
     LogicalRDD, so the edge list is pinned EAGERLY pre-hashed on
     ``src`` and the label state stays hashed on ``doc_id`` (the
     groupBy(dst→doc_id) exchange output feeds the left join and the
@@ -558,20 +557,20 @@ def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
     wrong cluster_id/is_canonical with no other symptom (a high-diameter
     chain component, e.g. a boilerplate gradient, is exactly the input
     that would need more rounds)."""
-    edges = (
+    edges = pin(
         pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
         .unionByName(pairs.select(F.col("idb").alias("src"), F.col("ida").alias("dst")))
         .distinct()
-        .repartition("src")
-        .localCheckpoint(eager=True)
+        .repartition("src"),
+        eager=True,
     )
     # symmetric edge list ⇒ src alone covers every endpoint
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .select("doc_id", F.col("doc_id").alias("cluster_id"))
-        .repartition("doc_id")
-        .localCheckpoint(eager=True)
+        .repartition("doc_id"),
+        eager=True,
     )
     changed = -1
     rounds = 0
@@ -608,7 +607,7 @@ def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
             )
             rounds += 1
         # one pin per BATCH (r14); the convergence count materializes it
-        new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = pin(new_labels)
         changed = new_labels.filter("chg").count()
         labels = new_labels.drop("chg")
         if changed == 0:
@@ -688,7 +687,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter, which for near-dup clusters is tiny (they are cliques or
     near-cliques). The driver loop iterates over *plans*, never rows
     (same shape as GraphX/Pregel); lineage is truncated per round with
-    localCheckpoint so plans stay bounded. The DuckDB oracle computes
+    a pin so plans stay bounded. The DuckDB oracle computes
     the same fixpoint with a recursive CTE."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select("ida", "idb")
@@ -1081,10 +1080,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = dists.groupBy("vec_id").agg(
         F.min(F.struct("dist2", "centroid_id")).getField("centroid_id").alias("cluster_id")
     )
-    normed = (
+    normed = pin(
         allv.join(assign, "vec_id")
         .withColumn("nrm", F.sqrt(D.dot_double(F.col("embedding"), F.col("embedding"))))
-        .localCheckpoint(eager=False)
     )
     # Footer-only row count (driver-side O(1), multi-file-safe) drives
     # two data-sized plan choices, the same way AQE sizes from runtime
@@ -1204,10 +1202,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    sh = (
+    sh = pin(
         D.exploded_shingles(d.unionByName(frags))
         .select("doc_id", F.xxhash64("s").alias("s"))
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -1341,9 +1338,9 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the band-key table is consumed twice (batch/corpus sides). Unpinned,
     # Catalyst re-derives each from the parquet scan per consumer — the
     # r10 plan had 48 Scan-parquet leaves and blew 1.9s -> 13.4s under
-    # load. localCheckpoint(eager=False) pins each shared frame once
+    # load. pin(...) materializes each shared frame once
     # (the hygiene gate's one sanctioned storage use).
-    incoming = (
+    incoming = pin(
         d.filter(F.col("doc_id") % 20 == 0)
         .select((F.col("doc_id") + COPY_OFFSET).alias("doc_id"), "text")
         .unionByName(
@@ -1352,7 +1349,6 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 trunc.alias("text"),
             )
         )
-        .localCheckpoint(eager=False)
     )
 
     # stage 1: exact content hash, batch semi-joined into corpus digests
@@ -1365,10 +1361,10 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage 2: cross-side MinHash bands (batch x corpus only)
     both_docs = corpus.unionByName(incoming)
-    sh = D.exploded_shingles(both_docs).localCheckpoint(eager=False)
-    bands = D.band_keys(D.minhash_signature(
+    sh = pin(D.exploded_shingles(both_docs))
+    bands = pin(D.band_keys(D.minhash_signature(
         sh.select("doc_id", D.strhash(F.col("s")).alias("sid"))
-    )).localCheckpoint(eager=False)
+    )))
     is_new = F.col("doc_id") >= COPY_OFFSET
     cand = (
         bands.filter(is_new).alias("a")
@@ -1506,13 +1502,13 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring(F.col("text"), 1, SNM_KEY_CHARS), "[^a-zA-Z0-9]", ""
         )
     )
-    all_docs = all_docs.localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
+    all_docs = pin(all_docs)  # 2 consumers (scan-leaf lint)
     keyed = all_docs.select("doc_id", key.alias("k"))
 
     par = spark.sparkContext.defaultParallelism
-    ranged = keyed.repartitionByRange(par, "k", "doc_id").withColumn(
+    ranged = pin(keyed.repartitionByRange(par, "k", "doc_id").withColumn(
         "pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)  # 2 consumers; also pins pid<->row binding
+    ))  # 2 consumers; also pins pid<->row binding
     wlocal = W.partitionBy("pid").orderBy("k", "doc_id")
     local = ranged.withColumn("lrn", F.row_number().over(wlocal))
     # per-partition row counts -> exclusive running offsets; bounded by
@@ -1532,9 +1528,9 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("pid", "off")
     )
-    ranked = local.join(F.broadcast(offsets), "pid").select(
+    ranked = pin(local.join(F.broadcast(offsets), "pid").select(
         "doc_id", (F.col("lrn") + F.col("off")).alias("rn")
-    ).localCheckpoint(eager=False)  # probe + build sides (scan-leaf lint)
+    ))  # probe + build sides (scan-leaf lint)
 
     probe = ranked.select(
         F.col("doc_id").alias("id_a"),
@@ -1549,7 +1545,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sh = D.exploded_shingles(all_docs).localCheckpoint(eager=False)  # 3 consumers
+    sh = pin(D.exploded_shingles(all_docs))  # 3 consumers
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         cand.join(sh.alias("sa"), F.col("ida") == F.col("sa.doc_id"))
@@ -1842,13 +1838,13 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select("ida", "idb")
     labels = _min_label_fixpoint(d, pairs)  # doc_id, cluster_id
     bk = _bucket(F.col("cluster_id"), 100)
-    assigned = labels.select(
+    assigned = pin(labels.select(
         "doc_id",
         "cluster_id",
         F.when(bk < 80, "train").when(bk < 90, "val").otherwise("test").alias(
             "split"
         ),
-    ).localCheckpoint(eager=False)
+    ))
     leaks = (
         pairs.join(
             assigned.select(F.col("doc_id").alias("ida"), F.col("split").alias("sa")),
@@ -1921,9 +1917,9 @@ def dedup_cosine_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the sweep affordable at 100 TB."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     planted = e.select((F.col("vec_id") + COPY_OFFSET).alias("vec_id"), "embedding")
-    normed = e.unionByName(planted).withColumn(
+    normed = pin(e.unionByName(planted).withColumn(
         "nrm", F.sqrt(D.dot_double(F.col("embedding"), F.col("embedding")))
-    ).localCheckpoint(eager=False)  # bands + 2 lookup joins (scan-leaf lint)
+    ))  # bands + 2 lookup joins (scan-leaf lint)
     band_arr = F.array(
         *[
             F.struct(
@@ -2036,10 +2032,9 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("src"), nxt).alias("source"),
         "text",
     )
-    canon = (
+    canon = pin(
         d.unionByName(mirrored)
         .select("doc_id", "source", F.md5("text").alias("h"))
-        .localCheckpoint(eager=False)
     )
     a, b = canon.alias("a"), canon.alias("b")
     return (
@@ -2189,10 +2184,10 @@ def dedup_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled stratum, and the candidate side is the same banded join
     the production dedup runs."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    true_pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select(
+    true_pairs = pin(D.jaccard_pairs(d, JACCARD_THRESHOLD).select(
         "ida", "idb"
-    ).localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
-    # r13: the merge hint this site carried was DEAD — localCheckpoint
+    ))  # 2 consumers (scan-leaf lint)
+    # r13: the merge hint this site carried was DEAD — the pin
     # truncates the plan to a LogicalRDD, dropping any hint attached
     # below it (the HintErrorLogger warning), so since the pin landed
     # the planner has chosen the band-join strategy itself (static SMJ
@@ -2200,10 +2195,9 @@ def dedup_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at runtime). Resurrecting the hint post-pin forced SMJ and
     # blocked AQE's conversion — measured slower — so the dead hint is
     # REMOVED rather than revived.
-    bands = D.band_keys(D.minhash_signature(D.shingle_ids(d))).localCheckpoint(
-        eager=False
-    )  # self-joined (scan-leaf lint)
-    cand = (
+    # self-joined (scan-leaf lint)
+    bands = pin(D.band_keys(D.minhash_signature(D.shingle_ids(d))))
+    cand = pin(  # 2 consumers (scan-leaf lint)
         bands.alias("a")
         .join(
             bands.alias("b"),
@@ -2213,7 +2207,6 @@ def dedup_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb"))
         .distinct()
-        .localCheckpoint(eager=False)  # 2 consumers (scan-leaf lint)
     )
     tp = cand.join(true_pairs, ["ida", "idb"], "left_semi").agg(
         F.count(F.lit(1)).cast("bigint").alias("tp")
@@ -2404,9 +2397,8 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: dead hint removed (see dedup_lsh_quality_audit note) — the
     # pin already dropped it, and reviving it would pin the join to SMJ
     # against AQE's runtime broadcast conversion.
-    bands = (
+    bands = pin(
         D.band_keys(D.minhash_signature(sids))
-        .localCheckpoint(eager=False)
     )
     cand = (
         bands.alias("a")
@@ -2423,9 +2415,9 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 2. exact-Jaccard re-rank on candidates (array-local intersection)
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
-    arrs = toks.select(
+    arrs = pin(toks.select(
         "doc_id", D.shingles_of_tokens(F.col("toks")).alias("sh")
-    ).localCheckpoint(eager=False)  # ida + idb lookup sides
+    ))  # ida + idb lookup sides
     jacc = (
         cand.join(
             arrs.select(F.col("doc_id").alias("ida"), F.col("sh").alias("sha")), "ida"
@@ -2448,9 +2440,9 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ida", "idb")
     )
     # 3. bounded edit-distance verify on the heads
-    heads = d.select(
+    heads = pin(d.select(
         "doc_id", F.substring(F.col("text"), 1, EDV_VERIFY_CHARS).alias("head")
-    ).localCheckpoint(eager=False)  # ida + idb lookup sides
+    ))  # ida + idb lookup sides
     verified = (
         jacc.join(
             heads.select(F.col("doc_id").alias("ida"), F.col("head").alias("ha")),
@@ -2633,9 +2625,9 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-once discipline: the tokenized frame feeds the window stream
     # AND the final ledger; the window stream feeds the dup aggregate
     # AND the coverage stage; duplicated windows feed coverage AND the
-    # per-doc window count — pinned with localCheckpoint, the hygiene
+    # per-doc window count — pinned (pinning.pin), the hygiene
     # gate's one sanctioned storage use (stores MEMORY_AND_DISK)
-    tk = d.select("doc_id", tokens(F.col("text")).alias("t")).localCheckpoint(eager=False)
+    tk = pin(d.select("doc_id", tokens(F.col("text")).alias("t")))
     import os
 
     # window-hash choice mirrors the DSIR precedent: md5 is the default
@@ -2648,7 +2640,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.environ.get("SPARK_GRAFT_XS_HASH", "md5") == "xxhash64"
         else "md5"
     )
-    win = tk.filter(F.size("t") >= XS_K).select(
+    win = pin(tk.filter(F.size("t") >= XS_K).select(
         "doc_id",
         F.explode(
             F.expr(
@@ -2657,14 +2649,14 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{hfn}(array_join(slice(t, i, {XS_K}), ' ')) AS h))"
             )
         ).alias("w"),
-    ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h")).localCheckpoint(eager=False)
+    ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h")))
     dup = (
         win.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    dw = win.join(dup, "h", "left_semi").localCheckpoint(eager=False)
+    dw = pin(win.join(dup, "h", "left_semi"))
     cov = (
         dw.select(
             "doc_id", F.explode(F.sequence("pos", F.col("pos") + XS_K - 1)).alias("p")
@@ -2808,10 +2800,10 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # scan-once: boundaries feed the chunk stream AND the final ledger;
     # chunks feed the dup aggregate AND the per-doc rollup
-    b = d.select("doc_id", "text").mapInPandas(
+    b = pin(d.select("doc_id", "text").mapInPandas(
         _cdc_boundary_batches, "doc_id bigint, text string, bf array<int>"
-    ).localCheckpoint(eager=False)
-    ch = b.select(
+    ))
+    ch = pin(b.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -2821,7 +2813,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "element_at(bf, i) - IF(i = 1, 0, element_at(bf, i - 1)) AS l))"
             )
         ).alias("c"),
-    ).select("doc_id", F.col("c.h").alias("h"), F.col("c.l").alias("l")).localCheckpoint(eager=False)
+    ).select("doc_id", F.col("c.h").alias("h"), F.col("c.l").alias("l")))
     dup = (
         ch.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table, read_binary
 from supabase_etl_spark.operators import multimodal as M
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 FRAME_STEP = 3
@@ -1092,9 +1093,8 @@ def multimodal_image_histogram_similarity(spark: SparkSession, sf_dir: str) -> D
                 }
             )
 
-    h = imgs.mapInPandas(hist, schema="uri string, bucket int, c long").localCheckpoint(
-        eager=False
-    )  # decode once: norms + both join sides (scan-leaf lint)
+    # decode once: norms + both join sides (scan-leaf lint)
+    h = pin(imgs.mapInPandas(hist, schema="uri string, bucket int, c long"))
     norms = h.groupBy("uri").agg(F.sum(F.col("c") * F.col("c")).cast("bigint").alias("n2"))
     a = h.alias("a")
     b = h.alias("b")
@@ -1530,11 +1530,11 @@ def multimodal_ssim_over_phash_candidates(spark: SparkSession, sf_dir: str) -> D
 
     The image set is decoded EXACTLY ONCE (r8 task 5): one Arrow
     mapInPandas pass emits gray vector + aHash together and is pinned
-    with localCheckpoint, so the signature self-join and both moment
+    once, so the signature self-join and both moment
     sides read the same materialized decode instead of re-running the
     codec per consumer (previously two decode passes, one per
     helper)."""
-    dec = M.decode_gray_with_ahash(_images(spark, sf_dir)).localCheckpoint()
+    dec = pin(M.decode_gray_with_ahash(_images(spark, sf_dir)), eager=True)
     hashed = dec.select("uri", "ahash")
     cand = (
         hashed.alias("x")
@@ -1701,7 +1701,7 @@ def multimodal_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     plus near-dup-linear, the same argument as the text pipeline."""
     from supabase_etl_spark.operators.cc import connected_components
 
-    dec = M.decode_gray_with_ahash(_images(spark, sf_dir)).localCheckpoint()
+    dec = pin(M.decode_gray_with_ahash(_images(spark, sf_dir)), eager=True)
     did = F.regexp_replace("uri", "^doc://", "").cast("bigint")
     hashed = dec.select(did.alias("did"), "uri", "ahash")
     cand = (
@@ -2177,9 +2177,9 @@ def multimodal_audio_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> Dat
         F.concat(F.col("uri"), F.lit(".r2")).alias("uri"), "content"
     )
     corpus = orig.select("uri", "content").unionByName(res)
-    feats = M.audio_canonical_features(
+    feats = pin(M.audio_canonical_features(
         corpus, CANON_RATE, AUDIO_BLOCKS
-    ).localCheckpoint()
+    ), eager=True)
     doc_id = F.regexp_extract("uri", r"doc://(\d+)", 1).cast("bigint")
     variant = F.when(F.col("uri").endswith(".r2"), 1).otherwise(0)
     coarse = [
@@ -2338,7 +2338,7 @@ def multimodal_video_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> Dat
         F.concat(F.col("uri"), F.lit(".d2")).alias("uri"), "content"
     )
     corpus = orig.select("uri", "content").unionByName(dec)
-    feats = M.video_canonical_features(corpus, VCANON_FPS).localCheckpoint()
+    feats = pin(M.video_canonical_features(corpus, VCANON_FPS), eager=True)
     doc_id = F.regexp_extract("uri", r"doc://(\d+)", 1).cast("bigint")
     variant = F.when(F.col("uri").endswith(".d2"), 1).otherwise(0)
     coarse = F.array_join(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.text import tokens
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 A, B, P = 1_103_515_245, 12_345, 2_147_483_647
@@ -432,7 +433,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bucket = dsir_bucket_expr("g")
     # hash every gram ONCE into a (doc, bucket) count grid and PIN it
-    # (localCheckpoint): the grid has two consumers (the 256-row
+    # (pinning.pin): the grid has two consumers (the 256-row
     # distribution agg and the scoring join) and relying on
     # ReusedExchange proved brittle — the r8 plan audit found the join
     # side acquires a pushed isnotnull(doc_id) the agg side lacks, so
@@ -442,11 +443,11 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes the post-aggregation grid (strictly smaller than
     # the gram stream) exactly once; at 100 TB that is the standard
     # reuse-vs-recompute call for a multi-consumer subplan.
-    bdoc = (
+    bdoc = pin(
         grams.select("doc_id", "lang", bucket.alias("b"))
         .groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("n_db"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("n_db")),
+        eager=True,
     )
     # ONE conditional agg carries both distributions (raw + target);
     # the corpus totals fold in as windows over the 256-row bucket
@@ -795,7 +796,7 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged = keyed.repartitionByRange(par, "epoch", "shuffle_key", "doc_id").withColumn(
         "pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=False)  # rank + offsets; pins pid binding (scan-leaf lint)
+    ranged = pin(ranged)  # rank + offsets; pins pid binding (scan-leaf lint)
     wl = Window.partitionBy("pid").orderBy("epoch", "shuffle_key", "doc_id")
     local = ranged.withColumn("lrn", F.row_number().over(wl))
     # per-partition counts -> exclusive offsets; the only driver-ordered
@@ -916,12 +917,12 @@ def sample_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free so Spark parallel == DuckDB sequential bit-for-bit; the
     weight chain itself is scalar double arithmetic, IEEE-identical.
     Weights stay in DataFrames end-to-end (domain-sized
-    localCheckpoints per round, no driver-side math)."""
+    pins per round, no driver-side math)."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(tokens(F.col("text"))).alias("t"))
     st = tok.groupBy("source", "t").agg(F.count(F.lit(1)).alias("c_st"))
     stot = st.groupBy("source").agg(F.sum("c_st").cast("bigint").alias("n_s"))
-    p = (
+    p = pin(
         st.join(F.broadcast(stot), "source")
         .select(
             "source",
@@ -932,14 +933,13 @@ def sample_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inside every kl pin's builder — without this pin the corpus
         # tokenize ran 2× per round (pin-interior lint, r13), breaking
         # the docstring's one-corpus-scan contract
-        .localCheckpoint(eager=False)
     )
     n_src = d.select("source").distinct().count()  # bounded: domain count
-    w = (
+    w = pin(
         d.select("source")
         .distinct()
-        .select("source", (F.lit(1.0) / F.lit(float(n_src))).alias("w"))
-        .localCheckpoint()
+        .select("source", (F.lit(1.0) / F.lit(float(n_src))).alias("w")),
+        eager=True,
     )
     kl = None
     for _ in range(DOREMI_ROUNDS):
@@ -949,7 +949,7 @@ def sample_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("t")
             .agg(F.sum("term").cast("double").alias("q"))
         )
-        kl = (
+        kl = pin(  # domain-sized
             p.join(q, "t")
             .select(
                 "source",
@@ -958,8 +958,8 @@ def sample_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("term"),
             )
             .groupBy("source")
-            .agg(F.sum("term").cast("double").alias("kl"))
-            .localCheckpoint()  # domain-sized
+            .agg(F.sum("term").cast("double").alias("kl")),
+            eager=True,
         )
         num = w.join(kl, "source").select(
             "source", (F.col("w") * F.exp(DOREMI_ETA * F.col("kl"))).alias("num")
@@ -967,10 +967,10 @@ def sample_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         den = num.agg(
             F.sum(F.col("num").cast("decimal(38,18)")).cast("double").alias("den")
         )
-        w = (
+        w = pin(
             num.crossJoin(F.broadcast(den))
-            .select("source", (F.col("num") / F.col("den")).alias("w"))
-            .localCheckpoint()
+            .select("source", (F.col("num") / F.col("den")).alias("w")),
+            eager=True,
         )
     return (
         w.join(kl, "source")
@@ -1100,7 +1100,7 @@ def sample_water_filling_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy."""
     d = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     supply = d.groupBy("source").agg(F.sum("n_chars").alias("sup"))
-    supply = supply.localCheckpoint(eager=False)  # count + fill iterations (scan-leaf lint)
+    supply = pin(supply)  # count + fill iterations (scan-leaf lint)
     n_src = supply.count()  # source-cardinality metadata, bounded
     cur = supply.select(
         "source",
@@ -1627,7 +1627,7 @@ def sample_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + one broadcast join + one global aggregate."""
     d = load_table(spark, sf_dir, "documents")
     src = d.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n_s"))
-    src = src.localCheckpoint(eager=False)  # total + weights (scan-leaf lint)
+    src = pin(src)  # total + weights (scan-leaf lint)
     tot = src.agg(
         F.sum("n_s").cast("bigint").alias("n"), F.count(F.lit(1)).cast("bigint").alias("k")
     )
@@ -1906,7 +1906,7 @@ def sample_coreset_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = e.select(
         "vec_id", F.posexplode("embedding").alias("i0", "xf")
     ).select("vec_id", (F.col("i0") + 1).alias("i"), F.col("xf").cast("double").alias("x"))
-    vals = vals.localCheckpoint(eager=False)  # mean pass + distance pass (scan-leaf lint)
+    vals = pin(vals)  # mean pass + distance pass (scan-leaf lint)
     mu = vals.groupBy("i").agg(
         (F.sum(F.round("x", 9).cast("decimal(38,9)")).cast("double") / F.count(F.lit(1))).alias("m")
     )
@@ -1923,7 +1923,7 @@ def sample_coreset_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dist2")
         )
     )
-    d2 = d2.localCheckpoint(eager=False)  # total + sensitivity rows (scan-leaf lint)
+    d2 = pin(d2)  # total + sensitivity rows (scan-leaf lint)
     tot = d2.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.round("dist2", 9).cast("decimal(38,9)")).cast("double").alias("sd2"),
@@ -2016,7 +2016,7 @@ def sample_top_p_nucleus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wo).alias("rn"),
         F.sum("n").over(wc).alias("cum"),
     ).crossJoin(F.broadcast(tot))
-    ranked = ranked.localCheckpoint(eager=False)  # cut + nucleus tagging (scan-leaf lint)
+    ranked = pin(ranked)  # cut + nucleus tagging (scan-leaf lint)
     cut = ranked.filter(
         F.col("cum") * 1.0 >= TOP_P * F.col("nt")
     ).agg(F.min("rn").alias("k"))
@@ -2469,12 +2469,12 @@ def sample_length_histogram_match(spark: SparkSession, sf_dir: str) -> DataFrame
     # scan-once: the bounded bucket table feeds tot, the scale constant,
     # and the rate table — unpinned, Catalyst re-derives the corpus scan
     # per consumer (the r11 plan audit counted 5 parquet scans)
-    b = d.groupBy("bucket").agg(
+    b = pin(d.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_all"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
         .cast("bigint")
         .alias("n_en"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = b.agg(
         F.sum("n_all").cast("bigint").alias("s_tot"),
         F.sum("n_en").cast("bigint").alias("t_tot"),

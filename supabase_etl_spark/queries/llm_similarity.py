@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.dedup import dot_double, sql_dot
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 N_QUERIES = 10  # query set: vec_id < N_QUERIES
@@ -263,7 +264,8 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table is always broadcast-sized."""
     e = load_table(spark, sf_dir, "embeddings")
     nrm = F.sqrt(dot_double(F.col("embedding"), F.col("embedding")))
-    vecs = e.select("vec_id", "embedding", nrm.alias("nrm")).localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    # shared frame (scan-leaf lint)
+    vecs = pin(e.select("vec_id", "embedding", nrm.alias("nrm")))
     cent = (
         e.filter(F.col("vec_id") % CENTROID_STEP == 0)
         .select(
@@ -283,7 +285,7 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "nrm", "cent_id", cent_cos.alias("cent_cos"))
         .withColumn("crn", F.row_number().over(w_assign))
     )
-    assign_scored = assign_scored.localCheckpoint(eager=False)  # assignment pass: 2 consumers
+    assign_scored = pin(assign_scored)  # assignment pass: 2 consumers
     assigned = assign_scored.filter(F.col("crn") == 1).select(
         "vec_id", "embedding", "nrm", "cent_id"
     )
@@ -387,7 +389,7 @@ def sim_topk_sq_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("i", "xr"))), lambda s: s.xr
         ).alias("e8")
     )
-    vecs = vecs.localCheckpoint(eager=False)  # the int8 index; q + corpus sides
+    vecs = pin(vecs)  # the int8 index; q + corpus sides
     nrm = F.sqrt(dot_double(F.col("e8"), F.col("e8")))
     q = vecs.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("e8").alias("qe"), nrm.alias("qn")
@@ -491,7 +493,7 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("p"), 12).cast("decimal(38,12)")).cast("double").alias("sp"),
         F.count(F.lit(1)).alias("n"),
     )
-    means = (
+    means = pin(  # joined for both i and j (scan-leaf lint)
         e.select(F.posexplode(arr).alias("i0", "v"))
         .select((F.col("i0") + 1).cast("int").alias("i"), F.col("v").cast("double").alias("v"))
         .groupBy("i")
@@ -500,7 +502,6 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sx")
         )
-        .localCheckpoint(eager=False)  # joined for both i and j (scan-leaf lint)
     )
     return (
         sxy.join(means.alias("ma"), sxy["i"] == F.col("ma.i"))
@@ -968,10 +969,10 @@ def sim_matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_trunc = dot_double(
         F.slice(F.col("qe"), 1, MRL_DIM), F.slice(F.col("ce"), 1, MRL_DIM)
     ) / (F.col("qnt") * F.col("cnt"))
-    q = q.localCheckpoint(eager=False)  # broadcast side + final spine (scan-leaf lint)
-    scored = c.crossJoin(F.broadcast(q)).select(
+    q = pin(q)  # broadcast side + final spine (scan-leaf lint)
+    scored = pin(c.crossJoin(F.broadcast(q)).select(
         "qid", "cid", cos_full.alias("cos_full"), cos_trunc.alias("cos_trunc")
-    ).localCheckpoint(eager=False)  # both ranking passes (scan-leaf lint)
+    ))  # both ranking passes (scan-leaf lint)
     wf = Window.partitionBy("qid").orderBy(F.desc("cos_full"), F.asc("cid"))
     wt = Window.partitionBy("qid").orderBy(F.desc("cos_trunc"), F.asc("cid"))
     rf = scored.withColumn("rn", F.row_number().over(wf)).filter(
@@ -1238,7 +1239,7 @@ def embedding_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("x") / eps).cast("bigint").alias("cx"),
         F.floor(F.col("y") / eps).cast("bigint").alias("cy"),
     )
-    pts = pts.localCheckpoint(eager=False)  # probe, build, final spine (scan-leaf lint)
+    pts = pin(pts)  # probe, build, final spine (scan-leaf lint)
     offs = F.expr("array(-1, 0, 1)")
     probe = (
         pts.select("vec_id", "x", "y", "cx", "cy", F.explode(offs).alias("dx"))
@@ -1266,7 +1267,7 @@ def embedding_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("ida") != F.col("idb")) & (d2 <= eps2))
         .select("ida", "idb")
     )
-    nbr = nbr.localCheckpoint(eager=False)  # cnt, edges, border (scan-leaf lint)
+    nbr = pin(nbr)  # cnt, edges, border (scan-leaf lint)
     cnt = nbr.groupBy("ida").agg(F.count(F.lit(1)).alias("n"))
     core = cnt.filter(F.col("n") + 1 >= DBSCAN_MINPTS).select(
         F.col("ida").alias("node")
@@ -1371,10 +1372,8 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("embedding", 1, MAT_DIM).alias("ce16"),
         nrm.alias("cn"),
     )
-    q = q.localCheckpoint(eager=False)  # broadcast side + final spine (scan-leaf lint)
-    base = c.crossJoin(F.broadcast(q)).localCheckpoint(
-        eager=False
-    )  # both ranking passes (scan-leaf lint)
+    q = pin(q)  # broadcast side + final spine (scan-leaf lint)
+    base = pin(c.crossJoin(F.broadcast(q)))  # both ranking passes (scan-leaf lint)
 
     def topk(score, name: str) -> DataFrame:
         w = Window.partitionBy("qid").orderBy(F.col(name).desc(), F.col("cid").asc())
@@ -1506,7 +1505,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer — the plan read 84 parquet-scan leaves (the lint's worst
     # catch). After the pin the corpus is scanned once, as the
     # docstring always claimed.
-    gu = gu.localCheckpoint(eager=False)
+    gu = pin(gu)
     gm = gu.unionByName(
         gu.filter(F.col("i") < F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "g"
@@ -1520,7 +1519,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # w and nrm are d-row / 1-row tables each consumed twice per
         # round (nrm + next v, v + eigenvalue): pin per iteration or
         # the lineage doubles every round.
-        w = (
+        w = pin(
             gm.join(v.select(F.col("i").alias("j"), "v"), "j")
             .groupBy("i")
             .agg(
@@ -1528,14 +1527,14 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("w")
             )
-        ).localCheckpoint(eager=False)
-        nrm = w.agg(
+        )
+        nrm = pin(w.agg(
             F.sqrt(
                 F.sum(F.round(F.col("w") * F.col("w"), 12).cast("decimal(38,12)")).cast(
                     "double"
                 )
             ).alias("nrm")
-        ).localCheckpoint(eager=False)
+        ))
         v = w.crossJoin(F.broadcast(nrm)).select(
             "i", (F.col("w") / F.col("nrm")).alias("v")
         )
@@ -1628,7 +1627,8 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, making the whole curve value-hashable."""
     e = load_table(spark, sf_dir, "embeddings")
     nrm = F.sqrt(dot_double(F.col("embedding"), F.col("embedding")))
-    vecs = e.select("vec_id", "embedding", nrm.alias("nrm")).localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    # shared frame (scan-leaf lint)
+    vecs = pin(e.select("vec_id", "embedding", nrm.alias("nrm")))
     cent = vecs.filter(F.col("vec_id") % CENTROID_STEP == 0).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent_e"),
@@ -1643,7 +1643,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "nrm", "cent_id", ccos.alias("ccos"))
         .withColumn("crn", F.row_number().over(wassign))
     )
-    assign_scored = assign_scored.localCheckpoint(eager=False)  # assignment pass: 2 consumers
+    assign_scored = pin(assign_scored)  # assignment pass: 2 consumers
     assigned = assign_scored.filter(F.col("crn") == 1).select(
         "vec_id", "embedding", "nrm", "cent_id"
     )
@@ -1788,15 +1788,15 @@ def embedding_farthest_first_init(spark: SparkSession, sf_dir: str) -> DataFrame
         # leaves). Pinned, each round is exactly one pass over the
         # running-distance table, the k-pass shape the docstring
         # describes.
-        d = d.crossJoin(F.broadcast(cent)).select(
+        d = pin(d.crossJoin(F.broadcast(cent)).select(
             "vec_id", "embedding", "nrm", nd.alias("d")
-        ).localCheckpoint(eager=False)
+        ))
         mx = d.agg(F.max("d").alias("mx"))
-        c = (
+        c = pin(
             d.crossJoin(F.broadcast(mx))
             .filter(F.col("d") == F.col("mx"))
             .agg(F.min("vec_id").alias("center_id"), F.max("d").alias("dist"))
-        ).localCheckpoint(eager=False)
+        )
         picked = d.join(
             F.broadcast(c), d["vec_id"] == c["center_id"]
         ).select(F.col("embedding").alias("ce"), F.col("nrm").alias("cn"))
@@ -1918,13 +1918,13 @@ def sim_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rel = dot_double(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
     wrel = Window.partitionBy("qid").orderBy(F.col("rel").desc(), F.col("cid").asc())
-    pool = (
+    pool = pin(  # the pool is reused by every greedy round
         c.crossJoin(F.broadcast(q))
         .select("qid", "cid", "ce", "cn", rel.alias("rel"))
         .withColumn("rn", F.row_number().over(wrel))
         .filter(F.col("rn") <= MMR_POOL)
-        .drop("rn")
-        .localCheckpoint()  # the pool is reused by every greedy round
+        .drop("rn"),
+        eager=True,
     )
     first_pick = (
         pool.withColumn("rn", F.row_number().over(wrel))
@@ -2055,8 +2055,8 @@ def sim_rocchio_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") >= PRF_QUERIES).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"), nrm.alias("cn")
     )
-    q = q.localCheckpoint(eager=False)  # round-0 + expansion consumers
-    c = c.localCheckpoint(eager=False)  # round-0, feedback, round-1 passes
+    q = pin(q)  # round-0 + expansion consumers
+    c = pin(c)  # round-0, feedback, round-1 passes
     cos0 = dot_double(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
     w0 = Window.partitionBy("qid").orderBy(F.col("cos0").desc(), F.col("cid").asc())
     r0 = (
@@ -2204,9 +2204,9 @@ def embedding_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    dists = c.crossJoin(F.broadcast(q)).select(
+    dists = pin(c.crossJoin(F.broadcast(q)).select(
         "aid", "alabel", "cid", "clabel", F.sqrt(dist2).alias("d")
-    ).localCheckpoint(eager=False)  # positive, band, semi-hard passes (scan-leaf lint)
+    ))  # positive, band, semi-hard passes (scan-leaf lint)
     pw = Window.partitionBy("aid").orderBy("d", "cid")
     p1 = (
         dists.filter(F.col("alabel") == F.col("clabel"))
@@ -2637,12 +2637,12 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per retrieval path; the audit joins are query-grained
     (<= {N_QUERIES} x {TOP_K} rows)."""
     e = load_table(spark, sf_dir, "embeddings")
-    hashed = e.select(
+    hashed = pin(e.select(
         "vec_id",
         "embedding",
         F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("nrm"),
         lsh_bucket(F.col("embedding")),
-    ).localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    ))  # shared frame (scan-leaf lint)
     q = hashed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"),
         F.col("nrm").alias("qn"), "bucket",
@@ -2752,12 +2752,12 @@ def sim_knn_graph_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutuality self-join is edge-keyed (k·N rows). Nothing corpus-sized
     crosses one task."""
     e = load_table(spark, sf_dir, "embeddings")
-    hashed = e.select(
+    hashed = pin(e.select(
         "vec_id",
         "embedding",
         F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("nrm"),
         lsh_bucket(F.col("embedding")),
-    ).localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    ))  # shared frame (scan-leaf lint)
     a = hashed.select(
         "bucket",
         F.col("vec_id").alias("node"),
@@ -2956,10 +2956,9 @@ def embedding_chamfer_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         )
     )
-    pd_ = (
+    pd_ = pin(  # consumed by BOTH directed minima
         a.crossJoin(F.broadcast(b))
         .select("ida", "idb", d.alias("d"))
-        .localCheckpoint(eager=False)  # consumed by BOTH directed minima
     )
     ma = pd_.groupBy("ida").agg(F.min("d").alias("md"))
     mb = pd_.groupBy("idb").agg(F.min("d").alias("md"))

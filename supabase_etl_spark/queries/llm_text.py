@@ -14,6 +14,7 @@ from pyspark.sql import window as W
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators import text as T
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 
@@ -446,7 +447,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tok = d.select("doc_id", F.explode("toks").alias("t"))
     tf = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    tf = tf.localCheckpoint(eager=False)  # total + scoring join (scan-leaf lint)
+    tf = pin(tf)  # total + scoring join (scan-leaf lint)
     total = tf.agg(F.sum("c").alias("n"))
     nll = (-F.log(F.col("c").cast("double") / F.col("n"))).cast("decimal(38,18)")
     return (
@@ -934,7 +935,7 @@ def text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the boundary comparison, so no engine can flip a bucket on
     a 1-ulp divergence."""
     nll = _bigram_nll_frame(spark, sf_dir)
-    nll = nll.localCheckpoint(eager=False)  # thresholds + bucketing (scan-leaf lint)
+    nll = pin(nll)  # thresholds + bucketing (scan-leaf lint)
     th = nll.agg(
         F.round(F.expr("percentile(mean_nll, CAST(1.0/3 AS DOUBLE))"), 6).alias("t1"),
         F.round(F.expr("percentile(mean_nll, CAST(2.0/3 AS DOUBLE))"), 6).alias("t2"),
@@ -1036,7 +1037,7 @@ def _bm25_ranked_frame(spark: SparkSession, sf_dir: str, depth: int) -> DataFram
         "doc_id", T.tokens(F.col("text")).alias("toks")
     )
     tok = d.select("doc_id", F.explode("toks").alias("term"))
-    tok = tok.localCheckpoint(eager=False)  # doc lengths + tf (the index build)
+    tok = pin(tok)  # doc lengths + tf (the index build)
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1050,7 +1051,7 @@ def _bm25_ranked_frame(spark: SparkSession, sf_dir: str, depth: int) -> DataFram
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = tf.localCheckpoint(eager=False)  # df + scoring (scan-leaf lint)
+    tf = pin(tf)  # df + scoring (scan-leaf lint)
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
         1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
@@ -1239,9 +1240,9 @@ def text_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(T.tokens(F.col("text"))).alias("t"))
-    st = tok.groupBy("source", "t").agg(
+    st = pin(tok.groupBy("source", "t").agg(
         F.count(F.lit(1)).alias("c_st")
-    ).localCheckpoint(eager=False)  # margins + terms (scan-leaf lint)
+    ))  # margins + terms (scan-leaf lint)
     stot = st.groupBy("source").agg(F.sum("c_st").cast("bigint").alias("n_s"))
     ct = st.groupBy("t").agg(F.sum("c_st").cast("bigint").alias("c_t"))
     tot = ct.agg(F.sum("c_t").cast("bigint").alias("n"))
@@ -1280,7 +1281,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax, and merge application never touch the corpus again. At
     100 TB the loop cost is O(rounds x vocab), not O(rounds x corpus).
 
-    Per round: adjacent symbol pairs explode from the (localCheckpoint-
+    Per round: adjacent symbol pairs explode from the (pin-
     truncated, vocab-sized) symbol table weighted by word frequency; a
     hash agg picks the global best pair (ties broken lexically — fully
     deterministic); the merge applies as a JVM-side left-to-right
@@ -1299,7 +1300,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = words.select("freq", F.split("w", "").alias("syms")).localCheckpoint()
+    cur = pin(words.select("freq", F.split("w", "").alias("syms")), eager=True)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, BPE_TRAIN_ROUNDS + 1):
         pairs = cur.select(
@@ -1330,9 +1331,9 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(mc)),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        # localCheckpoint keeps per-round lineage constant-depth: each
+        # the pin keeps per-round lineage constant-depth: each
         # round materializes only the vocab-sized symbol table.
-        cur = cur.select("freq", folded.alias("syms")).localCheckpoint()
+        cur = pin(cur.select("freq", folded.alias("syms")), eager=True)
     return spark.createDataFrame(
         merges, schema="rank INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT"
     ).orderBy("rank")
@@ -1663,7 +1664,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = words.select("freq", F.split("w", "").alias("syms")).localCheckpoint()
+    cur = pin(words.select("freq", F.split("w", "").alias("syms")), eager=True)
     merges: list[tuple[str, str, str]] = []
     for _rank in range(1, BPE_TRAIN_ROUNDS + 1):
         pairs = cur.select(
@@ -1696,9 +1697,9 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.concat(acc, F.array(x))),
             )
 
-        cur = cur.select(
+        cur = pin(cur.select(
             "freq", fold(b["l"], b["r"], b["l"] + b["r"])(F.col("syms")).alias("syms")
-        ).localCheckpoint()
+        ), eager=True)
     # encode: per document token, chars -> chained folds in rank order
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("w")).select(
         "doc_id", F.split("w", "").alias("syms")
@@ -2112,7 +2113,7 @@ def text_bleu_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id", F.filter(F.split("text", r"\s+"), lambda t: t != "").alias("ws")
     )
-    toks = toks.localCheckpoint(eager=False)  # hyp + ref sides (scan-leaf lint)
+    toks = pin(toks)  # hyp + ref sides (scan-leaf lint)
     h = toks.select(F.col("doc_id").alias("hyp_id"), F.col("ws").alias("hws"))
     r = toks.select(F.col("doc_id").alias("ref_id"), F.col("ws").alias("rws"))
     pairs = h.join(r, F.col("ref_id") == F.col("hyp_id") + 1)
@@ -2295,9 +2296,9 @@ def text_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator, no vocab×sources blowup for the absent side."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(T.tokens(F.col("text"))).alias("t"))
-    st = tok.groupBy("source", "t").agg(
+    st = pin(tok.groupBy("source", "t").agg(
         F.count(F.lit(1)).alias("c_st")
-    ).localCheckpoint(eager=False)  # margins + terms (scan-leaf lint)
+    ))  # margins + terms (scan-leaf lint)
     stot = st.groupBy("source").agg(F.sum("c_st").cast("bigint").alias("n_s"))
     ct = st.groupBy("t").agg(F.sum("c_st").cast("bigint").alias("c_t"))
     tot = ct.agg(F.sum("c_t").cast("bigint").alias("n"))
@@ -2692,9 +2693,8 @@ def text_stupid_backoff_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no corpus×corpus anywhere; per-doc and per-lang rollups are the
     only further shuffles."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "lang", T.tokens(F.col("text")).alias("t")).localCheckpoint(
-        eager=False
-    )  # uni/bi/tri count passes (scan-leaf lint)
+    # uni/bi/tri count passes (scan-leaf lint)
+    toks = pin(d.select("doc_id", "lang", T.tokens(F.col("text")).alias("t")))
 
     def grams(df, k: int, cols: list[str]):
         n = F.size("t")
@@ -2985,7 +2985,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("toks"),
     ).select("w1", F.element_at("toks", F.col("i") + 2).alias("w2"))
     c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-    c2 = c2.localCheckpoint()  # reused by 3 rollups + the scoring join
+    c2 = pin(c2, eager=True)  # reused by 3 rollups + the scoring join
     ctx = c2.groupBy("w1").agg(
         F.sum("c12").cast("bigint").alias("c1"),
         F.count(F.lit(1)).cast("bigint").alias("fanout"),
@@ -3113,9 +3113,9 @@ WINNOW_W = 4  # winnowing window (consecutive grams per selection window)
 def winnowing_selected_builder(spark: SparkSession, sf_dir: str):
     """(toked, sel) builder frames for text_winnowing_fingerprint —
     module-level so tests/test_plan_shapes.py asserts window
-    partitioning on the EXACT frame the query localCheckpoints, not a
+    partitioning on the EXACT frame the query pins, not a
     re-implementation that could drift (ADVICE r12). `sel` is returned
-    UN-pinned; the query adds the localCheckpoint."""
+    UN-pinned; the query adds the pin."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toked = d.select("doc_id", T.tokens(F.col("text")).alias("t"))
     n_grams = F.greatest(F.lit(0), F.size("t") - F.lit(WINNOW_K - 1))
@@ -3245,9 +3245,7 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — bounded), one vocabulary-sized groupBy for sharing, one
     gram-keyed equi-join back. The corpus never crosses one task."""
     toked, sel = winnowing_selected_builder(spark, sf_dir)
-    sel = sel.localCheckpoint(
-        eager=False
-    )  # shared-hash agg + per-doc join (scan-leaf lint)
+    sel = pin(sel)  # shared-hash agg + per-doc join (scan-leaf lint)
     n_grams = F.greatest(F.lit(0), F.size("t") - F.lit(WINNOW_K - 1))
     sh = (
         sel.groupBy("h")
@@ -3419,10 +3417,9 @@ def text_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-once: the bounded frequency-of-frequencies table feeds the
     # c<=cap filter, the successor self-join side, and the totals —
     # pinned so the corpus token explode runs once, not per consumer
-    fof = (
+    fof = pin(
         tf.groupBy("c")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_c"))
-        .localCheckpoint(eager=False)
     )
     tot = fof.agg(
         F.sum(F.col("c") * F.col("n_c")).cast("bigint").alias("n_tokens")

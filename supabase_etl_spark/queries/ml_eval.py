@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.dedup import dot_double, sql_dot
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 # exact accumulator for probability-scale terms. Scale 12, not 18: Spark
@@ -403,7 +404,7 @@ def ml_eval_confusion_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("truth"),
         F.when(flip, (F.col("label") + 1) % 10).otherwise(F.col("label")).alias("pred"),
     )
-    pred = pred.localCheckpoint(eager=False)  # margins + diagonal (scan-leaf lint)
+    pred = pin(pred)  # margins + diagonal (scan-leaf lint)
     by_truth = pred.groupBy(F.col("truth").alias("cls")).agg(F.count(F.lit(1)).alias("support"))
     by_pred = pred.groupBy(F.col("pred").alias("cls")).agg(
         F.count(F.lit(1)).alias("predicted_n")
@@ -529,8 +530,8 @@ def ml_eval_ranking_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("clabel"),
         nrm.alias("cn"),
     )
-    q = q.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
-    corpus = corpus.localCheckpoint(eager=False)  # relevance totals + scoring (scan-leaf lint)
+    q = pin(q)  # shared frame (scan-leaf lint)
+    corpus = pin(corpus)  # relevance totals + scoring (scan-leaf lint)
     rel_tot = (
         corpus.join(F.broadcast(q.select("qid", "qlabel")), F.col("qlabel") == F.col("clabel"))
         .groupBy("qid")
@@ -628,7 +629,7 @@ def ml_eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(flip, (F.col("label") + shift) % 10).otherwise(F.col("label"))
 
     raters = e.select(rater(4, 3, 1).alias("ra"), rater(5, 4, 2).alias("rb"))
-    raters = raters.localCheckpoint(eager=False)  # total + both margins (scan-leaf lint)
+    raters = pin(raters)  # total + both margins (scan-leaf lint)
     tot = raters.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("ra") == F.col("rb"), 1).otherwise(0)).alias("agree_n"),
@@ -731,9 +732,9 @@ def ml_eval_ari_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = e.select(F.col("label").alias("ca"), cb.alias("cb"))
     # one corpus scan (scan-leaf lint): margins and total derive from
     # the pinned k x k contingency table
-    nij = assign.groupBy("ca", "cb").agg(
+    nij = pin(assign.groupBy("ca", "cb").agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False)
+    ))
     tot = nij.agg(F.sum("c").alias("n"))
     ai = nij.groupBy("ca").agg(F.sum("c").alias("c"))
     bj = nij.groupBy("cb").agg(F.sum("c").alias("c"))
@@ -1241,7 +1242,7 @@ def ml_eval_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         (F.col("o_orderkey") % 3).alias("fold"),
     )
-    folds = folds.localCheckpoint(eager=False)  # train/calib/test consumers (scan-leaf lint)
+    folds = pin(folds)  # train/calib/test consumers (scan-leaf lint)
     train_mean = (
         folds.filter(F.col("fold") == 0)
         .groupBy("cat")
@@ -1324,9 +1325,8 @@ def events_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     user by their distinct-type count, the same bounded-basket shape
     as the market-basket operator."""
     ev = load_table(spark, sf_dir, "events")
-    per_user = ev.select("user_id", "event_type").distinct().localCheckpoint(
-        eager=False
-    )  # margins + both join sides (scan-leaf lint)
+    # margins + both join sides (scan-leaf lint)
+    per_user = pin(ev.select("user_id", "event_type").distinct())
     n_users = per_user.agg(F.countDistinct("user_id").alias("n"))
     marg = per_user.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
     a, b = per_user.alias("a"), per_user.alias("b")
@@ -1735,7 +1735,7 @@ def ml_eval_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("y"),
         (F.col("o_orderkey") % 3).alias("fold"),
     )
-    folds = folds.localCheckpoint(eager=False)  # train + test folds (scan-leaf lint)
+    folds = pin(folds)  # train + test folds (scan-leaf lint)
     model = (
         folds.filter(F.col("fold") < 2)
         .groupBy("cat")
@@ -1839,7 +1839,7 @@ def ml_eval_model_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grid-bounded threshold-table machinery, so the whole card
     costs two corpus passes (scores + fairness counts) regardless of
     corpus size."""
-    c = _cum(spark, sf_dir).localCheckpoint(eager=False)  # multi-consumer (scan-leaf lint)
+    c = pin(_cum(spark, sf_dir))  # multi-consumer (scan-leaf lint)
     p = _p_col()
     aucs = c.groupBy("model").agg(
         (
@@ -1967,7 +1967,7 @@ def ml_eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the decomposition are both grid-sized, corpus-independent."""
     p = _p_col()
     bin_ = F.least(F.floor(p * 10).cast("bigint"), F.lit(9).cast("bigint"))
-    c = _cum(spark, sf_dir).localCheckpoint(eager=False)  # multi-consumer (scan-leaf lint)
+    c = pin(_cum(spark, sf_dir))  # multi-consumer (scan-leaf lint)
     n_rows = F.col("pos") + F.col("neg")
     bins = (
         c.select(
@@ -2252,7 +2252,7 @@ def ml_eval_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(Window.partitionBy("pair", "x")).cast("double").alias("cx"),
         F.sum("c").over(Window.partitionBy("pair", "y")).cast("double").alias("cy"),
     )
-    probs = probs.localCheckpoint(eager=False)  # mi + marginal entropies (scan-leaf lint)
+    probs = pin(probs)  # mi + marginal entropies (scan-leaf lint)
     p = F.col("c") / F.col("n")
     mi_term = p * F.log(p / ((F.col("cx") / F.col("n")) * (F.col("cy") / F.col("n"))))
     mi = probs.groupBy("pair").agg(
@@ -2366,14 +2366,14 @@ def ml_eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("model").orderBy("s")
-    c = g.select(
+    c = pin(g.select(
         "model",
         "s",
         "pos",
         "n",
         F.sum("pos").over(w).cast("bigint").alias("cp_le"),
         F.sum("n").over(w).cast("bigint").alias("cn_le"),
-    ).localCheckpoint(eager=False)  # self-joined + bins (scan-leaf lint)
+    ))  # self-joined + bins (scan-leaf lint)
     ci, cj = c.alias("i"), c.alias("j")
     intervals = ci.join(
         cj,
@@ -2474,7 +2474,7 @@ def ml_eval_ece_mce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("bigint").alias("pos"),
         F.sum("n").cast("bigint").alias("n"),
     )
-    binned = binned.localCheckpoint(eager=False)  # tot + per-bin (scan-leaf lint)
+    binned = pin(binned)  # tot + per-bin (scan-leaf lint)
     tot = binned.groupBy("model").agg(F.sum("n").cast("bigint").alias("n_tot"))
     gap = F.abs(
         F.col("pos").cast("double") / F.col("n")
@@ -2729,7 +2729,7 @@ def ml_eval_propensity_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("seg"),
         F.col("c_nationkey").alias("nat"),
     )
-    units = units.localCheckpoint(eager=False)  # cells + scoring (scan-leaf lint)
+    units = pin(units)  # cells + scoring (scan-leaf lint)
     cells = units.groupBy("seg", "nat").agg(
         (F.sum("treated").cast("double") / F.count(F.lit(1))).alias("score")
     )
@@ -2740,7 +2740,7 @@ def ml_eval_propensity_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         F.floor(F.col("score") / PSM_CALIPER).cast("bigint").alias("bucket"),
     )
-    scored = scored.localCheckpoint(eager=False)  # treated + control sides (scan-leaf lint)
+    scored = pin(scored)  # treated + control sides (scan-leaf lint)
     treated = scored.filter(F.col("treated") == 1).select(
         F.col("c_custkey").alias("t_key"),
         F.col("y").alias("y_t"),
@@ -2987,7 +2987,7 @@ def ml_eval_delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits) sum through decimal(38,12) inside the 15-sig-digit
     cross-engine agreement window; z_{{0.975}} is a string-cast literal
     (decimal-literal parsing double-rounds 1 ulp in DuckDB)."""
-    c = _cum(spark, sf_dir).localCheckpoint(eager=False)  # multi-consumer (scan-leaf lint)
+    c = pin(_cum(spark, sf_dir))  # multi-consumer (scan-leaf lint)
     auc = c.groupBy("model").agg(
         (
             F.sum(F.col("pos") * (2 * (F.col("cumneg_le") - F.col("neg")) + F.col("neg"))).cast("double")
@@ -3091,7 +3091,7 @@ def ml_eval_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFr
         .agg(F.count("o_orderkey").cast("bigint").alias("y"))
     )
     x, y = F.col("x"), F.col("y")
-    outcome = outcome.localCheckpoint(eager=False)  # shared frame (scan-leaf lint)
+    outcome = pin(outcome)  # shared frame (scan-leaf lint)
     sides = outcome.groupBy(
         F.when(x > 0, "right").otherwise("left").alias("side")
     ).agg(
@@ -3323,7 +3323,7 @@ def ml_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.sum(F.round(c, 6).cast("decimal(38,6)")).cast("double")
 
     x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
-    pts = pts.localCheckpoint(eager=False)  # moment pass + scoring pass (scan-leaf lint)
+    pts = pin(pts)  # moment pass + scoring pass (scan-leaf lint)
     m = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         d6(x1).alias("s1"),
@@ -3714,9 +3714,9 @@ def ml_eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("lang"))
         .alias("r2"),
     )
-    pair_counts = d.groupBy("r1", "r2").agg(
+    pair_counts = pin(d.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
-    ).localCheckpoint(eager=False)  # both coincidence legs (scan-leaf lint)
+    ))  # both coincidence legs (scan-leaf lint)
     coinc = pair_counts.select(F.col("r1").alias("c"), F.col("r2").alias("k"), "o").unionByName(
         pair_counts.select(F.col("r2").alias("c"), F.col("r1").alias("k"), "o")
     )
@@ -3817,7 +3817,7 @@ def ml_eval_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-sized aggregate joined to 1-row-per-model state — the same
     shape as ml_logreg_gd, where the gradient cost is bounded by the
     score grid, not the corpus."""
-    grid = (
+    grid = pin(
         _scored(spark, sf_dir)
         .groupBy("model", "s")
         .agg(
@@ -3825,8 +3825,9 @@ def ml_eval_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count(F.lit(1)) - F.sum("y")).cast("double").alias("neg"),
         )
         .withColumn("z", F.col("s").cast("double") / float(SCORE_GRID))
-        .drop("s")
-    ).localCheckpoint()  # grid reused by every epoch; truncate lineage
+        .drop("s"),
+        eager=True,
+    )  # grid reused by every epoch; truncate lineage
     n = grid.groupBy("model").agg((F.sum("pos") + F.sum("neg")).alias("n"))
     state = n.select("model", F.lit(1.0).alias("a"), F.lit(0.0).alias("b"))
 
@@ -3941,14 +3942,14 @@ def ml_eval_rouge_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on (pair, gram) — batch-of-pairs × grams, never
     corpus × corpus. Per-row double arithmetic only (IEEE-identical
     cross-engine); counts are exact longs."""
-    d = load_table(spark, sf_dir, "documents").select(
+    d = pin(load_table(spark, sf_dir, "documents").select(
         "doc_id", F.array_remove(F.split("text", r"\s+"), "").alias("t")
-    ).localCheckpoint(eager=False)  # consumed by both join sides; pairs feed cg/rg/sizes
+    ))  # consumed by both join sides; pairs feed cg/rg/sizes
     c = d.filter(F.col("doc_id") % 2 == 1).select(
         F.col("doc_id").alias("pair_id"), F.col("t").alias("ct")
     )
     r = d.select((F.col("doc_id") + 1).alias("pair_id"), F.col("t").alias("rt"))
-    pairs = c.join(r, "pair_id").localCheckpoint(eager=False)
+    pairs = pin(c.join(r, "pair_id"))
 
     def grams(col: str):
         # Spark's sequence(1, 0) is DESCENDING [1, 0] — a greatest(..., 0)
@@ -4090,7 +4091,7 @@ def ml_eval_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     x = F.col("l_quantity").cast("double")
     y = F.col("l_extendedprice").cast("double")
-    fs = li.select(
+    fs = pin(li.select(
         fold.alias("fold"), x.alias("x"), y.alias("y")
     ).groupBy("fold").agg(
         F.count(F.lit(1)).alias("n"),
@@ -4099,7 +4100,7 @@ def ml_eval_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("x") * F.col("x")).cast("decimal(28,6)")).alias("dsxx"),
         F.sum((F.col("y") * F.col("y")).cast("decimal(38,6)")).alias("dsyy"),
         F.sum((F.col("x") * F.col("y")).cast("decimal(38,6)")).alias("dsxy"),
-    ).localCheckpoint(eager=False)  # K-row table consumed by the global rollup AND the fold join
+    ))  # K-row table consumed by the global rollup AND the fold join
     g = fs.agg(
         F.sum("n").alias("n_t"),
         F.sum("dsx").alias("dsx_t"),

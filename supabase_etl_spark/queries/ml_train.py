@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 DEC = "decimal(38,12)"
@@ -224,9 +225,7 @@ def ml_nb_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # term groupBy (4 documents scans in the before-plan,
     # plans/r13/ml_nb_train_score_before.txt). The pin bounds the
     # train pass to one tokenization; vocab is min-df-bounded state.
-    vocab = counts.filter(F.col("c0") + F.col("c1") >= NB_MIN_DF).localCheckpoint(
-        eager=False
-    )
+    vocab = pin(counts.filter(F.col("c0") + F.col("c1") >= NB_MIN_DF))
     tot = vocab.agg(
         F.sum("c0").alias("n0"), F.sum("c1").alias("n1"), F.count(F.lit(1)).alias("v")
     )
@@ -362,7 +361,7 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey") % 2).alias("y"),
     )
     eta = F.lit(float(LR_ETA))
-    feat = feat.localCheckpoint(eager=False)  # consumed per epoch (scan-leaf lint)
+    feat = pin(feat)  # consumed per epoch (scan-leaf lint)
     beta = spark.createDataFrame(
         [(0.0, 0.0, 0.0)], "beta0 double, beta1 double, beta2 double"
     )
@@ -462,7 +461,7 @@ def ml_item_cf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket = li.select(
         F.col("l_orderkey").alias("ok"), (F.col("l_partkey") % 200).alias("item")
     ).distinct()
-    basket = basket.localCheckpoint(eager=False)  # margins + both join sides (scan-leaf lint)
+    basket = pin(basket)  # margins + both join sides (scan-leaf lint)
     item_n = basket.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     a = basket.alias("a")
     b = basket.alias("b")
@@ -471,7 +470,7 @@ def ml_item_cf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.item").alias("i"), F.col("b.item").alias("j"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    pair = pair.localCheckpoint(eager=False)  # both sym legs (scan-leaf lint)
+    pair = pin(pair)  # both sym legs (scan-leaf lint)
     sym = pair.unionAll(pair.select(F.col("j").alias("i"), F.col("i").alias("j"), "c"))
     ni = item_n.select(F.col("item").alias("i"), F.col("n").alias("n_i"))
     nj = item_n.select(F.col("item").alias("j"), F.col("n").alias("n_j"))
@@ -617,9 +616,9 @@ def ml_gb_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned, the orders lineage multiplied to 40 parquet-scan
     # leaves. Pinning per round is the standard GBDT shape: residual
     # state is materialized once per boosting round.
-    cur = feat.crossJoin(F.broadcast(mu)).select(
+    cur = pin(feat.crossJoin(F.broadcast(mu)).select(
         "x1", "x2", (F.col("y") - F.col("mu")).alias("r")
-    ).localCheckpoint(eager=False)
+    ))
     nu = F.lit(float(GB_NU))
     out_rows = []
     for rnd in range(1, GB_ROUNDS + 1):
@@ -650,7 +649,7 @@ def ml_gb_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             3,
         )
         wrk = Window.orderBy(gain.desc(), F.col("f").asc(), F.col("b").asc())
-        best = (
+        best = pin(
             cum.filter(F.col("b") < F.col("bmax"))
             .select(
                 F.col("f").alias("feature"),
@@ -663,7 +662,7 @@ def ml_gb_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("rk") == 1)
             .drop("rk")
-        ).localCheckpoint(eager=False)  # 1-row stump: feeds next round AND the output row
+        )  # 1-row stump: feeds next round AND the output row
         leaf = F.when(
             F.col("feature") == 1,
             F.when(F.col("x1") <= F.col("split_bin"), F.col("leaf_l")).otherwise(
@@ -674,9 +673,9 @@ def ml_gb_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("leaf_r")
             )
         )
-        cur = cur.crossJoin(F.broadcast(best)).select(
+        cur = pin(cur.crossJoin(F.broadcast(best)).select(
             "x1", "x2", (F.col("r") - nu * leaf).alias("r")
-        ).localCheckpoint(eager=False)
+        ))
         mse = cur.agg(
             (
                 F.sum(F.round(F.col("r") * F.col("r"), 0).cast("decimal(38,0)")).cast(
@@ -915,7 +914,7 @@ def ml_cf_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket = li.select(
         F.col("l_orderkey").alias("ok"), (F.col("l_partkey") % 200).alias("item")
     ).distinct()
-    basket = basket.localCheckpoint(eager=False)  # margins + both join sides (scan-leaf lint)
+    basket = pin(basket)  # margins + both join sides (scan-leaf lint)
     item_n = basket.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     a = basket.alias("a")
     b = basket.alias("b")
@@ -924,7 +923,7 @@ def ml_cf_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.item").alias("i"), F.col("b.item").alias("j"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    pair = pair.localCheckpoint(eager=False)  # both sym legs (scan-leaf lint)
+    pair = pin(pair)  # both sym legs (scan-leaf lint)
     sym = pair.unionAll(pair.select(F.col("j").alias("i"), F.col("i").alias("j"), "c"))
     ni = item_n.select(F.col("item").alias("i"), F.col("n").alias("n_i"))
     nj = item_n.select(F.col("item").alias("j"), F.col("n").alias("n_j"))
@@ -1062,7 +1061,7 @@ def ml_svm_hinge_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("o_custkey") % 2) * 2 - 1).alias("yy"),
     )
     eta, lam = float(SVM_ETA), float(SVM_LAMBDA)
-    feat = feat.localCheckpoint(eager=False)  # consumed per epoch (scan-leaf lint)
+    feat = pin(feat)  # consumed per epoch (scan-leaf lint)
     w = spark.createDataFrame([(0.0, 0.0, 0.0)], "w0 double, w1 double, w2 double")
     snapshots = []
     for _ in range(SVM_EPOCHS):
@@ -1422,7 +1421,7 @@ def ml_slope_one_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r")
         )
     )
-    ratings = ratings.localCheckpoint(eager=False)  # self-join + LOO scoring (scan-leaf lint)
+    ratings = pin(ratings)  # self-join + LOO scoring (scan-leaf lint)
     a, b = ratings.alias("a"), ratings.alias("b")
     dev = (
         a.join(b, (F.col("a.u") == F.col("b.u")) & (F.col("a.item") != F.col("b.item")))
@@ -1548,13 +1547,13 @@ def ml_perceptron_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream against the 17-row weight table + doc-keyed agg;
     misclassified docs re-aggregate to a bucket-keyed update. Two
     shuffles per epoch, both map-side combined; weights
-    localCheckpoint between epochs to keep plan depth constant. The
+    are pinned between epochs to keep plan depth constant. The
     md5 bucket hash is the oracle-replayable choice (xxhash64 swaps in
     for production, the dsir_bucket_expr pattern)."""
     from supabase_etl_spark.operators.text import tokens as _toks
 
     d = load_table(spark, sf_dir, "documents")
-    feats = (
+    feats = pin(
         d.select(
             "doc_id",
             F.explode(_toks(F.col("text"))).alias("t"),
@@ -1574,13 +1573,13 @@ def ml_perceptron_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(-1).cast("bigint").alias("b"),
                 F.lit(1).cast("bigint").alias("c"),
             )
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
-    lab = d.select(
+    lab = pin(d.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(-1).cast("bigint").alias("y"),
-    ).localCheckpoint(eager=False)  # joined every epoch (scan-leaf lint)
+    ))  # joined every epoch (scan-leaf lint)
     w = feats.select("b").distinct().select("b", F.lit(0).cast("bigint").alias("w"))
     stats = []
     for e in range(1, PCT_EPOCHS + 1):
@@ -1596,10 +1595,10 @@ def ml_perceptron_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("b")
             .agg(F.sum(F.col("y") * F.col("c")).alias("d"))
         )
-        w = (
+        w = pin(
             w.join(upd, "b", "left")
-            .select("b", (F.col("w") + F.coalesce("d", F.lit(0))).alias("w"))
-            .localCheckpoint()
+            .select("b", (F.col("w") + F.coalesce("d", F.lit(0))).alias("w")),
+            eager=True,
         )
         n_mis = mis.agg(F.count(F.lit(1)).cast("bigint").alias("n_misclassified"))
         l1 = w.agg(F.sum(F.abs("w")).cast("bigint").alias("weight_l1"))
@@ -1700,13 +1699,13 @@ def ml_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: each round's five weighted moments round at their true
     scales (w at 1e-12, x/y products at 1e-6) into decimal sums; the
     residual floor (1e-12) avoids division blowups identically in both
-    engines. One corpus pass per round, localCheckpoint-truncated —
+    engines. One corpus pass per round, pin-truncated —
     the ml_logreg_gd loop discipline."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 4000)
-    pts = li.select(
+    pts = pin(li.select(
         F.col("l_quantity").cast("double").alias("x"),
         (F.col("l_extendedprice").cast("double") / 1000.0).alias("y"),
-    ).localCheckpoint()
+    ), eager=True)
     x, y = F.col("x"), F.col("y")
     m0 = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -1718,7 +1717,7 @@ def ml_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    fit = m0.select(b0.alias("b"), ((F.col("sy") - b0 * F.col("sx")) / F.col("n")).alias("a")).localCheckpoint()
+    fit = pin(m0.select(b0.alias("b"), ((F.col("sy") - b0 * F.col("sx")) / F.col("n")).alias("a")), eager=True)
     outs = [fit.select(F.lit(0).alias("round"), F.round("a", 9).alias("intercept"), F.round("b", 9).alias("slope"))]
     for r in range(1, HUBER_ROUNDS + 1):
         wcol = F.least(
@@ -1737,10 +1736,10 @@ def ml_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
         bb = (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / (
             F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
         )
-        fit = m.select(
+        fit = pin(m.select(
             bb.alias("b"),
             ((F.col("swy") - bb * F.col("swx")) / F.col("sw")).alias("a"),
-        ).localCheckpoint()
+        ), eager=True)
         outs.append(
             fit.select(
                 F.lit(r).alias("round"),
@@ -1853,7 +1852,7 @@ def sample_dataset_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
     from supabase_etl_spark.operators.text import tokens as _toks
 
     d = load_table(spark, sf_dir, "documents")
-    feats = (
+    feats = pin(
         d.select("doc_id", F.explode(_toks(F.col("text"))).alias("t"))
         .select(
             "doc_id",
@@ -1870,14 +1869,14 @@ def sample_dataset_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(-1).cast("bigint").alias("b"),
                 F.lit(1).cast("bigint").alias("c"),
             )
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
-    lab = d.select(
+    lab = pin(d.select(
         "doc_id",
         "source",
         F.when(F.col("lang") == "en", 1).otherwise(-1).cast("bigint").alias("y"),
-    ).localCheckpoint(eager=False)  # joined every epoch + final rollup (scan-leaf lint)
+    ))  # joined every epoch + final rollup (scan-leaf lint)
     w = feats.select("b").distinct().select("b", F.lit(0).cast("bigint").alias("w"))
     probs = []
     for _e in range(1, PCT_EPOCHS + 1):
@@ -1899,10 +1898,10 @@ def sample_dataset_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("b")
             .agg(F.sum(F.col("y") * F.col("c")).alias("d"))
         )
-        w = (
+        w = pin(
             w.join(upd, "b", "left")
-            .select("b", (F.col("w") + F.coalesce("d", F.lit(0))).alias("w"))
-            .localCheckpoint()
+            .select("b", (F.col("w") + F.coalesce("d", F.lit(0))).alias("w")),
+            eager=True,
         )
     allp = probs[0]
     for s in probs[1:]:
@@ -1998,7 +1997,7 @@ def ml_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
         .agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("rating"))
     )
-    r = r.localCheckpoint(eager=False)  # user + item steps (scan-leaf lint)
+    r = pin(r)  # user + item steps (scan-leaf lint)
     ustep = r.groupBy("u").agg(
         F.round(
             F.sum(F.col("rating").cast("decimal(38,0)")).cast("double")
@@ -2230,14 +2229,14 @@ def ml_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass, full stop; steps are free. Xu et al.'s distributed
     IRLS is exactly this sufficient-statistics collapse."""
     o = load_table(spark, sf_dir, "orders")
-    grid = (
+    grid = pin(  # grid-sized; consumed by every step
         o.select(
             (F.year("o_orderdate") - 1995).cast("bigint").alias("x"),
             F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         )
         .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()  # grid-sized; consumed by every step
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        eager=True,
     )
     beta = spark.range(1).select(
         F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1")
@@ -2422,15 +2421,15 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ensemble training error is exact integer counting on the original
     counts."""
     o = load_table(spark, sf_dir, "orders")
-    d = (
+    d = pin(  # grid-sized; every round re-reads it
         o.select(
             (F.year("o_orderdate") - 1992).cast("bigint").alias("x1"),
             (F.col("o_orderkey") % 5).cast("bigint").alias("x2"),
             F.when(F.col("o_orderstatus") == "F", 1).otherwise(-1).alias("y"),
         )
         .groupBy("x1", "x2", "y")
-        .agg(F.count(F.lit(1)).cast("double").alias("dw"))
-        .localCheckpoint()  # grid-sized; every round re-reads it
+        .agg(F.count(F.lit(1)).cast("double").alias("dw")),
+        eager=True,
     )
     grid0 = d
     dec12pos = lambda y_val: F.sum(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.scale import salted_join
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 
 SALT_BUCKETS = 16
@@ -133,7 +134,7 @@ def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_bucketed(li, t_li, "l_orderkey", n_buckets=8, sort_key="l_orderkey")
     write_bucketed(o, t_o, "o_orderkey", n_buckets=8, sort_key="o_orderkey")
     bl, bo = spark.table(t_li), spark.table(t_o)
-    out = (
+    out = pin(
         bl.hint("merge")
         .join(bo, bl.l_orderkey == bo.o_orderkey)
         .groupBy("l_orderkey")
@@ -142,8 +143,8 @@ def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_quantity").cast("decimal(28,6)")).cast("double").alias("sum_qty"),
             F.max("o_totalprice").cast("double").alias("totalprice"),
         )
-        .orderBy("l_orderkey")
-        .localCheckpoint(eager=True)
+        .orderBy("l_orderkey"),
+        eager=True,
     )
     # managed scratch tables: drop after materialization so repeated
     # harness runs don't accumulate warehouse dirs

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
 
@@ -118,7 +119,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("v_ts"))
     )
-    v = v.localCheckpoint(eager=False)  # next stage + final counts (scan-leaf lint)
+    v = pin(v)  # next stage + final counts (scan-leaf lint)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
@@ -126,7 +127,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("c_ts"))
     )
-    c = c.localCheckpoint(eager=False)  # next stage + final counts (scan-leaf lint)
+    c = pin(c)  # next stage + final counts (scan-leaf lint)
     p = (
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
 from supabase_etl_spark.streaming.source import read_events_stream, run_available_now
@@ -2466,7 +2467,7 @@ def stream_watermark_late_drop_ledger(spark: SparkSession, sf_dir: str) -> DataF
     from supabase_etl_spark.io.scratch import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    ev = ev.localCheckpoint(eager=False)  # one source scan feeds bounds + 3 writes
+    ev = pin(ev)  # one source scan feeds bounds + 3 writes
     us = F.unix_micros(F.col("ts"))
     bounds = ev.agg(
         F.min(us).alias("lo"), F.max(us).alias("hi")

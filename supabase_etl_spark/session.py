@@ -63,11 +63,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Pin-durability switch (SCALE.md §pin-durability): default mode is
-    # stock localCheckpoint; SPARK_GRAFT_PIN_MODE=reliable|none re-routes
-    # every pin site for preemptible clusters. No-op for sessions not
-    # built by this factory (the driver's vanilla session stays stock).
-    from supabase_etl_spark.pinning import install_pin_policy
-
-    install_pin_policy()
     return spark

@@ -2,17 +2,19 @@
 (VERDICT r12 task 3).
 
 tests/test_scan_leaf_lint.py audits the plan a query's CONSUMERS
-execute; a ``localCheckpoint(eager=False)`` truncates its subtree to a
+execute; a ``pinning.pin(df)`` truncates its subtree to a
 LogicalRDD, so recompute inside a pin's one-time materialization is
 invisible there. With ~110 pins landed in the r12 sweep, the un-gated
 surface moved INTO the builders — exactly where a shared sub-frame
 consumed twice within one builder would silently double the corpus
 scan at 100 TB.
 
-Mechanism: a spy wrapped around ``DataFrame.localCheckpoint`` records
-the pre-pin DataFrame (the BUILDER frame) at every pin the query
-creates while its plan is being constructed — the frames the query
-ACTUALLY checkpoints, not a re-implementation that could drift. Each
+Mechanism: ``pinning.pin`` is the engine's only pin path and, under
+the default ``local`` mode, calls ``DataFrame.localCheckpoint``; a spy
+wrapped around that method records the pre-pin DataFrame (the BUILDER
+frame) at every pin the query creates while its plan is being
+constructed — the frames the query ACTUALLY checkpoints, not a
+re-implementation that could drift. Each
 recorded builder's own physical plan is then audited with the same
 budget as the outer lint:
 
@@ -25,7 +27,7 @@ genuinely need a multi-pass sanctions the excess with one
 justification string per extra leaf in the QuerySpec's ``pin_scans``
 annotation (summed across that query's builders), mirroring ``scans``.
 
-The spy calls straight through to the real localCheckpoint, so plan
+The spy calls straight through to the real method, so plan
 construction is unchanged; with eager=False no job runs during
 recording.
 """
@@ -49,13 +51,13 @@ def pin_spy(monkeypatch):
     """Record every (builder frame, eager flag) passed to
     DataFrame.localCheckpoint during the test body."""
     # Spark 4: classic instances override localCheckpoint on the classic
-    # subclass — patch THAT class, not the dispatch base (see
-    # supabase_etl_spark/pinning.py for the same note).
+    # subclass — patch THAT class, not the dispatch base.
     try:
         from pyspark.sql.classic.dataframe import DataFrame
     except ImportError:
         from pyspark.sql import DataFrame
 
+    monkeypatch.delenv("SPARK_GRAFT_PIN_MODE", raising=False)  # local: spied
     recorded: list[DataFrame] = []
     orig = DataFrame.localCheckpoint
 

@@ -1007,15 +1007,19 @@ def test_isolation_forest_scan_only_no_joins(spark):
     """dq_isolation_forest (driver-side split tables, r9): the returned
     scoring plan must be a pure projection over the point scan — the
     per-level split stats collect as bounded rows and compile into
-    literal decision expressions, so NO join, NO window, and NO
-    checkpoint scan may appear anywhere; the top-10 must compile to
-    TakeOrderedAndProject (per-partition heaps)."""
+    literal decision expressions, so NO join and NO window may appear
+    anywhere; the top-10 must compile to TakeOrderedAndProject
+    (per-partition heaps). The point scan is EXACTLY ONE
+    ``Scan ExistingRDD``: the 3-column trainer input is pinned once so
+    the per-level passes read cached blocks instead of parquet (4.00 ->
+    3.39 s); folding the leaf-size pass into an engine-side broadcast
+    map instead ran 9.3 s against 3.4 s (OPTIMIZATION_r14.md §4)."""
     q = load_all()["dq_isolation_forest"]
     plan = _plan(q.fn(spark, SF))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan  # matches every join exec node name
     assert "WindowExec" not in plan and "Window" not in plan
-    assert "Scan ExistingRDD" not in plan  # no lineage truncation left
+    assert plan.count("Scan ExistingRDD") == 1, plan  # the trainer-input pin
     assert "TakeOrderedAndProject" in plan
 
 

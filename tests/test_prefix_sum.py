@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -52,13 +53,16 @@ def test_more_partitions_than_rows(spark):
     _check(spark, [1.0, -2.0, 3.5], 16)
 
 
-def test_chained_cumsum_over_shuffle_output(spark):
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_chained_cumsum_over_shuffle_output(spark, monkeypatch, tmp_path, mode):
     """Two distributed_cumsum calls chained over a groupBy (shuffle)
     output — the shape that exposed the re-sampled-range-boundary bug:
     without materializing the ranged frame, `local` and `offsets`
     could see different partition assignments and the second cumsum
     silently drifted. Both outputs must equal the naive
-    single-partition window."""
+    single-partition window, under every SPARK_GRAFT_PIN_MODE."""
+    monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", mode)
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -7,7 +7,7 @@ the r11 histogram-match / Good-Turing debuts with 5 and 3 leaves over
 
 The defect: a shared intermediate frame consumed by k downstream
 expressions is re-derived k times by Catalyst unless pinned with
-``localCheckpoint(eager=False)``, so the PHYSICAL plan carries k
+``pinning.pin(df)``, so the PHYSICAL plan carries k
 copies of the whole upstream lineage — visible as k ``Scan parquet``
 leaves per source. Correct at sf0.01; at 100 TB it multiplies the
 dominant cost (the corpus scan) by k.
@@ -29,11 +29,11 @@ largest value that would have caught ALL THREE historical instances
 Like the window lint, the budget is checked against the ANNOTATION
 COUNT, not prose: more leaves than sanctioned fails the build.
 
-Known blind spot: a ``localCheckpoint(eager=False)`` subtree replaces
-its lineage with a LogicalRDD, so recompute INSIDE a pin's first
-materialization is invisible here (exactly as in PLANS.md). The lint
-therefore audits the plan the query's consumers execute; hygiene
-inside pinned builders stays on the plan-audit habit.
+Known blind spot: a pinned subtree's lineage is replaced with a
+LogicalRDD, so recompute INSIDE a pin's first materialization is
+invisible here (exactly as in PLANS.md). The lint therefore audits the
+plan the query's consumers execute; tests/test_pin_interior_lint.py
+audits the pinned builders.
 """
 
 from __future__ import annotations
@@ -94,7 +94,7 @@ def test_scan_leaf_budget(spark, name):
         f"{len(set(leaves))} distinct path(s), but the budget is "
         f"{budget} ({len(spec.scans)} sanctioned by scans annotations).\n"
         "A shared intermediate is being re-derived per consumer — pin it "
-        "with localCheckpoint(eager=False) (the storage-hygiene lint "
+        "with pinning.pin(df) (the storage-hygiene lint "
         "forbids persist/cache), or — ONLY for a genuine algorithmic "
         "multi-pass over the source — add a scans justification to the "
         "@query decorator.\nLeaves:\n  " + "\n  ".join(leaves)

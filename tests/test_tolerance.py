@@ -415,3 +415,29 @@ def test_kmv_exact_mode_below_k(spark, monkeypatch):
             f"{r['measure']}: exact-mode estimate {r['estimate']} "
             f"!= ground truth {r['exact']}"
         )
+
+
+def test_kmv_missing_event_class_returns_zero_rows(spark, tmp_path):
+    """agg_kmv_theta_sketch over events with no `purchase` rows: there
+    is no purchase sketch to compare against, so the query returns zero
+    rows, as the oracle's cross join of the two sketches does (not one
+    row of NULL estimates)."""
+    import pathlib
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from scripts.check_correctness import run_duckdb
+
+    src = pathlib.Path(SF)
+    for f in src.glob("*.parquet"):
+        if f.name != "events.parquet":
+            (tmp_path / f.name).symlink_to(f)
+    ev = pq.read_table(src / "events.parquet")
+    pq.write_table(
+        ev.filter(pc.not_equal(ev["event_type"], "purchase")),
+        tmp_path / "events.parquet",
+    )
+    spec = REGISTRY["agg_kmv_theta_sketch"]
+    assert spec.fn(spark, str(tmp_path)).collect() == []
+    assert run_duckdb(spec.oracle, str(tmp_path))[1] == []
