@@ -97,6 +97,31 @@ STAGE_FIXED_REF = 0.06
 FLOOR_QUIET_REF = 0.017
 
 
+def materialize(df) -> None:
+    """Run ``df`` through a noop-format write: evaluates EVERY output
+    column and the final sort without collecting to the driver. A
+    count() would let Catalyst prune unreferenced projections and
+    eliminate the trailing orderBy (EliminateSorts), under-measuring
+    map-heavy queries (ADVICE r1)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def stage_count(spark, group: str) -> int:
+    """DISTINCT stage launches observed for a job group (includes
+    every driver-side collect a query makes while building its
+    plan). Distinct because AQE submits one job per materialized
+    query stage and each job's stageIds re-lists its (skipped)
+    ancestors — counting duplicates would over-subtract the floor
+    and flatter Spark in ratio_stage_adj."""
+    tracker = spark.sparkContext.statusTracker()
+    sids: set[int] = set()
+    for jid in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            sids.update(info.stageIds)
+    return len(sids)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -122,14 +147,6 @@ def main() -> None:
     # populates the codegen cache so the measured run is steady-state
     # compute, as a long-lived cluster would see.
     smoke_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-
-    def materialize(df) -> None:
-        # noop-format write: evaluates EVERY output column and the final
-        # sort without collecting to the driver. A count() here would let
-        # Catalyst prune unreferenced projections and eliminate the
-        # trailing orderBy (EliminateSorts), under-measuring map-heavy
-        # queries (ADVICE r1).
-        df.write.format("noop").mode("overwrite").save()
 
     # HASH-BASIS POLICY (r11, ADVICE r10): the ratio maps the gate reads
     # are strictly apples-to-apples — every ratio-basis row times the
@@ -197,22 +214,6 @@ def main() -> None:
         dt = time.time() - t0
         bcast_floor = dt if bcast_floor is None else min(bcast_floor, dt)
     bcast_floor = max(bcast_floor - floor, 0.0)
-
-    tracker = spark.sparkContext.statusTracker()
-
-    def stage_count(group: str) -> int:
-        """DISTINCT stage launches observed for a job group (includes
-        every driver-side collect a query makes while building its
-        plan). Distinct because AQE submits one job per materialized
-        query stage and each job's stageIds re-lists its (skipped)
-        ancestors — counting duplicates would over-subtract the floor
-        and flatter Spark in ratio_stage_adj."""
-        sids: set[int] = set()
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info is not None:
-                sids.update(info.stageIds)
-        return len(sids)
 
     # INTERLEAVED ORACLE TIMING (r13, VERDICT r12 task 8): oracle_total
     # swung ±15% between sessions (97.8s r12 vs 126.3s r11) when the
@@ -282,7 +283,7 @@ def main() -> None:
             dt = time.time() - t0
             spark.sparkContext.setJobGroup("bench:idle", "")
             best = dt if best is None else min(best, dt)
-            stages[name] = stage_count(group)
+            stages[name] = stage_count(spark, group)
         timings[name] = round(best, 3)
         q_measured_t[name] = time.time()
         total += best

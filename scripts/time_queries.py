@@ -27,6 +27,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
+    from bench import materialize, stage_count
     from supabase_etl_spark.io.readers import TABLE_NAMES, load_table
     from supabase_etl_spark.queries import load_all
     from supabase_etl_spark.session import get_spark
@@ -37,19 +38,6 @@ def main() -> None:
     for t in TABLE_NAMES:
         load_table(spark, args.sf, t).count()
     smoke_dir = os.path.join(os.path.dirname(args.sf.rstrip("/")), "sf0.001")
-
-    def materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    tracker = spark.sparkContext.statusTracker()
-
-    def stage_count(group: str) -> int:
-        sids: set[int] = set()
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info is not None:
-                sids.update(info.stageIds)
-        return len(sids)
 
     for name in args.names:
         spec = registry[name]
@@ -77,7 +65,7 @@ def main() -> None:
             dt = time.time() - t0
             spark.sparkContext.setJobGroup("time:idle", "")
             walls.append(round(dt, 3))
-            rep_stages.append(stage_count(group))
+            rep_stages.append(stage_count(spark, group))
             best = dt if best is None else min(best, dt)
         if best is None:
             print(f"{name}: plan captured", flush=True)

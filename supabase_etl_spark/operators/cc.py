@@ -1,28 +1,37 @@
-"""Connected components by large-star/small-star alternation —
-O(log² n) rounds (Kiveris et al. 2014, "Connected Components in
-MapReduce and Beyond"; observed ~log n).
+"""Connected components: the engine's two CC algorithms, both run by
+``pinning.fixpoint``.
 
-The repo's other CC (queries/llm_dedup._min_label_fixpoint) propagates
-min labels one hop per round: perfect for near-clique dedup graphs
-(diameter 2-3), linear-round on long chains. Naive min-label CONTRACTION
-is no better on paths — it strips one node per round (a 200-chain
-measured ~200 rounds). Star alternation is the proven fix:
+* ``connected_components`` — large-star/small-star alternation,
+  O(log² n) rounds (Kiveris et al. 2014, "Connected Components in
+  MapReduce and Beyond"; observed ~log n). A 200-chain converges in 9
+  rounds, a 64-ring in 7, cliques in 2.
+* ``_min_label_fixpoint_members`` — min-label propagation over the
+  pair graph's endpoints, one hop per round: rounds = component
+  diameter, so near-clique dedup graphs (diameter 2-3) finish in a
+  batch or two, while a long chain needs one round per hop.
 
-* large-star: every node u routes its LARGER neighbors to m(u) =
-  min(N(u) ∪ {u}) — long tails fold toward minima without breaking
-  connectivity;
-* small-star: every node u re-attaches its smaller-or-equal neighbors
-  (and itself) to the minimum among them — flattening the trees built
-  by large-star into stars.
+Both stay because each wins on its own input. A/B on every caller,
+4 cores, sf0.01, median of 3 noop-write runs (wall, distinct stages);
+a star caller runs min-label as member labels plus a broadcast attach,
+a min-label caller runs star over the pair endpoints:
 
-At the fixpoint every component is a single star centered at its
-minimum node, so the label is just least(u, min neighbor). A 200-chain
-converges in 9 rounds, a 64-ring in 7, cliques in 2.
+    caller (algorithm it uses)                      min-label     star
+    dedup_clusters (min-label)                      1.09 s, 46    1.78 s, 67
+    corpus_curate (min-label)                       1.05 s, 45    1.70 s, 66
+    split_leakage_safe (min-label)                  1.43 s, 66    1.98 s, 89
+    dedup_pipeline_end_to_end (min-label)           1.39 s, 50    2.16 s, 72
+    events_identity_stitching (star)                1.28 s, 77    1.50 s, 87
+    multimodal_audio_dedup_pipeline_e2e (star)      1.40 s, 43    1.22 s, 40
+    multimodal_video_dedup_pipeline_e2e (star)      1.16 s, 43    1.17 s, 40
+    multimodal_dedup_pipeline_e2e (star)            3.14 s, 153   2.85 s, 114
+    embedding_dbscan_grid (star)                    no fixpoint   4.01 s, 145
+                                                    in 20 hops
+    200-node chain (tests)                          199 hops      9 rounds
 
-Per round: two groupBy-min passes + joins, all edge-sized shuffles;
-an eager pin truncates lineage so round plans stay constant-depth,
-and the driver loop iterates over plans, never rows (the convergence
-check — edge set unchanged — is the loop condition).
+Near-clique dedup graphs favour min-label: a round or two of one
+exchange each. Long chains need star: only it converges on
+embedding_dbscan_grid. Moving events_identity_stitching to min-label
+would be a performance change with its own claim; it is not made here.
 """
 
 from __future__ import annotations
@@ -30,14 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from supabase_etl_spark.pinning import pin
+from supabase_etl_spark.pinning import fixpoint, pin
 
 CC_MAX_ROUNDS = 60  # ~log²(n) needed in theory, ~log n observed
+MAX_PROPAGATION_ROUNDS = 20  # min-label hops; fixpoint runs 2 per round
 
 
 def _large_star(e: DataFrame) -> DataFrame:
     """edges (a<b) -> large-star edges (m(u), v) for every directed
-    (u, v) with v > u, where m(u) = min over u's closed neighborhood."""
+    (u, v) with v > u, where m(u) = min over u's closed neighborhood.
+    ``chg`` flags an edge whose endpoint moved (m(u) != u)."""
     directed = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -45,32 +56,38 @@ def _large_star(e: DataFrame) -> DataFrame:
     return (
         directed.join(m, "u")
         .filter(F.col("v") > F.col("u"))
-        .select(F.col("m").alias("a"), F.col("v").alias("b"))  # m <= u < v
-        .filter(F.col("a") != F.col("b"))
-        # no .distinct() here (r14): the output feeds _small_star, whose
+        .select(
+            F.col("m").alias("a"),  # m <= u < v
+            F.col("v").alias("b"),
+            (F.col("m") != F.col("u")).alias("chg"),
+        )
+        # no dedup here (r14): the output feeds _small_star, whose
         # groupBy-min absorbs duplicates map-side and whose own final
-        # distinct dedups the round — the extra exchange bought nothing
+        # aggregate dedups the round — the extra exchange bought nothing
         # (A/B on multimodal_video_dedup_pipeline_e2e: 2.77->2.34 s)
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    """edges (a<b) -> small-star edges: every node u re-attaches its
-    smaller neighbors and itself to mn(u) = min of those neighbors."""
+    """edges (a<b, chg) -> small-star edges: every node u re-attaches
+    its smaller neighbors and itself to mn(u) = min of those neighbors.
+    Each input edge (v, u) maps to one output edge: a re-attached
+    (mn(u), v), flagged, or for v = mn(u) the self-edge (mn(u), u),
+    which keeps the input's flag so a change made by _large_star is
+    not lost when small-star leaves the edge where it is."""
     # directed (u, v) with v < u: for pairs a<b that's (b, a)
-    small = e.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    small = e.select(F.col("b").alias("u"), F.col("a").alias("v"), "chg")
     mn = small.groupBy("u").agg(F.min("v").alias("mn"))
-    reattached = (
-        small.join(mn, "u")
-        .filter(F.col("v") != F.col("mn"))
-        .select(F.col("mn").alias("a"), F.col("v").alias("b"))
-    )
-    selfedge = mn.select(F.col("mn").alias("a"), F.col("u").alias("b"))
+    stays = F.col("v") == F.col("mn")
     return (
-        reattached.unionByName(selfedge)
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        small.join(mn, "u")
+        .select(
+            F.col("mn").alias("a"),  # mn < u and mn <= v: a < b
+            F.when(stays, F.col("u")).otherwise(F.col("v")).alias("b"),
+            (F.col("chg") | ~stays).alias("chg"),
+        )
+        .groupBy("a", "b")
+        .agg(F.max("chg").alias("chg"))
     )
 
 
@@ -80,9 +97,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     themselves). ``nodes`` must cover every endpoint; undirected input
     (each edge listed once in either direction).
 
-    Raises RuntimeError if the alternation has not reached its star
-    fixpoint within CC_MAX_ROUNDS — an unconverged result would
-    silently mislabel components."""
+    A round that flags no edge left the edge set unchanged: every
+    component is then one star centered at its minimum. Raises
+    RuntimeError if that takes more than CC_MAX_ROUNDS rounds."""
     e = pin(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -90,40 +107,117 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    for _ in range(CC_MAX_ROUNDS):
-        # eager round pin (r14, the LPA/fixpoint finding): a LAZY pin
-        # here defers its final stage into the next consumer, and every
-        # nested AQE materialization job re-ran the deferred upstream
-        # chain with fresh stage ids — observed as 3->7-stage 1-task
-        # recompute chains per round. Eager materializes the round once,
-        # cleanly; the convergence aggregate then reads cached blocks
-        # (multimodal_video e2e A/B: 4.51->2.77 s, 54->45 stages).
-        new_e = pin(_small_star(_large_star(e)), eager=True)
-        # fixpoint: the edge set is unchanged. r13 (guide §1.2): the old
-        # check cost THREE sequential actions per round (eager pin +
-        # count + exceptAll count); both sides are deduped sorted pairs
-        # (sets), so set equality is ONE tagged aggregate — +1/-1 per
-        # side, any group summing non-zero is a difference.
-        diff = (
-            new_e.select("a", "b", F.lit(1).alias("t"))
-            .unionByName(e.select("a", "b", F.lit(-1).alias("t")))
-            .groupBy("a", "b")
-            .agg(F.sum("t").alias("d"))
-            .filter(F.col("d") != 0)
-        )
-        if diff.limit(1).count() == 0:
-            # fixpoint graph is one star per component, centered at the
-            # component min: label = least(self, min neighbor)
-            directed = new_e.select(
-                F.col("a").alias("node"), F.col("b").alias("nbr")
-            ).unionByName(new_e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-            lbl = directed.groupBy("node").agg(
-                F.least(F.min("nbr"), F.first("node")).alias("component")
-            )
-            return nodes.join(lbl, "node", "left").select(
-                "node", F.coalesce("component", "node").alias("component")
-            )
-        e = new_e
-    raise RuntimeError(
-        f"connected_components: star alternation not converged in {CC_MAX_ROUNDS} rounds"
+    e = fixpoint(
+        e,
+        lambda e: _small_star(_large_star(e)),
+        max_rounds=CC_MAX_ROUNDS,
+        what="connected_components (star alternation)",
     )
+    # one star per component, centered at the component min:
+    # label = least(self, min neighbor)
+    directed = e.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
+        e.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+    )
+    lbl = directed.groupBy("node").agg(
+        F.least(F.min("nbr"), F.first("node")).alias("component")
+    )
+    return nodes.join(lbl, "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component")
+    )
+
+
+def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
+    """Connected-component labels for the EDGE-ENDPOINT vertices of an
+    undirected pair graph, by min-label propagation (labels start as
+    doc_id; each round every node takes the min of its own and its
+    neighbors' labels until a round changes nothing).
+
+    r13 optimization (guide §2.3/§2.4 — shuffle fewer bytes, remove
+    shuffles outright): the fixpoint only ever CHANGES labels of
+    vertices that touch an edge, so the iteration state is the member
+    set (≤ 2·|pairs| rows), never the corpus — the previous shape
+    materialized a full-corpus label table per round plus a
+    corpus-sized convergence JOIN per round. Convergence is a `chg`
+    flag computed IN the propagation select (labels only decrease, so
+    changed ⟺ nbr_min < cluster_id).
+
+    r14 (VERDICT r13 task 1 — stage-launch floor, guide §2.4):
+    a pin preserves ``outputPartitioning`` into the
+    LogicalRDD, so the edge list is pinned EAGERLY pre-hashed on
+    ``src`` and the label state stays hashed on ``doc_id`` (the
+    groupBy(dst→doc_id) exchange output feeds the left join and the
+    next round directly). Each propagation round then needs exactly
+    ONE exchange — the neighbor-min aggregate — where the r13 shape
+    re-shuffled both join sides every round; there is no pin inside a
+    step (a 2-round lineage is shallow, and one AQE execution reuses
+    its own exchanges where nested lazy pins re-ran upstream chains —
+    the LPA r14 finding). Measured on the two heaviest consumers
+    (sf0.1, quiet epoch, best-of-3): dedup_pipeline 3.65→2.92 s
+    (58→50 stages), corpus_curate 3.60→3.18 s (49→45).
+
+    Raises RuntimeError if the fixpoint is not reached within
+    MAX_PROPAGATION_ROUNDS — a silently-unconverged result would emit
+    wrong cluster_id/is_canonical with no other symptom (a high-diameter
+    chain component, e.g. a boilerplate gradient, is exactly the input
+    that would need more rounds)."""
+    edges = pin(
+        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
+        .unionByName(pairs.select(F.col("idb").alias("src"), F.col("ida").alias("dst")))
+        .distinct()
+        .repartition("src"),
+        eager=True,
+    )
+    # symmetric edge list ⇒ src alone covers every endpoint
+    labels = pin(
+        edges.select(F.col("src").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.col("doc_id").alias("cluster_id"))
+        .repartition("doc_id"),
+        eager=True,
+    )
+
+    def two_rounds(labels: DataFrame) -> DataFrame:
+        # TWO lazy rounds per convergence count: near-dup components
+        # are near-cliques (diameter ~2 — sf0.1 measures 2 rounds
+        # total), so batching halves the sequential action count, and
+        # an extra lazy round over the tiny member table is cheaper
+        # than a job launch. Only the LAST round's flags count: a round
+        # with 0 changes is the fixpoint no matter what the first did.
+        for _ in range(2):
+            neighbor_min = (
+                edges.join(labels, edges.src == labels.doc_id)
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(F.min("cluster_id").alias("nbr_min"))
+            )
+            nbr = F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+            labels = labels.join(neighbor_min, "doc_id", "left").select(
+                "doc_id",
+                F.least(F.col("cluster_id"), nbr).alias("cluster_id"),
+                (nbr < F.col("cluster_id")).alias("chg"),
+            )
+        return labels
+
+    return fixpoint(
+        labels,
+        two_rounds,
+        max_rounds=(MAX_PROPAGATION_ROUNDS + 1) // 2,
+        what=f"min-label propagation ({MAX_PROPAGATION_ROUNDS} hops, 2 per round)",
+    )
+
+
+def _attach_cluster_labels(d: DataFrame, members: DataFrame) -> DataFrame:
+    """Full-corpus (doc_id, cluster_id) from member-only labels: docs
+    outside every edge keep their own id. The member table is bounded
+    by 2·|pairs| (near-dup membership is the minority by the dedup
+    pipeline's own premise), so it BROADCASTS — the corpus crosses no
+    exchange to pick up its label."""
+    return d.select("doc_id").join(F.broadcast(members), "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+    )
+
+
+def _min_label_fixpoint(d: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Full-corpus connected-component labels (doc_id, cluster_id) —
+    the member-only fixpoint above plus the broadcast label attach."""
+    return _attach_cluster_labels(d, _min_label_fixpoint_members(pairs))

@@ -25,11 +25,26 @@ each call, for every session (SCALE.md §pin-durability):
 Both modes materialize, so results are identical under either. There
 is no unpinned mode: the correctness pins above return wrong values
 without one.
+
+Iteration policy. Every loop that runs until its state stops changing
+(star-alternation and min-label connected components, Bellman-Ford;
+operators/cc.py, queries/analytics.py) goes through ``fixpoint``: each
+step's output is pinned LAZILY and one ``filter("chg").count()`` both
+materializes that pin and decides convergence, so a round costs one
+action. An eager pin would cost a second one: its materialization job
+plus a separate convergence job over the cached blocks. The next round
+reads the pinned blocks, so the plan of every round, and of the
+returned frame, is as deep as one step for any round count. A loop
+that has not converged within its round cap raises instead of
+returning a silently wrong state. Loops with a fixed round count (LPA,
+k-core, k-truss, k-means, ...) have no convergence check and stay
+hand-written: their oracles replay exactly that count.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -54,3 +69,30 @@ def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Apply ``step`` until a round changes no row; return that state.
+
+    ``step(state)`` returns the next state plus a boolean ``chg``
+    column, true on every row the round changed. The returned frame
+    has the state's columns without ``chg``. Raises RuntimeError,
+    naming ``what`` and the rows still changing, when ``max_rounds``
+    rounds pass without converging."""
+    changed = 0
+    for _ in range(max_rounds):
+        nxt = pin(step(state))
+        changed = nxt.filter("chg").count()
+        state = nxt.drop("chg")
+        if changed == 0:
+            return state
+    raise RuntimeError(
+        f"{what}: not converged in {max_rounds} rounds "
+        f"({changed} rows still changing)"
+    )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators.joins import broadcast_bounded
-from supabase_etl_spark.pinning import pin
+from supabase_etl_spark.pinning import fixpoint, pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
 
@@ -2048,9 +2048,9 @@ def graph_kcore(
     extraction used for spam/bot rings and community cores
     (Matula–Beck peeling, distributed as in Montresor et al.). Four
     fixed rounds are registered (parameterized ``rounds``; a true-core
-    caller loops to fixpoint the way llm_dedup._min_label_fixpoint
-    does) and the oracle replays the identical unrolled peel — the
-    LPA precedent for iteration-bounded graph ops.
+    caller would run the peel through pinning.fixpoint, flagging the
+    vertices a round drops) and the oracle replays the identical
+    unrolled peel — the LPA precedent for iteration-bounded graph ops.
 
     Per round: one degree agg + two semi-joins restricting the
     symmetric edge list — Pregel's message shape, all hash-keyed on
@@ -2576,12 +2576,12 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer weights (w % 7 + 1 from the lineitem edge counts — exact
     arithmetic, no float drift across engines). Each round is one
     equi-join (current dists x edges) plus one min-aggregation — the
-    Pregel shape shared with graph_pagerank/_min_label_fixpoint; the
-    driver loop iterates over PLANS with per-round pin
-    truncation and stops as soon as a round relaxes nothing (graph
-    diameter rounds in practice, |V|-1 worst case, RuntimeError past
-    the bound rather than a silently wrong fixpoint). The oracle is
-    the same recurrence as a hop-bounded recursive CTE. At 100 TB:
+    Pregel shape shared with graph_pagerank and min-label CC; the
+    rounds run through pinning.fixpoint, which stops as soon as a
+    round relaxes nothing (graph diameter rounds in practice, |V|-1
+    worst case, RuntimeError past the bound rather than a silently
+    wrong fixpoint). The oracle is the same recurrence as a
+    hop-bounded recursive CTE. At 100 TB:
     nodes/edges shuffle on their keys, nothing collects; integer
     distances make the fixpoint engine-order-independent."""
     n1 = F.broadcast(
@@ -2624,38 +2624,24 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=True,
     )
-    for _ in range(SSSP_MAX_ROUNDS):
-        relaxed = (
+
+    def relax(dist: DataFrame) -> DataFrame:
+        cand = (
             dist.filter(F.col("dist").isNotNull())
             .join(edges, dist.v == edges.src)
             .groupBy(F.col("dst").alias("v"))
             .agg(F.min(F.col("dist") + F.col("wi")).alias("cand"))
         )
-        nxt = pin(
-            dist.join(relaxed, "v", "left")
-            .select(
-                "v",
-                F.least(
-                    F.coalesce("dist", F.lit(None).cast("bigint")),
-                    F.col("cand"),
-                ).alias("dist"),
-            ),
-            eager=True,
+        return dist.join(cand, "v", "left").select(
+            "v",
+            F.least("dist", "cand").alias("dist"),
+            (
+                (F.col("cand") < F.col("dist"))
+                | (F.col("dist").isNull() & F.col("cand").isNotNull())
+            ).alias("chg"),
         )
-        n_changed = (
-            nxt.join(dist.select("v", F.col("dist").alias("old")), "v")
-            .filter(~F.col("dist").eqNullSafe(F.col("old")))
-            .count()
-        )
-        dist = nxt
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"Bellman-Ford did not converge within {SSSP_MAX_ROUNDS} rounds "
-            "(negative-cycle-like non-convergence is impossible with positive "
-            "weights; this indicates a plan bug)"
-        )
+
+    dist = fixpoint(dist, relax, max_rounds=SSSP_MAX_ROUNDS, what="Bellman-Ford")
     return dist.select(F.col("v").alias("nation"), "dist").orderBy("nation")
 
 

@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators import dedup as D
+from supabase_etl_spark.operators.cc import (
+    _min_label_fixpoint,
+    _min_label_fixpoint_members,
+)
 from supabase_etl_spark.operators.text import tokens
 from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import llm_similarity as S
@@ -517,127 +521,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ida", "idb", "cos_sim")
         .orderBy("ida", "idb")
     )
-
-
-MAX_PROPAGATION_ROUNDS = 20
-
-
-def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
-    """Connected-component labels for the EDGE-ENDPOINT vertices of an
-    undirected pair graph, by min-label propagation (labels start as
-    doc_id; each round every node takes the min of its own and its
-    neighbors' labels until a round changes nothing).
-
-    r13 optimization (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    shuffles outright): the fixpoint only ever CHANGES labels of
-    vertices that touch an edge, so the iteration state is the member
-    set (≤ 2·|pairs| rows), never the corpus — the previous shape
-    materialized a full-corpus label table per round plus a
-    corpus-sized convergence JOIN per round. Convergence is now a
-    `chg` flag computed IN the propagation select (labels only
-    decrease, so changed ⟺ nbr_min < cluster_id) and counted with one
-    filter scan of the round's pinned frame — no join.
-
-    r14 (VERDICT r13 task 1 — stage-launch floor, guide §2.4):
-    a pin preserves ``outputPartitioning`` into the
-    LogicalRDD, so the edge list is pinned EAGERLY pre-hashed on
-    ``src`` and the label state stays hashed on ``doc_id`` (the
-    groupBy(dst→doc_id) exchange output feeds the left join and the
-    next round directly). Each propagation round then needs exactly
-    ONE exchange — the neighbor-min aggregate — where the r13 shape
-    re-shuffled both join sides every round; the per-batch inner pin
-    is gone too (a 2-round lineage is shallow, and one AQE execution
-    reuses its own exchanges where nested lazy pins re-ran upstream
-    chains — the LPA r14 finding). Measured on the two heaviest
-    consumers (sf0.1, quiet epoch, best-of-3): dedup_pipeline
-    3.65→2.92 s (58→50 stages), corpus_curate 3.60→3.18 s (49→45).
-
-    Raises RuntimeError if the fixpoint is not reached within
-    MAX_PROPAGATION_ROUNDS — a silently-unconverged result would emit
-    wrong cluster_id/is_canonical with no other symptom (a high-diameter
-    chain component, e.g. a boilerplate gradient, is exactly the input
-    that would need more rounds)."""
-    edges = pin(
-        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
-        .unionByName(pairs.select(F.col("idb").alias("src"), F.col("ida").alias("dst")))
-        .distinct()
-        .repartition("src"),
-        eager=True,
-    )
-    # symmetric edge list ⇒ src alone covers every endpoint
-    labels = pin(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id"))
-        .repartition("doc_id"),
-        eager=True,
-    )
-    changed = -1
-    rounds = 0
-    while rounds < MAX_PROPAGATION_ROUNDS:
-        # propagate TWO lazy rounds per convergence count: near-dup
-        # components are near-cliques (diameter ~2 — sf0.1 measures 2
-        # rounds total), so batching halves the sequential action
-        # count, and an extra lazy round over the tiny member table is
-        # cheaper than a job launch. Convergence needs only the LAST
-        # round's change count: a round with 0 changes is the fixpoint
-        # no matter what earlier rounds did.
-        new_labels = labels
-        for _ in range(2):
-            if rounds >= MAX_PROPAGATION_ROUNDS:
-                break
-            neighbor_min = (
-                edges.join(new_labels, edges.src == new_labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            new_labels = (
-                new_labels.join(neighbor_min, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("cluster_id"),
-                        F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                    ).alias("cluster_id"),
-                    (
-                        F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                        < F.col("cluster_id")
-                    ).alias("chg"),
-                )
-            )
-            rounds += 1
-        # one pin per BATCH (r14); the convergence count materializes it
-        new_labels = pin(new_labels)
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"min-label propagation did not converge in "
-            f"{MAX_PROPAGATION_ROUNDS} rounds ({changed} labels still "
-            "changing) — raise MAX_PROPAGATION_ROUNDS or pre-split the "
-            "component"
-        )
-    return labels
-
-
-def _attach_cluster_labels(d: DataFrame, members: DataFrame) -> DataFrame:
-    """Full-corpus (doc_id, cluster_id) from member-only labels: docs
-    outside every edge keep their own id. The member table is bounded
-    by 2·|pairs| (near-dup membership is the minority by the dedup
-    pipeline's own premise), so it BROADCASTS — the corpus crosses no
-    exchange to pick up its label."""
-    return d.select("doc_id").join(F.broadcast(members), "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-    )
-
-
-def _min_label_fixpoint(d: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Full-corpus connected-component labels (doc_id, cluster_id) —
-    the member-only fixpoint above plus the broadcast label attach."""
-    return _attach_cluster_labels(d, _min_label_fixpoint_members(pairs))
 
 
 @query(
@@ -1825,7 +1708,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate documents to DIFFERENT splits (test answers leak
     into train), so the split key must be the near-dup CLUSTER id.
     Pipeline: Jaccard pair graph → min-label connected components
-    (shared `_min_label_fixpoint`) → deterministic LCG bucket on
+    (`operators.cc._min_label_fixpoint`) → deterministic LCG bucket on
     cluster_id → 80/10/10. The output self-certifies: leaked_pairs
     counts near-dup pairs straddling splits, computed from the data
     (not asserted) — zero by construction since both endpoints carry

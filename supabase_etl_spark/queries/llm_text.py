@@ -1269,6 +1269,60 @@ def text_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_ROUNDS = 8
 
 
+def _bpe_merge(syms, lhs: str, rhs: str):
+    """Apply one merge rule to an array<string> column: a JVM-side
+    left-to-right `aggregate` fold, greedy and non-overlapping (the
+    BPE contract: 'aaa' with rule a+a -> ['aa','a'])."""
+    lc, rc, mc = F.lit(lhs), F.lit(rhs), F.lit(lhs + rhs)
+    return F.aggregate(
+        syms,
+        F.expr("cast(array() as array<string>)"),
+        lambda acc, x: F.when(
+            (F.size(acc) > 0) & (F.element_at(acc, -1) == lc) & (x == rc),
+            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(mc)),
+        ).otherwise(F.concat(acc, F.array(x))),
+    )
+
+
+def _learn_bpe_merges(d: DataFrame) -> list[tuple[str, str, int]]:
+    """The first BPE_TRAIN_ROUNDS merge rules (lhs, rhs, pair count)
+    learned over ``d.text``, in rank order. One corpus scan builds the
+    word-frequency table; every round then runs on that vocab-sized
+    table, pinned per round so its lineage stays one round deep, and
+    collects exactly one row (the argmax, ties broken lexically)."""
+    words = (
+        d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    cur = pin(words.select("freq", F.split("w", "").alias("syms")), eager=True)
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(BPE_TRAIN_ROUNDS):
+        pairs = cur.select(
+            "freq",
+            F.expr(
+                "transform(slice(syms, 1, size(syms) - 1),"
+                " (x, i) -> struct(x AS l, syms[i + 1] AS r))"
+            ).alias("prs"),
+        ).select(F.explode("prs").alias("p"), "freq")
+        best = (
+            pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            .agg(F.sum("freq").cast("bigint").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
+            .limit(1)
+            .collect()  # bounded: exactly one argmax row per round
+        )
+        if not best:
+            break
+        lhs, rhs = best[0]["l"], best[0]["r"]
+        merges.append((lhs, rhs, int(best[0]["cnt"])))
+        cur = pin(
+            cur.select("freq", _bpe_merge(F.col("syms"), lhs, rhs).alias("syms")),
+            eager=True,
+        )
+    return merges
+
+
 @query("text_bpe_train_merges", tags=("llm", "text", "iterative"))
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training: learn the first 8 merge
@@ -1294,48 +1348,10 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's input depends on the previous argmax) — rows-only in the
     gate, with a pure-Python golden-reference parity test at sf0.001
     (tests/test_text_ops.py)."""
-    d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    cur = pin(words.select("freq", F.split("w", "").alias("syms")), eager=True)
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, BPE_TRAIN_ROUNDS + 1):
-        pairs = cur.select(
-            "freq",
-            F.expr(
-                "transform(slice(syms, 1, size(syms) - 1),"
-                " (x, i) -> struct(x AS l, syms[i + 1] AS r))"
-            ).alias("prs"),
-        ).select(F.explode("prs").alias("p"), "freq")
-        best = (
-            pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").cast("bigint").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()  # bounded: exactly one argmax row per round
-        )
-        if not best:
-            break
-        b = best[0]
-        merged = b["l"] + b["r"]
-        merges.append((rank, b["l"], b["r"], merged, int(b["cnt"])))
-        lc, rc, mc = F.lit(b["l"]), F.lit(b["r"]), F.lit(merged)
-        folded = F.aggregate(
-            F.col("syms"),
-            F.expr("cast(array() as array<string>)"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0) & (F.element_at(acc, -1) == lc) & (x == rc),
-                F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(mc)),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        # the pin keeps per-round lineage constant-depth: each
-        # round materializes only the vocab-sized symbol table.
-        cur = pin(cur.select("freq", folded.alias("syms")), eager=True)
+    merges = _learn_bpe_merges(load_table(spark, sf_dir, "documents"))
+    rows = [(r, lhs, rhs, lhs + rhs, cnt) for r, (lhs, rhs, cnt) in enumerate(merges, 1)]
     return spark.createDataFrame(
-        merges, schema="rank INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT"
+        rows, schema="rank INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT"
     ).orderBy("rank")
 
 
@@ -1659,67 +1675,14 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer's golden-parity test plus the encode unit test
     (tests/test_text_ops.py)."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    cur = pin(words.select("freq", F.split("w", "").alias("syms")), eager=True)
-    merges: list[tuple[str, str, str]] = []
-    for _rank in range(1, BPE_TRAIN_ROUNDS + 1):
-        pairs = cur.select(
-            "freq",
-            F.expr(
-                "transform(slice(syms, 1, size(syms) - 1),"
-                " (x, i) -> struct(x AS l, syms[i + 1] AS r))"
-            ).alias("prs"),
-        ).select(F.explode("prs").alias("p"), "freq")
-        best = (
-            pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").cast("bigint").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()  # bounded: one argmax row per round
-        )
-        if not best:
-            break
-        b = best[0]
-        merges.append((b["l"], b["r"], b["l"] + b["r"]))
-
-        def fold(lhs: str, rhs: str, merged: str):
-            lc, rc, mc = F.lit(lhs), F.lit(rhs), F.lit(merged)
-            return lambda col: F.aggregate(
-                col,
-                F.expr("cast(array() as array<string>)"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0) & (F.element_at(acc, -1) == lc) & (x == rc),
-                    F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(mc)),
-                ).otherwise(F.concat(acc, F.array(x))),
-            )
-
-        cur = pin(cur.select(
-            "freq", fold(b["l"], b["r"], b["l"] + b["r"])(F.col("syms")).alias("syms")
-        ), eager=True)
+    merges = _learn_bpe_merges(d)
     # encode: per document token, chars -> chained folds in rank order
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("w")).select(
         "doc_id", F.split("w", "").alias("syms")
     )
-    def apply_merge(col, lhs: str, rhs: str, merged: str):
-        # closure-capture factory: a default-arg lambda would change the
-        # HOF arity Spark inspects (same trap noted at lsh_bucket)
-        lc, rc, mc = F.lit(lhs), F.lit(rhs), F.lit(merged)
-        return F.aggregate(
-            col,
-            F.expr("cast(array() as array<string>)"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0) & (F.element_at(acc, -1) == lc) & (x == rc),
-                F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(mc)),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-
     enc = F.col("syms")
-    for lhs, rhs, merged in merges:
-        enc = apply_merge(enc, lhs, rhs, merged)
+    for lhs, rhs, _cnt in merges:
+        enc = _bpe_merge(enc, lhs, rhs)
     return (
         toks.select("doc_id", F.size("syms").alias("n_chars"), F.size(enc).alias("n_bpe"))
         .groupBy("doc_id")

@@ -118,7 +118,7 @@ def test_min_label_fixpoint_members_matches_bruteforce(spark):
     broadcast attach must label every doc with its component's min id —
     including chain components (diameter > batch size) and isolated
     docs (own id), and an empty pair graph must short-circuit."""
-    from supabase_etl_spark.queries.llm_dedup import (
+    from supabase_etl_spark.operators.cc import (
         _min_label_fixpoint,
         _min_label_fixpoint_members,
     )
