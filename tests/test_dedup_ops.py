@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
@@ -114,14 +115,13 @@ def test_exact_substring_hash_paths_agree(spark, monkeypatch):
 
 
 def test_min_label_fixpoint_members_matches_bruteforce(spark):
-    """r13 fixpoint rewrite: member-only min-label propagation plus the
+    """r13 fixpoint rewrite: member-only min-label labels plus the
     broadcast attach must label every doc with its component's min id —
     including chain components (diameter > batch size) and isolated
-    docs (own id), and an empty pair graph must short-circuit."""
-    from supabase_etl_spark.operators.cc import (
-        _min_label_fixpoint,
-        _min_label_fixpoint_members,
-    )
+    docs (own id), and an empty pair graph must short-circuit. Checked
+    on the driver union-find and, with the edge cap at 0, on the
+    distributed propagation fixpoint."""
+    from supabase_etl_spark.operators import cc
 
     # graph: clique {1,2,3}, chain 10-11-12-13-14 (diameter 4 — crosses
     # the 2-round count batches), pair {20,21}; isolated: 30, 31
@@ -133,20 +133,21 @@ def test_min_label_fixpoint_members_matches_bruteforce(spark):
         [(i,) for i in (1, 2, 3, 10, 11, 12, 13, 14, 20, 21, 30, 31)],
         "doc_id bigint",
     )
-    got = {(r["doc_id"], r["cluster_id"]) for r in _min_label_fixpoint(d, pairs).collect()}
     want = {
         (1, 1), (2, 1), (3, 1),
         (10, 10), (11, 10), (12, 10), (13, 10), (14, 10),
         (20, 20), (21, 20),
         (30, 30), (31, 31),
     }
-    assert got == want
-    # member table holds ONLY edge-endpoint vertices
-    members = {r["doc_id"] for r in _min_label_fixpoint_members(pairs).collect()}
-    assert members == {1, 2, 3, 10, 11, 12, 13, 14, 20, 21}
-    # empty pair graph: every doc is its own singleton cluster
     empty = pairs.filter("ida < 0")
-    got_empty = {
-        (r["doc_id"], r["cluster_id"]) for r in _min_label_fixpoint(d, empty).collect()
-    }
-    assert got_empty == {(i, i) for i in (1, 2, 3, 10, 11, 12, 13, 14, 20, 21, 30, 31)}
+    for cap in (cc.DRIVER_CC_MAX_EDGES, 0):  # driver, distributed
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "DRIVER_CC_MAX_EDGES", cap)
+            got = {tuple(r) for r in cc._min_label_fixpoint(d, pairs).collect()}
+            assert got == want, cap
+            # member table holds ONLY edge-endpoint vertices
+            members = {r["doc_id"] for r in cc._min_label_fixpoint_members(pairs).collect()}
+            assert members == {1, 2, 3, 10, 11, 12, 13, 14, 20, 21}, cap
+            # empty pair graph: every doc is its own singleton cluster
+            got_empty = {tuple(r) for r in cc._min_label_fixpoint(d, empty).collect()}
+            assert got_empty == {(i, i) for i, _ in want}, cap

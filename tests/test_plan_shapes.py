@@ -1053,14 +1053,24 @@ def test_pmi_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_dedup_pipeline_e2e_no_cartesian_banded_candidates(spark):
+def test_dedup_pipeline_e2e_no_cartesian_banded_candidates(spark, monkeypatch):
     """dedup_pipeline_end_to_end: the returned (post-CC) plan must hold
     keyed joins only — never a cartesian or nested-loop pair join — and
-    the CC fixpoint arrives checkpoint-truncated (Scan ExistingRDD).
-    The candidate/verify stages run BEFORE the checkpoint; their shapes
-    are pinned by test_edit_distance_candidates_are_equi_join and the
-    minhash band-join tests on the component operators."""
+    the CC labels arrive lineage-truncated: a LocalTableScan from the
+    driver union-find below the edge cap, the checkpointed fixpoint
+    (Scan ExistingRDD) above it. The candidate/verify stages run BEFORE
+    the labels; their shapes are pinned by
+    test_edit_distance_candidates_are_equi_join and the minhash
+    band-join tests on the component operators."""
+    from supabase_etl_spark.operators import cc
+
     q = load_all()["dedup_pipeline_end_to_end"]
+    plan = _plan(q.fn(spark, SF))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "LocalTableScan" in plan  # driver-computed CC labels
+    assert "BroadcastHashJoin" in plan  # the bounded labels attach keyed
+    monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
     plan = _plan(q.fn(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
