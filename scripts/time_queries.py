@@ -2,7 +2,8 @@
 
 Times named queries with the bench methodology (noop sink, smoke-scale
 codegen warmup, best-of-N) and optionally writes their
-``explain("formatted")`` output to plans/r13/<name>_<tag>.txt.
+``explain("formatted")`` output to <plans-dir>/<name>_<tag>.txt
+(default plans/).
 
 Usage:
     python scripts/time_queries.py [--sf DIR] [--n 3] [--plans-tag before] name...
@@ -22,8 +23,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--n", type=int, default=3)
-    ap.add_argument("--plans-tag", default=None, help="write plans/r13/<name>_<tag>.txt")
-    ap.add_argument("--plans-dir", default="plans/r13")
+    ap.add_argument("--plans-tag", default=None, help="write <plans-dir>/<name>_<tag>.txt")
+    ap.add_argument("--plans-dir", default="plans")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 

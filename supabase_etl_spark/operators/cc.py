@@ -1,33 +1,33 @@
-"""Connected components: one size switch in front of the engine's two
-distributed CC algorithms.
+"""Connected components: one operator, one size switch.
 
-Both entry points pin their deduplicated edge list and probe it once
-with ``limit(DRIVER_CC_MAX_EDGES + 1)``, collected through Arrow.
+``component_members`` labels a graph. It pins the deduplicated edge
+list (each undirected edge once as least/greatest, self-edges dropped)
+and probes it once with ``limit(DRIVER_CC_MAX_EDGES + 1)``, collected
+through Arrow.
 
 * **At or below the cap** the driver labels the graph: union-find over
   the collected edges, the smaller id always the root, so a label is
   the minimum id in its component, exactly as on the distributed path.
   The labels come back as an Arrow-built local frame (a LocalTableScan,
-  which starts no Python worker) and attach as before: a broadcast left
-  join, each unlabeled node its own label. One probe job replaces the
-  eager pins and the fixpoint's one-job-per-round.
-* **Above the cap** ``pinning.fixpoint`` runs the distributed algorithm
-  over the same pinned edge list, which the probe has materialized:
+  which starts no Python worker). One probe job replaces the
+  fixpoint's one-job-per-round.
+* **Above the cap** ``pinning.fixpoint`` runs large-star/small-star
+  alternation over the same pinned edge list, which the probe has
+  materialized: O(log² n) rounds (Kiveris et al. 2014, "Connected
+  Components in MapReduce and Beyond"; observed ~log n). A 200-chain
+  converges in 9 rounds, a 64-ring in 7, cliques in 2.
 
-  * ``connected_components`` — large-star/small-star alternation,
-    O(log² n) rounds (Kiveris et al. 2014, "Connected Components in
-    MapReduce and Beyond"; observed ~log n). A 200-chain converges in
-    9 rounds, a 64-ring in 7, cliques in 2.
-  * ``_min_label_fixpoint_members`` — min-label propagation over the
-    pair graph's endpoints, one hop per round: rounds = component
-    diameter, so near-clique dedup graphs (diameter 2-3) finish in a
-    batch or two, while a long chain needs one round per hop.
+``connected_components`` attaches those labels to a node frame by a
+left join, broadcast when the driver built them, each unlabeled node
+its own label. The dedup pipelines attach the member table to their
+own frame instead.
 
 The cap. Driver path against the star fixpoint on synthetic graphs,
 4 cores, one warm JVM, labels written to the noop sink (median of 3 at
 10k and 100k edges, one run elsewhere); chain-plus-random is a chain
 over a quarter of the nodes plus random edges, 4-cliques are six edges
-per four nodes (diameter 1, the fixpoint's best case):
+per four nodes (diameter 1, the fixpoint's best case, and the shape of
+the near-clique dedup pair graphs):
 
     edges        chain-plus-random         4-cliques
                  driver    fixpoint        driver    fixpoint
@@ -50,30 +50,6 @@ sits at 200k edges, where the driver's own work stays under a second
 and the fixpoint already costs 2-4x the driver path. The committed
 callers top out at 12,914 edges (embedding_dbscan_grid, sf0.1),
 2,876 (events_identity_stitching) and 256 (the Jaccard callers).
-
-Above the cap each distributed algorithm keeps the callers that it
-wins on. A/B on every caller, 4 cores, sf0.01, median of 3 noop-write
-runs (wall, distinct stages), taken before the size switch existed,
-so it measures the above-cap regime; a star caller runs min-label as
-member labels plus a broadcast attach, a min-label caller runs star
-over the pair endpoints:
-
-    caller (algorithm it uses)                      min-label     star
-    dedup_clusters (min-label)                      1.09 s, 46    1.78 s, 67
-    corpus_curate (min-label)                       1.05 s, 45    1.70 s, 66
-    split_leakage_safe (min-label)                  1.43 s, 66    1.98 s, 89
-    dedup_pipeline_end_to_end (min-label)           1.39 s, 50    2.16 s, 72
-    events_identity_stitching (star)                1.28 s, 77    1.50 s, 87
-    multimodal_audio_dedup_pipeline_e2e (star)      1.40 s, 43    1.22 s, 40
-    multimodal_video_dedup_pipeline_e2e (star)      1.16 s, 43    1.17 s, 40
-    multimodal_dedup_pipeline_e2e (star)            3.14 s, 153   2.85 s, 114
-    embedding_dbscan_grid (star)                    no fixpoint   4.01 s, 145
-                                                    in 20 hops
-    200-node chain (tests)                          199 hops      9 rounds
-
-Near-clique dedup graphs favour min-label: a round or two of one
-exchange each. Long chains need star: only it converges on
-embedding_dbscan_grid.
 """
 
 from __future__ import annotations
@@ -87,18 +63,18 @@ from supabase_etl_spark.operators.joins import broadcast_bounded
 from supabase_etl_spark.pinning import fixpoint, pin
 
 CC_MAX_ROUNDS = 60  # ~log²(n) needed in theory, ~log n observed
-MAX_PROPAGATION_ROUNDS = 20  # min-label hops; fixpoint runs 2 per round
 DRIVER_CC_MAX_EDGES = 200_000  # union-find on the driver at or below this
 
 
-def _driver_labels(e: DataFrame, node: str, label: str) -> DataFrame | None:
-    """(node, label) for every endpoint of the two-column edge list
-    ``e``, label = the minimum id in the node's component, or None when
-    ``e`` holds more than DRIVER_CC_MAX_EDGES rows. One ``limit`` probe
-    collected through Arrow (a list over the cap ships cap + 1 rows),
-    then union-find on the driver over the sorted distinct ids, the
-    smaller id always the root. The frame is built from Arrow, so it
-    plans as a LocalTableScan that no Python worker reads."""
+def _driver_labels(e: DataFrame) -> DataFrame | None:
+    """(node, component) for every endpoint of the two-column edge
+    list ``e``, component = the minimum id in the node's component, or
+    None when ``e`` holds more than DRIVER_CC_MAX_EDGES rows. One
+    ``limit`` probe collected through Arrow (a list over the cap ships
+    cap + 1 rows), then union-find on the driver over the sorted
+    distinct ids, the smaller id always the root. The frame is built
+    from Arrow, so it plans as a LocalTableScan that no Python worker
+    reads."""
     t = e.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
     if t.num_rows > DRIVER_CC_MAX_EDGES:
         return None
@@ -126,8 +102,8 @@ def _driver_labels(e: DataFrame, node: str, label: str) -> DataFrame | None:
     return e.sparkSession.createDataFrame(
         pa.table(
             {
-                node: pa.array(ids, typ),
-                label: pa.array(ids[np.asarray(parent, dtype=np.int64)], typ),
+                "node": pa.array(ids, typ),
+                "component": pa.array(ids[np.asarray(parent, dtype=np.int64)], typ),
             }
         )
     )
@@ -179,17 +155,26 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """(node) x (src, dst) -> (node, component) where component is the
-    MINIMUM node id of the node's component (isolated nodes map to
-    themselves). ``nodes`` must cover every endpoint; undirected input
-    (each edge listed once in either direction).
+def component_members(edges: DataFrame) -> tuple[DataFrame, bool]:
+    """(src, dst) -> ((node, component), bounded): the label of every
+    endpoint of a non-self edge, component = the MINIMUM node id of its
+    component; undirected input (each edge listed once in either
+    direction). ``bounded`` is True when the driver labeled the graph:
+    the table then holds at most 2 * DRIVER_CC_MAX_EDGES rows, the bound
+    ``broadcast_bounded`` asks for.
 
-    A round that flags no edge left the edge set unchanged: every
-    component is then one star centered at its minimum. Raises
-    RuntimeError if that takes more than CC_MAX_ROUNDS rounds. At or
-    below DRIVER_CC_MAX_EDGES edges the driver union-find labels the
-    graph instead, with no round cap (module docstring)."""
+    A self-edge (src = dst) is dropped, so a node whose only edge is a
+    self-edge is not a member; attached with a left join and coalesce,
+    as every caller does, it still labels itself, as an isolated node
+    does. No committed caller's pair frame holds a self-pair:
+    ``jaccard_pairs`` and dedup_pipeline_end_to_end's banded candidates
+    emit ida < idb, and the verify joins only filter them.
+
+    Above DRIVER_CC_MAX_EDGES edges a round that flags no edge left the
+    edge set unchanged: every component is then one star centered at
+    its minimum. Raises RuntimeError if that takes more than
+    CC_MAX_ROUNDS rounds; the driver union-find has no round cap
+    (module docstring)."""
     e = pin(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -197,129 +182,32 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    lbl = _driver_labels(e, "node", "component")
-    bounded = lbl is not None
-    if not bounded:
-        e = fixpoint(
-            e,
-            lambda e: _small_star(_large_star(e)),
-            max_rounds=CC_MAX_ROUNDS,
-            what="connected_components (star alternation)",
-        )
-        # one star per component, centered at the component min:
-        # label = least(self, min neighbor)
-        directed = e.select(
-            F.col("a").alias("node"), F.col("b").alias("nbr")
-        ).unionByName(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        lbl = directed.groupBy("node").agg(
-            F.least(F.min("nbr"), F.first("node")).alias("component")
-        )
-    lbl = broadcast_bounded(lbl, bounded)
-    return nodes.join(lbl, "node", "left").select(
+    lbl = _driver_labels(e)
+    if lbl is not None:
+        return lbl, True
+    e = fixpoint(
+        e,
+        lambda e: _small_star(_large_star(e)),
+        max_rounds=CC_MAX_ROUNDS,
+        what="connected_components (star alternation)",
+    )
+    # one star per component, centered at the component min:
+    # label = least(self, min neighbor)
+    directed = e.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
+        e.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+    )
+    lbl = directed.groupBy("node").agg(
+        F.least(F.min("nbr"), F.first("node")).alias("component")
+    )
+    return lbl, False
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(node) x (src, dst) -> (node, component) where component is the
+    MINIMUM node id of the node's component (isolated nodes map to
+    themselves): ``component_members`` attached to ``nodes``, which
+    must cover every endpoint."""
+    lbl, bounded = component_members(edges)
+    return nodes.join(broadcast_bounded(lbl, bounded), "node", "left").select(
         "node", F.coalesce("component", "node").alias("component")
     )
-
-
-def _min_label_fixpoint_members(pairs: DataFrame) -> DataFrame:
-    """Connected-component labels for the EDGE-ENDPOINT vertices of an
-    undirected pair graph, by min-label propagation (labels start as
-    doc_id; each round every node takes the min of its own and its
-    neighbors' labels until a round changes nothing). At or below
-    DRIVER_CC_MAX_EDGES undirected edges the driver union-find labels
-    the same members instead (module docstring).
-
-    r13 optimization (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    shuffles outright): the fixpoint only ever CHANGES labels of
-    vertices that touch an edge, so the iteration state is the member
-    set (≤ 2·|pairs| rows), never the corpus — the previous shape
-    materialized a full-corpus label table per round plus a
-    corpus-sized convergence JOIN per round. Convergence is a `chg`
-    flag computed IN the propagation select (labels only decrease, so
-    changed ⟺ nbr_min < cluster_id).
-
-    r14 (VERDICT r13 task 1 — stage-launch floor, guide §2.4):
-    a pin preserves ``outputPartitioning`` into the
-    LogicalRDD, so the edge list is pinned pre-hashed on ``src`` (the
-    size probe's collect writes its blocks) and the label state stays
-    hashed on ``doc_id`` (the
-    groupBy(dst→doc_id) exchange output feeds the left join and the
-    next round directly). Each propagation round then needs exactly
-    ONE exchange — the neighbor-min aggregate — where the r13 shape
-    re-shuffled both join sides every round; there is no pin inside a
-    step (a 2-round lineage is shallow, and one AQE execution reuses
-    its own exchanges where nested lazy pins re-ran upstream chains —
-    the LPA r14 finding). Measured on the two heaviest consumers
-    (sf0.1, quiet epoch, best-of-3): dedup_pipeline 3.65→2.92 s
-    (58→50 stages), corpus_curate 3.60→3.18 s (49→45).
-
-    Raises RuntimeError if the fixpoint is not reached within
-    MAX_PROPAGATION_ROUNDS — a silently-unconverged result would emit
-    wrong cluster_id/is_canonical with no other symptom (a high-diameter
-    chain component, e.g. a boilerplate gradient, is exactly the input
-    that would need more rounds)."""
-    edges = pin(
-        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
-        .unionByName(pairs.select(F.col("idb").alias("src"), F.col("ida").alias("dst")))
-        .distinct()
-        .repartition("src")
-    )
-    # each undirected edge once; a self-pair stays, its node is a member
-    members = _driver_labels(
-        edges.filter(F.col("src") <= F.col("dst")), "doc_id", "cluster_id"
-    )
-    if members is not None:
-        return members
-    # symmetric edge list ⇒ src alone covers every endpoint
-    labels = pin(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("cluster_id"))
-        .repartition("doc_id"),
-        eager=True,
-    )
-
-    def two_rounds(labels: DataFrame) -> DataFrame:
-        # TWO lazy rounds per convergence count: near-dup components
-        # are near-cliques (diameter ~2 — sf0.1 measures 2 rounds
-        # total), so batching halves the sequential action count, and
-        # an extra lazy round over the tiny member table is cheaper
-        # than a job launch. Only the LAST round's flags count: a round
-        # with 0 changes is the fixpoint no matter what the first did.
-        for _ in range(2):
-            neighbor_min = (
-                edges.join(labels, edges.src == labels.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            nbr = F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-            labels = labels.join(neighbor_min, "doc_id", "left").select(
-                "doc_id",
-                F.least(F.col("cluster_id"), nbr).alias("cluster_id"),
-                (nbr < F.col("cluster_id")).alias("chg"),
-            )
-        return labels
-
-    return fixpoint(
-        labels,
-        two_rounds,
-        max_rounds=(MAX_PROPAGATION_ROUNDS + 1) // 2,
-        what=f"min-label propagation ({MAX_PROPAGATION_ROUNDS} hops, 2 per round)",
-    )
-
-
-def _attach_cluster_labels(d: DataFrame, members: DataFrame) -> DataFrame:
-    """Full-corpus (doc_id, cluster_id) from member-only labels: docs
-    outside every edge keep their own id. The member table is bounded
-    by 2·|pairs| (near-dup membership is the minority by the dedup
-    pipeline's own premise), so it BROADCASTS — the corpus crosses no
-    exchange to pick up its label."""
-    return d.select("doc_id").join(F.broadcast(members), "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-    )
-
-
-def _min_label_fixpoint(d: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Full-corpus connected-component labels (doc_id, cluster_id) —
-    the member-only fixpoint above plus the broadcast label attach."""
-    return _attach_cluster_labels(d, _min_label_fixpoint_members(pairs))

@@ -27,9 +27,9 @@ is no unpinned mode: the correctness pins above return wrong values
 without one.
 
 Iteration policy. Every loop that runs until its state stops changing
-(star-alternation and min-label connected components above the
-driver's edge cap, Bellman-Ford; operators/cc.py,
-queries/analytics.py) goes through ``fixpoint``: each
+(star-alternation connected components above the driver's edge cap,
+Bellman-Ford; operators/cc.py, queries/analytics.py) goes through
+``fixpoint``: each
 step's output is pinned LAZILY and one ``filter("chg").count()`` both
 materializes that pin and decides convergence, so a round costs one
 action. An eager pin would cost a second one: its materialization job

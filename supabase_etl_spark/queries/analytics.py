@@ -2579,7 +2579,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer weights (w % 7 + 1 from the lineitem edge counts — exact
     arithmetic, no float drift across engines). Each round is one
     equi-join (current dists x edges) plus one min-aggregation — the
-    Pregel shape shared with graph_pagerank and min-label CC; the
+    Pregel shape shared with graph_pagerank; the
     rounds run through pinning.fixpoint, which stops as soon as a
     round relaxes nothing (graph diameter rounds in practice, |V|-1
     worst case, RuntimeError past the bound rather than a silently

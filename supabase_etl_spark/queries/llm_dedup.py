@@ -19,10 +19,8 @@ from pyspark.sql import functions as F
 
 from supabase_etl_spark.io.readers import load_table
 from supabase_etl_spark.operators import dedup as D
-from supabase_etl_spark.operators.cc import (
-    _min_label_fixpoint,
-    _min_label_fixpoint_members,
-)
+from supabase_etl_spark.operators.cc import component_members, connected_components
+from supabase_etl_spark.operators.joins import broadcast_bounded
 from supabase_etl_spark.operators.text import tokens
 from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import llm_similarity as S
@@ -563,18 +561,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step that turns pairwise dedup output into the keep/drop decision a
     training-data pipeline actually executes.
 
-    Spark side: min-label propagation — labels start as doc_id; each
-    round joins labels across edges and takes the elementwise min;
-    stops when a round changes nothing. Each round is one equi-join +
-    one groupBy (shuffle on doc_id); rounds needed = component
-    diameter, which for near-dup clusters is tiny (they are cliques or
-    near-cliques). The driver loop iterates over *plans*, never rows
-    (same shape as GraphX/Pregel); lineage is truncated per round with
-    a pin so plans stay bounded. The DuckDB oracle computes
-    the same fixpoint with a recursive CTE."""
+    Spark side: ``operators.cc.connected_components`` over the pair
+    graph — driver union-find at or below its edge cap, the
+    star-alternation fixpoint (log rounds, each pinned) above it. The
+    DuckDB oracle computes the same labels with a recursive CTE."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select("ida", "idb")
-    labels = _min_label_fixpoint(d, pairs)
+    pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD)
+    labels = connected_components(
+        d.select(F.col("doc_id").alias("node")),
+        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst")),
+    ).toDF("doc_id", "cluster_id")
     return labels.withColumn(
         "is_canonical", F.col("doc_id") == F.col("cluster_id")
     ).orderBy("doc_id")
@@ -644,12 +640,15 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical survivor. Emits the corpus accounting row (docs, quality
     passes, canonicals, curated count, curated token budget)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # cluster assignment (min-label propagation, as dedup_clusters) —
+    # cluster assignment (connected components, as dedup_clusters) —
     # member-only labels; docs outside every near-dup pair are their own
     # canonical, picked up via broadcast left join + coalesce below
     # (guide §2.4: the corpus never shuffles to learn its cluster)
-    pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select("ida", "idb")
-    members = _min_label_fixpoint_members(pairs)
+    pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD)
+    members, bounded = component_members(
+        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
+    )
+    members = members.toDF("doc_id", "cluster_id")
     # quality gate (Gopher core rules, same exprs as text_gopher_filter)
     toks = tokens(F.col("text"))
     n = F.greatest(F.size(toks), F.lit(1))
@@ -671,7 +670,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     keep = F.col("q_pass") & (F.col("doc_id") == cid)
-    return q.join(F.broadcast(members), "doc_id", "left").agg(
+    return q.join(broadcast_bounded(members, bounded), "doc_id", "left").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("q_pass"), 1).otherwise(0)).alias("n_pass_quality"),
         F.sum(F.when(F.col("doc_id") == cid, 1).otherwise(0)).alias(
@@ -1707,8 +1706,8 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule split_train_val_test skips: hashing doc_id sends two
     near-duplicate documents to DIFFERENT splits (test answers leak
     into train), so the split key must be the near-dup CLUSTER id.
-    Pipeline: Jaccard pair graph → min-label connected components
-    (`operators.cc._min_label_fixpoint`) → deterministic LCG bucket on
+    Pipeline: Jaccard pair graph → connected components
+    (`operators.cc.connected_components`) → deterministic LCG bucket on
     cluster_id → 80/10/10. The output self-certifies: leaked_pairs
     counts near-dup pairs straddling splits, computed from the data
     (not asserted) — zero by construction since both endpoints carry
@@ -1719,7 +1718,10 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = D.jaccard_pairs(d, JACCARD_THRESHOLD).select("ida", "idb")
-    labels = _min_label_fixpoint(d, pairs)  # doc_id, cluster_id
+    labels = connected_components(
+        d.select(F.col("doc_id").alias("node")),
+        pairs.select(F.col("ida").alias("src"), F.col("idb").alias("dst")),
+    ).toDF("doc_id", "cluster_id")
     bk = _bucket(F.col("cluster_id"), 100)
     assigned = pin(labels.select(
         "doc_id",
@@ -2258,8 +2260,9 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
       3. CHAR VERIFY: bounded Levenshtein on the {EDV_VERIFY_CHARS}-char
          heads (dedup_edit_distance_verify's verifier) — one JVM DP per
          surviving pair, catching token-preserving in-place edits.
-      4. CLUSTER: connected components by min-label propagation
-         (dedup_clusters' fixpoint; log-diameter rounds, checkpointed).
+      4. CLUSTER: connected components (dedup_clusters' operator:
+         driver union-find below its edge cap, star-alternation rounds,
+         each pinned, above it).
       5. SURVIVE: min-id canonical per cluster + cluster sizes (one
          keyed aggregate joined back).
 
@@ -2336,7 +2339,7 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             "idb",
         )
         .filter(F.levenshtein("ha", "hb") <= EDV_MAX_DIST)
-        .select("ida", "idb")
+        .select(F.col("ida").alias("src"), F.col("idb").alias("dst"))
     )
     # 4. connected components + 5. survivor ledger — member-only labels
     # and sizes (every multi-member cluster lives entirely inside the
@@ -2344,14 +2347,16 @@ def dedup_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus picks up (cluster_id, cluster_size) through ONE broadcast
     # left join with coalesce defaults instead of a corpus-sized
     # groupBy + corpus-sized join (guide §2.3/§2.4)
-    members = _min_label_fixpoint_members(verified)
+    members, bounded = component_members(verified)
+    members = members.toDF("doc_id", "cluster_id")
     csize = members.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
+    ledger = broadcast_bounded(members.join(csize, "cluster_id"), bounded)
     cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     return (
         d.select("doc_id")
-        .join(F.broadcast(members.join(csize, "cluster_id")), "doc_id", "left")
+        .join(ledger, "doc_id", "left")
         .select(
             "doc_id",
             cid.alias("cluster_id"),

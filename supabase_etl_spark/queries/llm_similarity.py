@@ -1192,9 +1192,10 @@ def embedding_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     eps-sized grid cells, generate neighbor candidates via each point's
     3x3 cell probe (cell size = eps guarantees every true neighbor is
     adjacent — NEVER an all-pairs join), count eps-neighbors for core
-    status, and label core components with the large-star/small-star
-    connected-components operator (operators/cc.py, Kiveris 2014,
-    log-round — min-label propagation would need diameter rounds,
+    status, and label core components with the connected-components
+    operator (operators/cc.py: driver union-find below its edge cap,
+    above it Kiveris 2014 large-star/small-star alternation, log-round
+    where one-hop-per-round propagation would need diameter rounds,
     measured 23 on this graph's density chains; a 200-chain converges
     in 9 star rounds). Borders adopt the min core-neighbor's cluster;
     everything else is noise.

@@ -222,9 +222,10 @@ def ml_nb_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13: vocab feeds BOTH the totals aggregate and the llr model —
     # unpinned, each consumer replayed the full corpus tokenize +
-    # term groupBy (4 documents scans in the before-plan,
-    # plans/r13/ml_nb_train_score_before.txt). The pin bounds the
-    # train pass to one tokenization; vocab is min-df-bounded state.
+    # term groupBy (4 documents scans in the before-plan, kept in git
+    # history: git show eb0f198:plans/r13/ml_nb_train_score_before.txt).
+    # The pin bounds the train pass to one tokenization; vocab is
+    # min-df-bounded state.
     vocab = pin(counts.filter(F.col("c0") + F.col("c1") >= NB_MIN_DF))
     tot = vocab.agg(
         F.sum("c0").alias("n0"), F.sum("c1").alias("n1"), F.count(F.lit(1)).alias("v")

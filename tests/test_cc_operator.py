@@ -1,6 +1,8 @@
 """Connected components (operators/cc.py): both paths of the size
 switch, driver union-find and the star-alternation fixpoint, must label
-long chains, cliques, isolated nodes, and forests exactly and alike."""
+long chains, cliques, isolated nodes, and forests exactly and alike, in
+the unit graphs here and in every registry query that labels through
+the operator."""
 
 from __future__ import annotations
 
@@ -8,8 +10,12 @@ import random
 
 import pytest
 
+from conftest import SF_SMOKE, registry_sweep_params
+
+from scripts.check_correctness import canon_rows
 from supabase_etl_spark.operators import cc
 from supabase_etl_spark.operators.cc import CC_MAX_ROUNDS, connected_components
+from supabase_etl_spark.queries import load_all
 
 # the edge cap each path runs under: 0 sends every edge list to the fixpoint
 PATHS = {"driver": cc.DRIVER_CC_MAX_EDGES, "distributed": 0}
@@ -39,8 +45,8 @@ def _cc(spark, node_ids, edge_pairs):
 
 
 def test_long_chain_labels_min(spark):
-    # a 200-node chain: min-label propagation would need 199 rounds;
-    # star alternation measures 9 and must stay inside the round bound
+    # a 200-node chain: one-hop-per-round propagation would need 199
+    # rounds; star alternation measures 9 and must stay inside the bound
     n = 200
     got = _cc(spark, range(n), [(i, i + 1) for i in range(n - 1)])
     assert got == {i: 0 for i in range(n)}
@@ -93,29 +99,28 @@ GRAPHS = {
 
 @pytest.mark.parametrize("graph", list(GRAPHS))
 def test_driver_and_distributed_paths_agree(spark, graph, monkeypatch):
-    """Both CC entry points give identical labels, with identical
-    column types, under the driver union-find and the distributed
-    fixpoint. Min-label skips the 200-chain: its 199 hops exceed
-    MAX_PROPAGATION_ROUNDS by design (test_fixpoint covers the raise)."""
+    """``connected_components`` and its member table give identical
+    labels, with identical column types, under the driver union-find
+    and the distributed fixpoint; ``bounded`` says which path ran."""
     node_ids, edge_pairs = GRAPHS[graph]
     nodes, edges = _frames(spark, node_ids, edge_pairs)
-    pairs = edges.select(edges.src.alias("ida"), edges.dst.alias("idb"))
+    endpoints = {x for a, b in edge_pairs if a != b for x in (a, b)}
     got = {}
     for path, cap in PATHS.items():
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", cap)
-        frames = [connected_components(nodes, edges)]
-        if graph != "chain_200":
-            frames.append(cc._min_label_fixpoint_members(pairs))
+        members, bounded = cc.component_members(edges)
+        # no non-self edge is within any cap: the driver labels it
+        assert bounded == (path == "driver" or not endpoints)
         got[path] = [
             ([f.dataType for f in df.schema], sorted(tuple(r) for r in df.collect()))
-            for df in frames
+            for df in (connected_components(nodes, edges), members)
         ]
     assert got["driver"] == got["distributed"]
-    star_rows = got["driver"][0][1]
-    assert [r[0] for r in star_rows] == sorted(node_ids)
-    if graph != "chain_200":  # the members are exactly the pair endpoints
-        member_rows = got["driver"][1][1]
-        assert {r[0] for r in member_rows} == {x for e in edge_pairs for x in e}
+    (_, cc_rows), (_, member_rows) = got["driver"]
+    assert [r[0] for r in cc_rows] == sorted(node_ids)
+    # the members are exactly the endpoints of the non-self edges
+    assert {r[0] for r in member_rows} == endpoints
+    assert set(member_rows) <= set(cc_rows)
 
 
 def test_driver_path_labels_start_no_python_worker(spark):
@@ -128,8 +133,37 @@ def test_driver_path_labels_start_no_python_worker(spark):
     edges = spark.range(40).select(
         F.col("id").alias("src"), (F.col("id") % 7).alias("dst")
     )
-    pairs = edges.select(F.col("src").alias("ida"), F.col("dst").alias("idb"))
-    for df in (connected_components(nodes, edges), cc._min_label_fixpoint_members(pairs)):
-        qe = df._jdf.queryExecution()
-        assert "LocalTableScan" in qe.executedPlan().toString()
-        assert "PythonRDD" not in qe.toRdd().toDebugString()
+    qe = connected_components(nodes, edges)._jdf.queryExecution()
+    assert "LocalTableScan" in qe.executedPlan().toString()
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+
+
+# every registry query that labels through operators/cc.py; as in the
+# registry sweeps, only the bench-set ones run in the default tier
+CC_CALLERS = [
+    "corpus_curate",
+    "dedup_clusters",
+    "dedup_pipeline_end_to_end",
+    "embedding_dbscan_grid",
+    "events_identity_stitching",
+    "multimodal_audio_dedup_pipeline_e2e",
+    "multimodal_dedup_pipeline_e2e",
+    "multimodal_video_dedup_pipeline_e2e",
+    "split_leakage_safe",
+]
+
+
+@pytest.mark.parametrize("name", registry_sweep_params(CC_CALLERS))
+def test_registry_callers_agree_on_both_paths(spark, name, monkeypatch):
+    """Each CC caller's rows at sf0.001 are the same under the driver
+    union-find and, with the edge cap at 0, under the star fixpoint
+    inside the real query plan; the committed data never crosses the
+    cap, so this is where the distributed path meets real queries."""
+    spec = load_all()[name]
+    got = {}
+    for path, cap in PATHS.items():
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", cap)
+        df = spec.fn(spark, SF_SMOKE)
+        got[path] = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+        spark.catalog.clearCache()
+    assert got["driver"] == got["distributed"]

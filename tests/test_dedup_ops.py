@@ -114,24 +114,25 @@ def test_exact_substring_hash_paths_agree(spark, monkeypatch):
     assert md5_rows == xx_rows
 
 
-def test_min_label_fixpoint_members_matches_bruteforce(spark):
-    """r13 fixpoint rewrite: member-only min-label labels plus the
-    broadcast attach must label every doc with its component's min id —
-    including chain components (diameter > batch size) and isolated
-    docs (own id), and an empty pair graph must short-circuit. Checked
-    on the driver union-find and, with the edge cap at 0, on the
-    distributed propagation fixpoint."""
+def test_dedup_cluster_labels_match_bruteforce(spark):
+    """The dedup callers' two uses of operators/cc.py: the member table
+    (corpus_curate, dedup_pipeline_end_to_end) and the full-corpus
+    labels (dedup_clusters, split_leakage_safe) must label every doc
+    with its component's min id — including chain components and
+    isolated docs (own id), and an empty pair graph must short-circuit.
+    Checked on the driver union-find and, with the edge cap at 0, on
+    the distributed star fixpoint."""
     from supabase_etl_spark.operators import cc
 
-    # graph: clique {1,2,3}, chain 10-11-12-13-14 (diameter 4 — crosses
-    # the 2-round count batches), pair {20,21}; isolated: 30, 31
+    # graph: clique {1,2,3}, chain 10-11-12-13-14 (diameter 4), pair
+    # {20,21}; isolated: 30, 31
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (13, 14), (20, 21)],
-        "ida bigint, idb bigint",
+        "src bigint, dst bigint",
     )
     d = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 12, 13, 14, 20, 21, 30, 31)],
-        "doc_id bigint",
+        "node bigint",
     )
     want = {
         (1, 1), (2, 1), (3, 1),
@@ -139,15 +140,16 @@ def test_min_label_fixpoint_members_matches_bruteforce(spark):
         (20, 20), (21, 20),
         (30, 30), (31, 31),
     }
-    empty = pairs.filter("ida < 0")
+    empty = pairs.filter("src < 0")
     for cap in (cc.DRIVER_CC_MAX_EDGES, 0):  # driver, distributed
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(cc, "DRIVER_CC_MAX_EDGES", cap)
-            got = {tuple(r) for r in cc._min_label_fixpoint(d, pairs).collect()}
+            got = {tuple(r) for r in cc.connected_components(d, pairs).collect()}
             assert got == want, cap
             # member table holds ONLY edge-endpoint vertices
-            members = {r["doc_id"] for r in cc._min_label_fixpoint_members(pairs).collect()}
-            assert members == {1, 2, 3, 10, 11, 12, 13, 14, 20, 21}, cap
+            members = {tuple(r) for r in cc.component_members(pairs)[0].collect()}
+            assert members == {(i, c) for i, c in want if i < 30}, cap
             # empty pair graph: every doc is its own singleton cluster
-            got_empty = {tuple(r) for r in cc._min_label_fixpoint(d, empty).collect()}
+            got_empty = {tuple(r) for r in cc.connected_components(d, empty).collect()}
             assert got_empty == {(i, i) for i, _ in want}, cap
+            assert cc.component_members(empty)[0].count() == 0, cap

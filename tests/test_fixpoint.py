@@ -1,5 +1,5 @@
 """pinning.fixpoint: the one convergence loop behind star-alternation
-CC, min-label CC and Bellman-Ford. It stops on the first round that
+CC and Bellman-Ford. It stops on the first round that
 flags no row, raises at its round cap, and keeps the returned frame's
 lineage one round deep for any round count."""
 
@@ -69,18 +69,6 @@ def test_star_cc_raises_below_its_round_need(spark, monkeypatch):
     monkeypatch.setattr(cc, "CC_MAX_ROUNDS", 3)  # a 200-chain takes 9
     with pytest.raises(RuntimeError, match="star alternation"):
         cc.connected_components(nodes, edges).collect()
-
-
-def test_min_label_cc_raises_below_its_round_need(spark, monkeypatch):
-    # a 10-node chain has diameter 9: 10 propagation hops, 5 rounds of 2
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "ida long, idb long")
-    monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)  # the round-capped path
-    monkeypatch.setattr(cc, "MAX_PROPAGATION_ROUNDS", 6)
-    with pytest.raises(RuntimeError, match="min-label propagation"):
-        cc._min_label_fixpoint_members(pairs).collect()
-    monkeypatch.setattr(cc, "MAX_PROPAGATION_ROUNDS", 10)
-    got = dict(cc._min_label_fixpoint_members(pairs).collect())
-    assert got == {i: 0 for i in range(10)}
 
 
 @pytest.mark.parametrize("sf", [SF], ids=["sf0.001"])

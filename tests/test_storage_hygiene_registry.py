@@ -40,8 +40,8 @@ SF = "/root/testdata/sf0.001"
 _REGISTRY = load_all()
 
 # Upper bound on localCheckpoint blocks a single query may pin. The
-# biggest legitimate user is the min-label fixpoint (one block per
-# converged round); anything past this reads as a per-item leak.
+# biggest legitimate user is a fixpoint (one block per converged
+# round); anything past this reads as a per-item leak.
 MAX_CKPT_BLOCKS = 12
 
 
