@@ -1115,39 +1115,27 @@ def main() -> None:
         # streaming harness + manifest commits) over a growing image
         # count: 256 x mult images through the same 3-micro-batch flow.
         # Image count, not document blowup, is the scale axis — the
-        # fixture cap is lifted via the env knob the fn reads.
-        import os
-
+        # fixture cap is lifted through the fn's ``cap`` keyword.
         from supabase_etl_spark.queries.streaming import (
             multimodal_incremental_ingest,
         )
 
-        os.environ["SPARK_GRAFT_MM_INC_DOCS"] = str(256 * docs.__mult__)
-        try:
-            multimodal_incremental_ingest(spark, SF_DIR).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        finally:
-            os.environ.pop("SPARK_GRAFT_MM_INC_DOCS", None)
+        multimodal_incremental_ingest(
+            spark, SF_DIR, cap=256 * docs.__mult__
+        ).write.format("noop").mode("overwrite").save()
 
     def t_aud_incremental_ingest(docs):
         # audio incremental-ingest capstone (real fn, real streaming
         # harness + manifest commits) over a growing clip count: 512 x
         # mult clips through the same 3-micro-batch flow (VERDICT r11
         # task 5 — scale rows for BOTH new capstones).
-        import os
-
         from supabase_etl_spark.queries.streaming import (
             multimodal_audio_incremental_ingest,
         )
 
-        os.environ["SPARK_GRAFT_AUD_INC_DOCS"] = str(512 * docs.__mult__)
-        try:
-            multimodal_audio_incremental_ingest(spark, SF_DIR).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        finally:
-            os.environ.pop("SPARK_GRAFT_AUD_INC_DOCS", None)
+        multimodal_audio_incremental_ingest(
+            spark, SF_DIR, cap=512 * docs.__mult__
+        ).write.format("noop").mode("overwrite").save()
 
     def t_corpus_prepare(docs):
         # the composed quality-gate -> lang-ID -> Bloom-decontaminate ->

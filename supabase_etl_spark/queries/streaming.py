@@ -17,17 +17,35 @@ Emission-mode notes (the pitfalls are the spec):
 * the stateful ops post-merge the same way — exact for a single
   AvailableNow batch, and convergent (max of monotone counters) if the
   source splits into several.
+
+Incremental replay has one path. A multi-batch query hands its
+micro-batches, as one frame each, to ``streaming.source.landing_zone_stream``,
+which writes one parquet file per batch with mtimes pinned in batch order
+and reads them back with ``maxFilesPerTrigger=1``, so micro-batch r is
+frame r. A foreachBatch consumer runs through
+``streaming.sinks.run_foreach_batch``. The three ingest capstones share
+``_incremental_ingest``: per batch a gate, a min-doc_id dedup, an anti-join
+against the manifest snapshot, an append commit and one ledger row; the
+result is that ledger joined with the final snapshot's readback.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from supabase_etl_spark.pinning import pin
 from supabase_etl_spark.queries import query
 from supabase_etl_spark.queries._helpers import dsum, sql_dsum
-from supabase_etl_spark.streaming.source import read_events_stream, run_available_now
+from supabase_etl_spark.streaming.sinks import run_foreach_batch
+from supabase_etl_spark.streaming.source import (
+    landing_zone_stream,
+    read_events_stream,
+    run_available_now,
+)
 
 CHECKSUM_K = 31
 CHECKSUM_P = 1_000_000_007
@@ -1064,12 +1082,9 @@ def stream_cdc_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole upsert. Each merge's cost is touched-files + batch (COW
     pruning), and every intermediate snapshot stays time-travelable —
     the audit trail a CDC pipeline wants at 100 TB."""
-    import os
-
     from supabase_etl_spark.io import manifest_store as M
-    from supabase_etl_spark.io.scratch import scratch_dir
-
     from supabase_etl_spark.io.readers import load_table
+    from supabase_etl_spark.io.scratch import scratch_dir
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double")
@@ -1081,22 +1096,12 @@ def stream_cdc_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("o_orderkey") <= 1500) & (F.col("o_orderkey") % 3 == 0))
         | ((F.col("o_orderkey") > 1500) & (F.col("o_orderkey") <= 2000))
     ).select("o_orderkey", (F.col("o_totalprice") * 0.9).alias("o_totalprice"))
-    feed = scratch_dir("stream_merge_feed_")
     # three disjoint-key files => three micro-batches
-    for i, (lo, hi) in enumerate([(-1, 700), (700, 1400), (1400, 2000)]):
-        (
-            updates.filter(
-                (F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi)
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(feed, f"part{i}"))
-        )
-
-    src = (
-        spark.readStream.schema("o_orderkey bigint, o_totalprice double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(feed, "part*"))
+    src = landing_zone_stream(
+        [
+            updates.filter((F.col("o_orderkey") > lo) & (F.col("o_orderkey") <= hi))
+            for lo, hi in [(-1, 700), (700, 1400), (1400, 2000)]
+        ]
     )
 
     def upsert(batch_df, batch_id: int) -> None:
@@ -1104,14 +1109,7 @@ def stream_cdc_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         M.merge(batch_df.sparkSession, table, batch_df, ["o_orderkey"])
 
-    ckpt = scratch_dir("stream_merge_ckpt_")
-    q = (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(src, upsert)
     return M.read(spark, table).orderBy("o_orderkey")
 
 
@@ -1482,8 +1480,118 @@ def stream_tumbling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 # Incremental-curation capstone (VERDICT r9 task 7): the production
 # LLM-pipeline shape — NEW documents stream against the manifest-stored
-# corpus with quality gate + dedup + ledger in ONE flow.
+# corpus with quality gate + dedup + ledger in ONE flow. The image and
+# audio capstones below run the same driver with their own gates.
 # ---------------------------------------------------------------------------
+
+_LEDGER = (
+    "range_id int, n_arrived bigint, n_quality_fail bigint, "
+    "n_dup_within bigint, n_dup_prior bigint"
+)
+
+
+def _range_id() -> Column:
+    """Landing batch of an arriving odd doc: doc_id % 6 of 1, 3, 5 lands
+    in range 0, 1, 2."""
+    return ((F.col("doc_id") % 6 - 1) / 2).cast("int").alias("range_id")
+
+
+def _planted_source() -> Column:
+    """Planted overlap of an arriving odd doc: id % 10 == 1 copies even
+    doc id-1 (duplicate of the corpus), id % 10 == 9 odd doc id-6
+    (duplicate within its landing batch), id % 10 == 5 odd doc id-2
+    (duplicate across batches); NULL for every other doc."""
+    d = F.col("doc_id")
+    return (
+        F.when(d % 10 == 1, d - 1).when(d % 10 == 9, d - 6).when(d % 10 == 5, d - 2)
+    )
+
+
+def _incremental_ingest(
+    base: DataFrame,
+    feed: DataFrame,
+    gate: Callable[[DataFrame], DataFrame],
+    key: list[str],
+    total: tuple[str, Column],
+) -> DataFrame:
+    """The incremental-ingest capstones' one micro-batch driver.
+
+    ``base`` (range_id -1) is committed to a manifest table as the
+    existing corpus; ``feed``'s ranges 0, 1, 2 replay as three
+    micro-batches through :func:`landing_zone_stream` and
+    :func:`run_foreach_batch`. Each batch, in one foreachBatch
+    transaction: ``gate`` returns doc_id, range_id, the ``key``
+    columns, payload columns and q_pass; the min-doc_id survivor per
+    ``key`` among passing rows; anti-join against the CURRENT
+    snapshot's ``key`` columns (base + earlier batches, a pruned column
+    scan); manifest append of the survivors; one ledger row (arrivals,
+    quality failures, within-batch dups, prior-corpus dups). Returns the
+    ledger joined with the final snapshot readback's per-range
+    ``n_ingested`` and ``total = (name, column)`` sum, so the hash gate
+    proves the SINK state, not the in-flight counters."""
+    from supabase_etl_spark.io import manifest_store as M
+    from supabase_etl_spark.io.scratch import scratch_dir
+
+    spark = base.sparkSession
+    table = scratch_dir("inc_ingest_tbl_")
+    M.commit(base, table, mode="overwrite")
+    src = landing_zone_stream([feed.filter(F.col("range_id") == r) for r in range(3)])
+    cols = [c.split()[0] for c in _LEDGER.split(", ")]
+    ledger: dict[str, list[int]] = {c: [] for c in cols}
+
+    def curate(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        q = gate(batch_df).persist()
+        panel = q.agg(
+            F.min("range_id").alias("r"),
+            F.count(F.lit(1)).alias("arrived"),
+            F.sum(F.when(~F.col("q_pass"), 1).otherwise(0)).alias("qfail"),
+        ).collect()[0]
+        wmin = F.min("doc_id").over(Window.partitionBy(*key))
+        cand = (
+            q.filter("q_pass")
+            .withColumn("min_id", wmin)
+            .filter(F.col("doc_id") == F.col("min_id"))
+            .drop("min_id", "q_pass")
+        )
+        n_cand = cand.count()
+        cur = M.read(batch_df.sparkSession, table).select(*key).distinct()
+        ingest = cand.join(cur, key, "left_anti").persist()
+        n_ingest = ingest.count()
+        if n_ingest:
+            M.commit(ingest, table, mode="append")
+        arrived, qfail = panel["arrived"], panel["qfail"]
+        row = (panel["r"], arrived, qfail, arrived - qfail - n_cand, n_cand - n_ingest)
+        for c, v in zip(cols, row):
+            ledger[c].append(int(v))
+        q.unpersist()
+        ingest.unpersist()
+
+    run_foreach_batch(src, curate)
+    name, col = total
+    snap = (
+        M.read(spark, table)
+        .filter(F.col("range_id") >= 0)
+        .groupBy("range_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_ingested"),
+            F.sum(col).cast("bigint").alias(name),
+        )
+    )
+    return (
+        spark.createDataFrame(pa.table(ledger), _LEDGER)
+        .join(snap, "range_id", "left")
+        .select(
+            *cols,
+            *(
+                F.coalesce(c, F.lit(0)).cast("bigint").alias(c)
+                for c in ("n_ingested", name)
+            ),
+        )
+        .orderBy("range_id")
+    )
+
 
 _INC_TOKENS = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
 
@@ -1604,16 +1712,10 @@ def stream_incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFra
     one anti-join); the ledger is O(batches). Commit cost is
     append-only new files; snapshots stay time-travelable, so a bad
     crawl shard rolls back by version."""
-    import os
-
-    from supabase_etl_spark.io import manifest_store as M
     from supabase_etl_spark.io.readers import load_table
-    from supabase_etl_spark.io.scratch import scratch_dir
     from supabase_etl_spark.operators.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
-
-    # --- existing corpus: even docs, committed with content digests ---
     base = d.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id",
         "source",
@@ -1621,52 +1723,20 @@ def stream_incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFra
         F.size(tokens(F.col("text"))).alias("n_words"),
         F.lit(-1).cast("int").alias("range_id"),
     )
-    table = scratch_dir("inc_curation_tbl_")
-    M.commit(base, table, mode="overwrite")
-
-    # --- landing zone: odd docs in 3 files, planted overlap ---
     tgt = d.select(F.col("doc_id").alias("tgt_id"), F.col("text").alias("tgt_text"))
     feed = (
         d.filter(F.col("doc_id") % 2 == 1)
-        .withColumn(
-            "tgt_id",
-            F.when(F.col("doc_id") % 10 == 1, F.col("doc_id") - 1)
-            .when(F.col("doc_id") % 10 == 9, F.col("doc_id") - 6)
-            .when(F.col("doc_id") % 10 == 5, F.col("doc_id") - 2),
-        )
+        .withColumn("tgt_id", _planted_source())
         .join(tgt, "tgt_id", "left")
         .select(
             "doc_id",
             "source",
             F.coalesce("tgt_text", "text").alias("text"),
-            ((F.col("doc_id") % 6 - 1) / 2).cast("int").alias("range_id"),
+            _range_id(),
         )
     )
-    zone = scratch_dir("inc_curation_zone_")
-    for r in range(3):
-        feed.filter(F.col("range_id") == r).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(zone, f"part{r}"))
-    # pin micro-batch order: the file source drains oldest-mtime first
-    now = 1_700_000_000
-    for r in range(3):
-        pdir = os.path.join(zone, f"part{r}")
-        for fn in os.listdir(pdir):
-            os.utime(os.path.join(pdir, fn), (now + 100 * r, now + 100 * r))
 
-    src = (
-        spark.readStream.schema(
-            "doc_id bigint, source string, text string, range_id int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(zone, "part*"))
-    )
-
-    ledger: list[tuple[int, int, int, int, int]] = []
-
-    def curate(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def gate(batch_df: DataFrame) -> DataFrame:
         t = F.array_remove(F.split(F.col("text"), r"\s+"), "")
         n = F.greatest(F.size(t), F.lit(1))
         mean_wl = (
@@ -1676,7 +1746,7 @@ def stream_incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFra
             / n
         )
         alpha = F.size(F.filter(t, lambda x: x.rlike("[A-Za-z]"))).cast("double") / n
-        q = batch_df.select(
+        return batch_df.select(
             "doc_id",
             "source",
             "range_id",
@@ -1687,80 +1757,10 @@ def stream_incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFra
                 & mean_wl.between(3.0, 10.0)
                 & (alpha >= 0.8)
             ).alias("q_pass"),
-        ).persist()
-        panel = q.agg(
-            F.min("range_id").alias("r"),
-            F.count(F.lit(1)).alias("arrived"),
-            F.sum(F.when(~F.col("q_pass"), 1).otherwise(0)).alias("qfail"),
-        ).collect()[0]
-        # batch-internal exact dedup: min-doc_id survivor per digest
-        wmin = F.min("doc_id").over(Window.partitionBy("digest"))
-        cand = (
-            q.filter("q_pass")
-            .withColumn("min_id", wmin)
-            .filter(F.col("doc_id") == F.col("min_id"))
-            .drop("min_id", "q_pass")
         )
-        n_cand = cand.count()
-        n_dup_within = int(panel["arrived"]) - int(panel["qfail"]) - n_cand
-        # blocking set: the CURRENT snapshot's digest column (base +
-        # earlier batches), a pruned column scan of the manifest table
-        cur = M.read(batch_df.sparkSession, table).select("digest").distinct()
-        ingest = cand.join(cur, "digest", "left_anti").persist()
-        n_ingest = ingest.count()
-        if n_ingest:
-            M.commit(ingest, table, mode="append")
-        ledger.append(
-            (
-                int(panel["r"]),
-                int(panel["arrived"]),
-                int(panel["qfail"]),
-                int(n_dup_within),
-                int(n_cand - n_ingest),
-            )
-        )
-        q.unpersist()
-        ingest.unpersist()
 
-    ckpt = scratch_dir("inc_curation_ckpt_")
-    sq = (
-        src.writeStream.foreachBatch(curate)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    led = spark.createDataFrame(
-        ledger,
-        "range_id int, n_arrived bigint, n_quality_fail bigint, "
-        "n_dup_within bigint, n_dup_prior bigint",
-    )
-    # the hash gate proves the SINK: per-range ingested stats come from
-    # the final snapshot readback, not the in-flight counters
-    snap = (
-        M.read(spark, table)
-        .filter(F.col("range_id") >= 0)
-        .groupBy("range_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ingested"),
-            F.sum("n_words").cast("bigint").alias("tokens_ingested"),
-        )
-    )
-    return (
-        led.join(snap, "range_id", "left")
-        .select(
-            "range_id",
-            "n_arrived",
-            "n_quality_fail",
-            "n_dup_within",
-            "n_dup_prior",
-            F.coalesce("n_ingested", F.lit(0)).cast("bigint").alias("n_ingested"),
-            F.coalesce("tokens_ingested", F.lit(0))
-            .cast("bigint")
-            .alias("tokens_ingested"),
-        )
-        .orderBy("range_id")
+    return _incremental_ingest(
+        base, feed, gate, ["digest"], ("tokens_ingested", F.col("n_words"))
     )
 
 
@@ -1772,16 +1772,6 @@ def stream_incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFra
 
 IMG_INC_DOCS = 256  # fixture cap, mirrors llm_multimodal.IMG_DOCS
 IMG_Q_MIN_PX = 100  # min-resolution quality gate (w*h pixels)
-
-
-def _img_inc_cap() -> int:
-    """Image-count cap for the incremental-ingest capstone. The
-    registry/oracle contract is the literal {IMG_INC_DOCS}; the env
-    override exists ONLY for scripts/scale_curve.py to stress the flow
-    at growing image counts (the oracle is not consulted there)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_MM_INC_DOCS", IMG_INC_DOCS))
 
 
 @query(
@@ -1887,7 +1877,9 @@ def _img_inc_cap() -> int:
     """,
     tags=("streaming", "llm", "multimodal", "dedup", "lakehouse", "pipeline"),
 )
-def multimodal_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def multimodal_incremental_ingest(
+    spark: SparkSession, sf_dir: str, cap: int = IMG_INC_DOCS
+) -> DataFrame:
     """MULTIMODAL INCREMENTAL-INGEST CAPSTONE: the
     stream_incremental_curation_e2e flow with the CODEC dedup stages —
     what a production media pipeline runs when new image shards land.
@@ -1928,17 +1920,14 @@ def multimodal_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     rescanned per batch — the blocking set is the manifest's signature
     columns (a pruned column scan); per-batch work is batch-sized;
     the ledger is O(batches); commits are append-only versioned
-    snapshots, so a bad shard rolls back by version."""
-    import os
+    snapshots, so a bad shard rolls back by version.
 
-    from supabase_etl_spark.io import manifest_store as MS
+    ``cap`` bounds the doc_ids in play; the registry and the oracle use
+    IMG_INC_DOCS, and scripts/scale_curve.py raises it."""
     from supabase_etl_spark.io.readers import load_table
-    from supabase_etl_spark.io.scratch import scratch_dir
     from supabase_etl_spark.operators import multimodal as M
 
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _img_inc_cap()
-    )
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < cap)
 
     def signatures(ids_df: DataFrame) -> DataFrame:
         """distinct img_id -> (img_id, w, h, ahash): real container
@@ -1951,7 +1940,6 @@ def multimodal_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
             "ahash",
         )
 
-    # --- existing corpus: even docs, committed as a signature index ---
     base = signatures(
         d.filter(F.col("doc_id") % 2 == 0).select(F.col("doc_id").alias("img_id"))
     ).select(
@@ -1961,142 +1949,37 @@ def multimodal_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         "h",
         F.lit(-1).cast("int").alias("range_id"),
     )
-    table = scratch_dir("mm_inc_tbl_")
-    MS.commit(base, table, mode="overwrite")
-
-    # --- landing zone: odd docs in 3 files, planted pixel overlap ---
     feed = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
-        ((F.col("doc_id") % 6 - 1) / 2).cast("int").alias("range_id"),
-        F.when(F.col("doc_id") % 10 == 1, F.col("doc_id") - 1)
-        .when(F.col("doc_id") % 10 == 9, F.col("doc_id") - 6)
-        .when(F.col("doc_id") % 10 == 5, F.col("doc_id") - 2)
-        .otherwise(F.col("doc_id"))
-        .alias("img_id"),
-    )
-    zone = scratch_dir("mm_inc_zone_")
-    for r in range(3):
-        feed.filter(F.col("range_id") == r).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(zone, f"part{r}"))
-    now = 1_700_000_000
-    for r in range(3):
-        pdir = os.path.join(zone, f"part{r}")
-        for fn in os.listdir(pdir):
-            os.utime(os.path.join(pdir, fn), (now + 100 * r, now + 100 * r))
-
-    src = (
-        spark.readStream.schema("doc_id bigint, range_id int, img_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(zone, "part*"))
+        _range_id(),
+        _planted_source().otherwise(F.col("doc_id")).alias("img_id"),
     )
 
-    ledger: list[tuple[int, int, int, int, int]] = []
-
-    def curate(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        # decode once per distinct image in THIS batch; pin the joined
-        # frame so the Arrow decode pass never re-executes per consumer
-        q = (
-            batch_df.join(signatures(batch_df.select("img_id").distinct()), "img_id")
-            .select(
-                "doc_id",
-                "range_id",
-                "ahash",
-                "w",
-                "h",
-                ((F.col("w") * F.col("h")) >= IMG_Q_MIN_PX).alias("q_pass"),
-            )
-            .persist()
-        )
-        panel = q.agg(
-            F.min("range_id").alias("r"),
-            F.count(F.lit(1)).alias("arrived"),
-            F.sum(F.when(~F.col("q_pass"), 1).otherwise(0)).alias("qfail"),
-        ).collect()[0]
-        # batch-internal perceptual dedup: min-doc_id survivor per sig
-        wmin = F.min("doc_id").over(Window.partitionBy("ahash", "w", "h"))
-        cand = (
-            q.filter("q_pass")
-            .withColumn("min_id", wmin)
-            .filter(F.col("doc_id") == F.col("min_id"))
-            .drop("min_id", "q_pass")
-        )
-        n_cand = cand.count()
-        n_dup_within = int(panel["arrived"]) - int(panel["qfail"]) - n_cand
-        # blocking set: the CURRENT snapshot's signature columns (base +
-        # earlier batches), a pruned column scan of the manifest table
-        cur = MS.read(sess, table).select("ahash", "w", "h").distinct()
-        ingest = cand.join(cur, ["ahash", "w", "h"], "left_anti").persist()
-        n_ingest = ingest.count()
-        if n_ingest:
-            MS.commit(ingest, table, mode="append")
-        ledger.append(
-            (
-                int(panel["r"]),
-                int(panel["arrived"]),
-                int(panel["qfail"]),
-                int(n_dup_within),
-                int(n_cand - n_ingest),
-            )
-        )
-        q.unpersist()
-        ingest.unpersist()
-
-    ckpt = scratch_dir("mm_inc_ckpt_")
-    sq = (
-        src.writeStream.foreachBatch(curate)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    led = spark.createDataFrame(
-        ledger,
-        "range_id int, n_arrived bigint, n_quality_fail bigint, "
-        "n_dup_within bigint, n_dup_prior bigint",
-    )
-    # the hash gate proves the SINK: per-range ingest stats come from
-    # the final snapshot readback, not the in-flight counters
-    snap = (
-        MS.read(spark, table)
-        .filter(F.col("range_id") >= 0)
-        .groupBy("range_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ingested"),
-            F.sum(F.col("w") * F.col("h")).cast("bigint").alias("pixels_ingested"),
-        )
-    )
-    return (
-        led.join(snap, "range_id", "left")
-        .select(
+    def gate(batch_df: DataFrame) -> DataFrame:
+        # decode once per distinct image in THIS batch; the driver pins
+        # the gated frame, so the Arrow decode pass never re-executes
+        return batch_df.join(
+            signatures(batch_df.select("img_id").distinct()), "img_id"
+        ).select(
+            "doc_id",
             "range_id",
-            "n_arrived",
-            "n_quality_fail",
-            "n_dup_within",
-            "n_dup_prior",
-            F.coalesce("n_ingested", F.lit(0)).cast("bigint").alias("n_ingested"),
-            F.coalesce("pixels_ingested", F.lit(0))
-            .cast("bigint")
-            .alias("pixels_ingested"),
+            "ahash",
+            "w",
+            "h",
+            ((F.col("w") * F.col("h")) >= IMG_Q_MIN_PX).alias("q_pass"),
         )
-        .orderBy("range_id")
+
+    return _incremental_ingest(
+        base,
+        feed,
+        gate,
+        ["ahash", "w", "h"],
+        ("pixels_ingested", F.col("w") * F.col("h")),
     )
 
 
 AUD_INC_DOCS = 512  # fixture cap for the audio ingest capstone
 AUD_Q_MIN_SAMPLES = 500  # min-duration quality gate (samples)
-
-
-def _aud_inc_cap() -> int:
-    """Clip-count cap for the audio incremental-ingest capstone; env
-    override exists ONLY for scripts/scale_curve.py stress runs."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_AUD_INC_DOCS", AUD_INC_DOCS))
 
 
 @query(
@@ -2200,7 +2083,9 @@ def _aud_inc_cap() -> int:
     tags=("streaming", "llm", "multimodal", "audio", "dedup", "lakehouse",
           "pipeline"),
 )
-def multimodal_audio_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def multimodal_audio_incremental_ingest(
+    spark: SparkSession, sf_dir: str, cap: int = AUD_INC_DOCS
+) -> DataFrame:
     """AUDIO incremental-ingest capstone — the second modality of
     multimodal_incremental_ingest (VERDICT r10 task 7 asked for
     "images/audio"): new audio shards land as micro-batches against
@@ -2218,17 +2103,14 @@ def multimodal_audio_incremental_ingest(spark: SparkSession, sf_dir: str) -> Dat
 
     100 TB posture: identical to the image capstone — signatures,
     never samples, cross the shuffle; blocking set is a pruned column
-    scan of the manifest; per-batch work is batch-sized."""
-    import os
+    scan of the manifest; per-batch work is batch-sized.
 
-    from supabase_etl_spark.io import manifest_store as MS
+    ``cap`` bounds the doc_ids in play; the registry and the oracle use
+    AUD_INC_DOCS, and scripts/scale_curve.py raises it."""
     from supabase_etl_spark.io.readers import load_table
-    from supabase_etl_spark.io.scratch import scratch_dir
     from supabase_etl_spark.operators import multimodal as M
 
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _aud_inc_cap()
-    )
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < cap)
 
     def signatures(ids_df: DataFrame) -> DataFrame:
         clips = M.generate_audio(ids_df, id_col="aud_id")
@@ -2248,120 +2130,29 @@ def multimodal_audio_incremental_ingest(spark: SparkSession, sf_dir: str) -> Dat
         "n_samples",
         F.lit(-1).cast("int").alias("range_id"),
     )
-    table = scratch_dir("aud_inc_tbl_")
-    MS.commit(base, table, mode="overwrite")
-
     feed = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
-        ((F.col("doc_id") % 6 - 1) / 2).cast("int").alias("range_id"),
-        F.when(F.col("doc_id") % 10 == 1, F.col("doc_id") - 1)
-        .when(F.col("doc_id") % 10 == 9, F.col("doc_id") - 6)
-        .when(F.col("doc_id") % 10 == 5, F.col("doc_id") - 2)
-        .otherwise(F.col("doc_id"))
-        .alias("aud_id"),
-    )
-    zone = scratch_dir("aud_inc_zone_")
-    for r in range(3):
-        feed.filter(F.col("range_id") == r).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(zone, f"part{r}"))
-    now = 1_700_000_000
-    for r in range(3):
-        pdir = os.path.join(zone, f"part{r}")
-        for fn in os.listdir(pdir):
-            os.utime(os.path.join(pdir, fn), (now + 100 * r, now + 100 * r))
-
-    src = (
-        spark.readStream.schema("doc_id bigint, range_id int, aud_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(zone, "part*"))
+        _range_id(),
+        _planted_source().otherwise(F.col("doc_id")).alias("aud_id"),
     )
 
-    ledger: list[tuple[int, int, int, int, int]] = []
-
-    def curate(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        q = (
-            batch_df.join(signatures(batch_df.select("aud_id").distinct()), "aud_id")
-            .select(
-                "doc_id",
-                "range_id",
-                "fingerprint",
-                "n_samples",
-                (F.col("n_samples") >= AUD_Q_MIN_SAMPLES).alias("q_pass"),
-            )
-            .persist()
-        )
-        panel = q.agg(
-            F.min("range_id").alias("r"),
-            F.count(F.lit(1)).alias("arrived"),
-            F.sum(F.when(~F.col("q_pass"), 1).otherwise(0)).alias("qfail"),
-        ).collect()[0]
-        wmin = F.min("doc_id").over(Window.partitionBy("fingerprint", "n_samples"))
-        cand = (
-            q.filter("q_pass")
-            .withColumn("min_id", wmin)
-            .filter(F.col("doc_id") == F.col("min_id"))
-            .drop("min_id", "q_pass")
-        )
-        n_cand = cand.count()
-        n_dup_within = int(panel["arrived"]) - int(panel["qfail"]) - n_cand
-        cur = MS.read(sess, table).select("fingerprint", "n_samples").distinct()
-        ingest = cand.join(cur, ["fingerprint", "n_samples"], "left_anti").persist()
-        n_ingest = ingest.count()
-        if n_ingest:
-            MS.commit(ingest, table, mode="append")
-        ledger.append(
-            (
-                int(panel["r"]),
-                int(panel["arrived"]),
-                int(panel["qfail"]),
-                int(n_dup_within),
-                int(n_cand - n_ingest),
-            )
-        )
-        q.unpersist()
-        ingest.unpersist()
-
-    ckpt = scratch_dir("aud_inc_ckpt_")
-    sq = (
-        src.writeStream.foreachBatch(curate)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    led = spark.createDataFrame(
-        ledger,
-        "range_id int, n_arrived bigint, n_quality_fail bigint, "
-        "n_dup_within bigint, n_dup_prior bigint",
-    )
-    snap = (
-        MS.read(spark, table)
-        .filter(F.col("range_id") >= 0)
-        .groupBy("range_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ingested"),
-            F.sum("n_samples").cast("bigint").alias("samples_ingested"),
-        )
-    )
-    return (
-        led.join(snap, "range_id", "left")
-        .select(
+    def gate(batch_df: DataFrame) -> DataFrame:
+        return batch_df.join(
+            signatures(batch_df.select("aud_id").distinct()), "aud_id"
+        ).select(
+            "doc_id",
             "range_id",
-            "n_arrived",
-            "n_quality_fail",
-            "n_dup_within",
-            "n_dup_prior",
-            F.coalesce("n_ingested", F.lit(0)).cast("bigint").alias("n_ingested"),
-            F.coalesce("samples_ingested", F.lit(0))
-            .cast("bigint")
-            .alias("samples_ingested"),
+            "fingerprint",
+            "n_samples",
+            (F.col("n_samples") >= AUD_Q_MIN_SAMPLES).alias("q_pass"),
         )
-        .orderBy("range_id")
+
+    return _incremental_ingest(
+        base,
+        feed,
+        gate,
+        ["fingerprint", "n_samples"],
+        ("samples_ingested", F.col("n_samples")),
     )
 
 
@@ -2458,13 +2249,11 @@ def stream_watermark_late_drop_ledger(spark: SparkSession, sf_dir: str) -> DataF
     Reference: the cron reference re-runs the whole extract daily
     (etl.yml:4-6) and has no late-data story; this is the Structured
     Streaming contract a 100 TB ingest needs instead."""
-    import os
     import shutil
     import tempfile
     import uuid
 
     from supabase_etl_spark.io.readers import load_table
-    from supabase_etl_spark.io.scratch import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     ev = pin(ev)  # one source scan feeds bounds + 3 writes
@@ -2484,21 +2273,8 @@ def stream_watermark_late_drop_ledger(spark: SparkSession, sf_dir: str) -> DataF
         .otherwise(F.lit(2))
         .alias("arrival"),
     )
-    zone = scratch_dir("wm_ledger_zone_")
-    for r in range(3):
-        sched.filter(F.col("arrival") == r).select("event_id", "ts").coalesce(
-            1
-        ).write.parquet(os.path.join(zone, f"p{r}"))
-    t0 = 1_700_000_000
-    for r in range(3):
-        pdir = os.path.join(zone, f"p{r}")
-        for fn in os.listdir(pdir):
-            os.utime(os.path.join(pdir, fn), (t0 + 100 * r, t0 + 100 * r))
-
-    src = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(zone, "p*"))
+    src = landing_zone_stream(
+        [sched.filter(F.col("arrival") == r).select("event_id", "ts") for r in range(3)]
     )
     agg = (
         src.withWatermark("ts", "31 minutes")
@@ -2533,11 +2309,13 @@ def stream_watermark_late_drop_ledger(spark: SparkSession, sf_dir: str) -> DataF
     )
     survived = win.agg(F.sum("n")).first()[0] or 0
     summary = spark.createDataFrame(
-        [
-            ("dropped_state_rows", None, dropped),
-            ("late_events", None, arrived - survived),
-            ("arrived", None, arrived),
-        ],
+        pa.table(
+            {
+                "part": ["dropped_state_rows", "late_events", "arrived"],
+                "window_start": [None] * 3,
+                "n": [dropped, arrived - survived, arrived],
+            }
+        ),
         "part string, window_start timestamp, n bigint",
     )
     return win.unionByName(summary).orderBy("part", "window_start")

@@ -7,6 +7,10 @@ processes exactly the files that arrived since the last checkpoint and
 stops — incremental batch with exactly-once bookkeeping, which is what
 a 100 TB ingest actually wants (no always-on cluster, resumable).
 
+Multi-batch replays build their micro-batches with
+``landing_zone_stream``: one parquet file per batch, mtimes pinned in
+batch order, read one file per trigger.
+
 events.parquet stores TIMESTAMP(NANOS); like the batch reader
 (io/readers.py) we read it as long and truncate to micros so event-time
 semantics agree with DuckDB.
@@ -14,6 +18,7 @@ semantics agree with DuckDB.
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 
@@ -68,6 +73,32 @@ def read_events_stream(
     if nanos:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
+
+
+def landing_zone_stream(frames: list[DataFrame]) -> DataFrame:
+    """Replay ``frames`` as a landing zone: each frame is written as one
+    parquet file, the files' mtimes are pinned in list order, and the
+    zone is returned as a ``maxFilesPerTrigger=1`` stream with the
+    frames' schema. Under AvailableNow micro-batch r then reads exactly
+    ``frames[r]`` (the file source drains oldest-mtime first), which is
+    what lets a first-wins replay match a rank-by-arrival oracle."""
+    from supabase_etl_spark.io.scratch import scratch_dir
+
+    zone = scratch_dir("landing_zone_")
+    # written last-first, so batch order rests on the pinned mtimes alone
+    # (a zone written in arrival order would hide a missing pin)
+    for r, frame in reversed(list(enumerate(frames))):
+        pdir = os.path.join(zone, f"part{r}")
+        frame.coalesce(1).write.parquet(pdir)
+        t = 1_700_000_000 + 100 * r
+        for fn in os.listdir(pdir):
+            os.utime(os.path.join(pdir, fn), (t, t))
+    return (
+        frames[0]
+        .sparkSession.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(zone, "part*"))
+    )
 
 
 def run_available_now(sdf: DataFrame, output_mode: str) -> DataFrame:

@@ -41,10 +41,6 @@ ALLOWED = {
     "queries/ml_train.py::ml_svm_hinge_gd": 1,
     "queries/relational.py::sql_ddl_managed_table": 1,
     "queries/relational.py::sql_ddl_views": 1,
-    "queries/streaming.py::multimodal_audio_incremental_ingest": 1,
-    "queries/streaming.py::multimodal_incremental_ingest": 1,
-    "queries/streaming.py::stream_incremental_curation_e2e": 1,
-    "queries/streaming.py::stream_watermark_late_drop_ledger": 1,
 }
 
 

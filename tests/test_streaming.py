@@ -682,22 +682,73 @@ def test_transform_with_state_gate_reason_is_exact():
         assert "google.protobuf" in reason
 
 
-def test_incremental_curation_capstone_batches_and_snapshots(spark):
-    """stream_incremental_curation_e2e must really run ONE transaction
-    per landing file: 3 ledger rows (one per micro-batch, in pinned
-    mtime order 0,1,2), and the manifest table must hold the base
-    commit plus one append per ingesting batch — so each snapshot is a
-    time-travelable audit point. dup_prior must be non-decreasing-able
-    across batches only via REAL corpus growth: range 0 can only
-    collide with base, later ranges also with earlier ingests."""
-    from supabase_etl_spark.queries import REGISTRY, load_all
+def test_landing_zone_replays_frames_in_list_order(spark):
+    """landing_zone_stream writes its files last-first, so only the
+    pinned mtimes can order the batches: micro-batch r must hold frame
+    r's rows and nothing else. That order is what makes the ingest
+    capstones' first-wins replay match the oracle's rank-by-range."""
+    from supabase_etl_spark.streaming.sinks import run_foreach_batch
+    from supabase_etl_spark.streaming.source import landing_zone_stream
 
-    load_all()
-    out = (
-        REGISTRY["stream_incremental_curation_e2e"]
-        .fn(spark, "/root/testdata/sf0.001")
-        .collect()
-    )
+    want = {r: list(range(100 * r, 100 * r + 3 + r)) for r in range(3)}
+    seen = {}
+
+    def handler(batch_df, batch_id):
+        seen[batch_id] = sorted(row["id"] for row in batch_df.collect())
+
+    frames = [spark.range(ids[0], ids[-1] + 1) for ids in want.values()]
+    run_foreach_batch(landing_zone_stream(frames), handler)
+    assert seen == want
+
+
+def test_incremental_replay_has_one_path():
+    """Landing zones come from streaming.source.landing_zone_stream and
+    foreachBatch runs from streaming.sinks.run_foreach_batch: no query
+    pins file mtimes or starts a foreachBatch run of its own."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    queries = repo / "supabase_etl_spark" / "queries"
+    offenders = [
+        f"{path.name}:{node.lineno} {node.func.attr}"
+        for path in sorted(queries.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("utime", "foreachBatch")
+    ]
+    assert not offenders, offenders
+
+
+def _persistent_rdds(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    it = jmap.keySet().iterator()
+    out = {}
+    while it.hasNext():
+        k = it.next()
+        out[k] = jmap.get(k)
+    return out
+
+
+def _assert_ledger_and_no_leak(spark, name):
+    """Run ingest capstone `name` and check its ledger and its state.
+
+    The ledger must hold ONE transaction per landing file: 3 rows (one
+    per micro-batch, in pinned mtime order 0,1,2), and every arrival is
+    counted exactly once — quality fail, within-batch dup, prior-corpus
+    dup or ingested (read back from the final snapshot).
+
+    State must stay bounded: the foreachBatch body persists per-batch
+    frames and MUST unpersist them before the next batch — a leak grows
+    executor storage linearly in the batch count, which at production
+    stream lengths is an OOM. Every persistent RDD that survives the run
+    must be a sanctioned localCheckpoint pin, never persist()/cache()
+    residue."""
+    from supabase_etl_spark.queries import load_all
+
+    before = set(_persistent_rdds(spark))
+    out = load_all()[name].fn(spark, "/root/testdata/sf0.001").collect()
     assert [r["range_id"] for r in out] == [0, 1, 2]
     for r in out:
         assert (
@@ -707,39 +758,49 @@ def test_incremental_curation_capstone_batches_and_snapshots(spark):
             + r["n_dup_prior"]
             + r["n_ingested"]
         )
-
-
-def test_incremental_replay_state_is_bounded(spark):
-    """VERDICT r13 task 8: the stateful replay operators persist
-    bounded per-batch frames and MUST unpersist them before the next
-    batch — a leak here grows executor storage linearly in the batch
-    count, which at production stream lengths is an OOM. Run the
-    heaviest replay query end-to-end and assert every surviving
-    persistent RDD is a sanctioned localCheckpoint pin, never
-    persist()/cache() residue from a foreachBatch body."""
-    from supabase_etl_spark.queries import load_all
-
-    def _persistent_rdds():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jmap.keySet().iterator()
-        out = {}
-        while it.hasNext():
-            k = it.next()
-            out[k] = jmap.get(k)
-        return out
-
-    before = set(_persistent_rdds())
-    q = load_all()["stream_incremental_curation_e2e"]
-    q.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    after = _persistent_rdds()
     leaked = {
         k: v.toString()
-        for k, v in after.items()
+        for k, v in _persistent_rdds(spark).items()
         if k not in before and not v.rdd().isLocallyCheckpointed()
     }
     assert not leaked, (
         "foreachBatch body leaked persist() blocks across batches: "
         f"{leaked}"
     )
+
+
+def test_incremental_curation_capstone_batches_and_snapshots(spark):
+    """stream_incremental_curation_e2e runs one transaction per landing
+    file and accounts for every arrival (see _assert_ledger_and_no_leak)."""
+    _assert_ledger_and_no_leak(spark, "stream_incremental_curation_e2e")
+
+
+def test_incremental_replay_state_is_bounded(spark):
+    """The heaviest replay query, written to a noop sink, leaves no
+    persist()/cache() residue behind: only localCheckpoint pins may
+    survive the run."""
+    from supabase_etl_spark.queries import load_all
+
+    before = set(_persistent_rdds(spark))
+    q = load_all()["stream_incremental_curation_e2e"]
+    q.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
+        "overwrite"
+    ).save()
+    leaked = {
+        k: v.toString()
+        for k, v in _persistent_rdds(spark).items()
+        if k not in before and not v.rdd().isLocallyCheckpointed()
+    }
+    assert not leaked, (
+        "foreachBatch body leaked persist() blocks across batches: "
+        f"{leaked}"
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["multimodal_incremental_ingest", "multimodal_audio_incremental_ingest"]
+)
+def test_media_ingest_capstone_batches_and_state(spark, name):
+    """The two media ingest capstones meet the same ledger and
+    bounded-state contract as the text capstone."""
+    _assert_ledger_and_no_leak(spark, name)
