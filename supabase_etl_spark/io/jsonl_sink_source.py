@@ -1,10 +1,10 @@
 """Python Data Source WRITER (Spark 4 `DataSource.writer`): a
 REST-shaped batch sink implemented entirely in Python.
 
-The reader half of the Python Data Source API is covered by
-io/sdk_source.py (the vnstock-shaped financial-statements source, with
-a streaming variant); this module covers the WRITER half — the piece
-that replaces the reference's chunked REST upsert (etl_supabase.py's
+The stream-reader half of the Python Data Source API is covered by
+io/sdk_source.py (the vnstock-shaped financial-statements stream) and
+io/replay_stream_source.py; this module covers the WRITER half (and a
+batch reader of what it wrote) — the piece that replaces the reference's chunked REST upsert (etl_supabase.py's
 `upsert_df` posts 300-row chunks) when the destination has no JVM
 connector. The commit protocol mirrors the JVM DSv2 contract exactly:
 
@@ -197,11 +197,11 @@ def register(spark) -> None:
 
 class ChunkedJsonlStreamWriter(DataSourceStreamWriter):
     """Streaming half of the sink — the last quadrant of the Python
-    Data Source API matrix (batch reader: sdk_source; stream readers:
-    sdk_source Simple + replay_stream_source full; batch writer:
-    above). Per microbatch: tasks stage exactly like the batch writer;
-    ``commit(messages, batchId)`` publishes the staged files under an
-    EPOCH entry in the manifest. Epoch publication is IDEMPOTENT: a
+    Data Source API matrix (batch reader: ManifestJsonlReader; stream
+    readers: sdk_source Simple + replay_stream_source full; batch
+    writer: above). Per microbatch: tasks stage exactly like the batch
+    writer; ``commit(messages, batchId)`` publishes the staged files
+    under an EPOCH entry in the manifest. Epoch publication is IDEMPOTENT: a
     batch replayed after a crash between sink-commit and checkpoint-
     advance finds its batchId already in the manifest and drops the
     restaged files instead of double-publishing — sink-side

@@ -1,12 +1,12 @@
 """Python Data Source STREAM READER (full ``DataSourceStreamReader``):
 a partitioned parquet-replay stream.
 
-Completes the Python Data Source API surface alongside the batch
-reader + SimpleDataSourceStreamReader (io/sdk_source.py — reads on the
-DRIVER, right for a low-volume API feed) and the DSv2-protocol writer
-(io/jsonl_sink_source.py). The full stream-reader API is the one that
-matters at scale: the driver only PLANS (offset range → row-aligned
-InputPartitions); the actual reads run ON EXECUTORS, one partition
+Completes the Python Data Source API surface alongside the
+SimpleDataSourceStreamReader (io/sdk_source.py — reads on the DRIVER,
+right for a low-volume API feed) and the DSv2-protocol writer and
+batch reader (io/jsonl_sink_source.py). The full stream-reader API is
+the one that matters at scale: the driver only PLANS (offset range →
+row-aligned InputPartitions); the actual reads run ON EXECUTORS, one partition
 each, in parallel — a 100 TB backfill replay is planner-cheap and
 scales with the cluster, which a driver-side Simple reader can never
 do.

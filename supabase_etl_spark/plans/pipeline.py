@@ -73,7 +73,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, dict]:
 
         records = to_jsonb_records(raw, ticker_default=cfg.ticker_default).persist()
         try:
-            metrics["rows"] = records.count()
+            # Counting the plan's rows fills the cache in one job;
+            # DataFrame.count() adds an aggregate shuffle: two jobs.
+            metrics["rows"] = records._jdf.queryExecution().toRdd().count()
             if cfg.csv_dir:
                 csv_path = os.path.join(cfg.csv_dir, table)
                 write_csv(records, csv_path, single_file=True)
@@ -115,26 +117,19 @@ def sdk_sources(tickers: str = "FPT") -> dict[str, Callable[[SparkSession], Data
     """Reference-shaped sources: one table per (ticker, statement), e.g.
     fpt_income_statement / fpt_balance_sheet / fpt_cash_flow for the
     reference's single-ticker run (etl_supabase.py:115-119, :145-147),
-    extracted through the partitioned Python Data Source (op S1). Each
-    table reads only its own statement: one partition, one SDK call."""
-    from supabase_etl_spark.io import sdk_source
+    extracted through the partitioned SDK read (op S1). Each table
+    reads only its own statement: one partition, one SDK call."""
+    from supabase_etl_spark.io.sdk_source import STATEMENTS, read_statements
 
-    sources: dict[str, Callable[[SparkSession], DataFrame]] = {}
-    for ticker in tickers.split(","):
-        for stmt in sdk_source.STATEMENTS:
-
-            def fn(spark: SparkSession, ticker=ticker, stmt=stmt) -> DataFrame:
-                sdk_source.register(spark)
-                return (
-                    spark.read.format("financial_statements")
-                    .option("tickers", ticker)
-                    .option("statements", stmt)
-                    .load()
-                    .drop("statement")
-                )
-
-            sources[f"{ticker.lower()}_{stmt}"] = fn
-    return sources
+    return {
+        f"{ticker.lower()}_{stmt}": (
+            lambda spark, ticker=ticker, stmt=stmt: read_statements(
+                spark, (ticker,), (stmt,)
+            ).drop("statement")
+        )
+        for ticker in tickers.split(",")
+        for stmt in STATEMENTS
+    }
 
 
 def config_from_env(

@@ -156,10 +156,11 @@ def _sdk_oracle_sql() -> str:
 
 @query("ref_sdk_source", oracle=_sdk_oracle_sql(), tags=("reference", "source"))
 def ref_sdk_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference op S1 as a real Spark-4 Python Data Source
-    (io/sdk_source.py): one InputPartition per (ticker, statement), the
-    SDK fetch running executor-side, wide vnstock-shaped frames with
-    Vietnamese year/ticker columns — then straight through the
+    """Reference op S1 as a partitioned Spark read
+    (io/sdk_source.py `read_statements`): one partition per (ticker,
+    statement), the SDK fetch running executor-side in `mapInArrow`,
+    wide vnstock-shaped frames with Vietnamese year/ticker columns —
+    then straight through the
     reference transform (T1 year discovery, T3 exclusion-project, T5
     JSON packing, T6 truthy coalesce) into (ticker, year, data).
     Metrics are cast to DECIMAL(18,2) before packing so the JSON
@@ -167,16 +168,9 @@ def ref_sdk_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the mock SDK's LCG in Python and pins every
     byte of the packed payload (value-hash, not rows-only)."""
     from supabase_etl_spark.functions.packing import to_jsonb_records
-    from supabase_etl_spark.io.sdk_source import METRICS, register
+    from supabase_etl_spark.io.sdk_source import METRICS, read_statements
 
-    register(spark)
-    wide = (
-        spark.read.format("financial_statements")
-        .option("tickers", "FPT,VNM,HPG")
-        .option("start_year", "2020")
-        .option("end_year", "2024")
-        .load()
-    )
+    wide = read_statements(spark, ("FPT", "VNM", "HPG"), start=2020, end=2024)
     wide = wide.select(
         "CP",
         "Năm",

@@ -7,14 +7,17 @@ from __future__ import annotations
 
 import json
 import shutil
+import uuid
 
 import pytest
 
 from supabase_etl_spark.plans.pipeline import (
+    PipelineConfig,
     config_from_env,
     main,
     run_pipeline,
     run_pipeline_incremental,
+    sdk_sources,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -60,6 +63,25 @@ def test_cli_end_to_end_against_mock_postgrest(spark, postgrest_mock, tmp_path, 
         for r in store["requests"]
         if r["path"].startswith("/rest")
     )
+
+
+def test_row_count_fills_the_cache_in_one_job(spark):
+    """A table's row count is one job: run_pipeline counts the persisted
+    plan's rows, which fills the cache without DataFrame.count()'s
+    aggregate shuffle (tests/test_pipeline_single_read.py shows that
+    the sinks then read that cache)."""
+    group = f"row-count-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_pipeline row count")
+    try:
+        report = run_pipeline(
+            spark, PipelineConfig(sources={"t": sdk_sources("FPT")["fpt_cash_flow"]})
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert report == {"t": {"rows": 6}}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_incremental_availablenow_drains_only_new_files(spark, tmp_path):

@@ -1,45 +1,100 @@
-"""Python Data Source (reference S1) contract tests."""
+"""SDK source (reference S1) contract tests: the batch read
+(`read_statements`) and the streaming Python Data Source."""
 
 from __future__ import annotations
 
+import ast
 import json
+import pathlib
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from supabase_etl_spark.io.sdk_source import (
     METRICS,
+    SCHEMA,
     STATEMENTS,
-    FinancialStatementsReader,
     _fetch,
+    read_statements,
     register,
 )
 
 
-def test_partitions_fan_out_per_ticker_statement():
-    r = FinancialStatementsReader({"tickers": "FPT,VNM", "start_year": "2020", "end_year": "2021"})
-    parts = [p.value for p in r.partitions()]
-    assert len(parts) == 2 * len(STATEMENTS)
-    assert ("FPT", "income_statement") in parts
-    assert ("VNM", "cash_flow") in parts
+def test_partitions_fan_out_per_ticker_statement(spark):
+    df = read_statements(spark, ("FPT", "VNM"), start=2020, end=2021)
+    assert df.rdd.getNumPartitions() == 2 * len(STATEMENTS)
+    held = {}
+    for r in df.select(F.spark_partition_id().alias("p"), "CP", "statement").collect():
+        held.setdefault(r["p"], set()).add((r["CP"], r["statement"]))
+    assert sorted(held) == list(range(2 * len(STATEMENTS)))
+    assert all(len(pairs) == 1 for pairs in held.values())
+    assert set.union(*held.values()) == {(t, s) for t in ("FPT", "VNM") for s in STATEMENTS}
 
 
 def test_statements_option_limits_partitions_and_rows(spark):
-    one = FinancialStatementsReader({"tickers": "FPT", "statements": "cash_flow"})
-    assert [p.value for p in one.partitions()] == [("FPT", "cash_flow")]
-    rows = list(one.read(one.partitions()[0]))
-    assert rows and {r[2] for r in rows} == {"cash_flow"}
-    with pytest.raises(ValueError, match="unknown statements"):
-        FinancialStatementsReader({"statements": "cashflow"})
-
-    register(spark)
-    df = (
-        spark.read.format("financial_statements")
-        .option("tickers", "FPT")
-        .option("statements", "cash_flow")
-        .load()
-    )
+    df = read_statements(spark, ("FPT",), ("cash_flow",))
     assert df.rdd.getNumPartitions() == 1
     assert {r["statement"] for r in df.collect()} == {"cash_flow"}
+    # the call itself raises: no action has been asked for, so no job ran
+    with pytest.raises(ValueError, match="unknown statements"):
+        read_statements(spark, ("FPT",), ("cashflow",))
+
+
+def test_empty_year_range_keeps_schema(spark):
+    df = read_statements(spark, ("FPT",), start=2025, end=2024)
+    assert df.collect() == []
+    assert df.schema == StructType.fromDDL(SCHEMA)
+
+
+def test_rows_equal_fetch(spark):
+    tickers, years = ("FPT", "VNM"), range(2019, 2025)
+    got = [tuple(r) for r in read_statements(spark, tickers).collect()]
+    assert got == [row for t in tickers for s in STATEMENTS for row in _fetch(t, s, years)]
+
+
+def test_sdk_table_plan_has_no_python_data_source(spark):
+    """The pipeline's SDK tables read a Range leaf through mapInArrow:
+    no BatchScan, so Spark's Python data-source planner never runs."""
+    from supabase_etl_spark.plans.pipeline import sdk_sources
+
+    df = sdk_sources("FPT")["fpt_cash_flow"](spark)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan and "(Python)" not in plan, plan
+    assert "MapInArrow" in plan and "Range" in plan, plan
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_batch_sdk_read_has_one_path():
+    """Batch SDK reads go through read_statements: nothing under the
+    package batch-reads the financial_statements data source, and the
+    data source defines no batch reader (readStream stays)."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "supabase_etl_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "format"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "financial_statements"
+                    for a in node.args
+                )
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+            if (
+                isinstance(node, ast.ClassDef)
+                and node.name == "FinancialStatementsDataSource"
+                and any(
+                    isinstance(f, ast.FunctionDef) and f.name == "reader" for f in node.body
+                )
+            ):
+                offenders.append(f"{path.name}:{node.lineno} reader")
+    assert not offenders, offenders
 
 
 def test_register_skips_an_already_registered_source(spark, monkeypatch):
@@ -60,14 +115,7 @@ def test_fetch_is_deterministic():
 
 
 def test_source_reads_vnstock_shape(spark):
-    register(spark)
-    df = (
-        spark.read.format("financial_statements")
-        .option("tickers", "FPT,VNM")
-        .option("start_year", "2022")
-        .option("end_year", "2023")
-        .load()
-    )
+    df = read_statements(spark, ("FPT", "VNM"), start=2022, end=2023)
     assert df.columns[:3] == ["CP", "Năm", "statement"]
     rows = df.collect()
     assert len(rows) == 2 * len(STATEMENTS) * 2  # tickers x statements x years
@@ -78,14 +126,7 @@ def test_source_reads_vnstock_shape(spark):
 def test_source_through_reference_transform(spark):
     from supabase_etl_spark.functions.packing import to_jsonb_records
 
-    register(spark)
-    wide = (
-        spark.read.format("financial_statements")
-        .option("tickers", "FPT")
-        .option("start_year", "2024")
-        .option("end_year", "2024")
-        .load()
-    )
+    wide = read_statements(spark, ("FPT",), start=2024, end=2024)
     recs = to_jsonb_records(wide).collect()
     assert len(recs) == len(STATEMENTS)
     for r in recs:
