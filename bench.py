@@ -59,6 +59,10 @@ exemption, not the engine. They report under `codec_queries` /
 `codec_total` with the synthesis-oracle wall kept as a diagnostic
 (`codec_oracle_synthesis`); `ratio_total` and the per-query ratio maps
 cover only basis="ratio" queries, where both sides do equivalent work.
+Hash basis: `sample_dsir` hashes md5 on both sides;
+`dedup_exact_substring` hashes its windows with xxhash64 while its
+oracle hashes md5 (same ledger), so the two sides of that ratio do not
+compute the same hash.
 
 SELF-LABELING (r11, VERDICT r10 task 6): the noop-action floor is
 sampled throughout the run (start, every 8th query, end —
@@ -147,21 +151,6 @@ def main() -> None:
     # populates the codegen cache so the measured run is steady-state
     # compute, as a long-lived cluster would see.
     smoke_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-
-    # HASH-BASIS POLICY (r11, ADVICE r10): the ratio maps the gate reads
-    # are strictly apples-to-apples — every ratio-basis row times the
-    # ORACLE-PARITY path (md5 where the DuckDB oracle hashes md5), so
-    # numerator and denominator do the same hash work. The faster
-    # production paths (xxhash64, ~25-27% faster end-to-end, SCALE.md
-    # A/Bs) are timed as *_xxhash64_production DIAGNOSTIC rows excluded
-    # from totals/ratios. This inverts the r6-r10 arrangement (headline
-    # xxhash64 + md5 diagnostic) for sample_dsir and
-    # dedup_exact_substring — round-over-round comparison for those two
-    # rows crosses the basis change at r11.
-    production_overrides: dict[str, dict[str, str]] = {
-        "sample_dsir": {"SPARK_GRAFT_DSIR_HASH": "xxhash64"},
-        "dedup_exact_substring": {"SPARK_GRAFT_XS_HASH": "xxhash64"},
-    }
 
     # Fixed-stage floor (VERDICT r7 task 7): the cheapest possible Spark
     # action at this parallelism — spark.range(1) through a noop write —
@@ -300,29 +289,6 @@ def main() -> None:
         # the self-joins; A/B showed caching was a net loss), so this
         # clearCache is belt-and-braces for any future cached frame,
         # not a required leak valve as in r1-r3
-        spark.catalog.clearCache()
-
-    # Diagnostic rows (excluded from totals/ratios): the xxhash64
-    # PRODUCTION paths, so the md5↔xxhash64 gap stays visible
-    # round-over-round while the ratio maps stay apples-to-apples.
-    for name, env in production_overrides.items():
-        if name not in bench_set:
-            continue
-        for k, v in env.items():
-            os.environ[k] = v
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            materialize(bench_set[name].fn(spark, sf_dir))
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        for k in env:
-            os.environ.pop(k, None)
-        timings[f"{name}_xxhash64_production"] = round(best, 3)
-        print(
-            f"# {name}_xxhash64_production: {best:.3f}s (diagnostic)",
-            flush=True,
-        )
         spark.catalog.clearCache()
 
     # end-of-Spark-work floor sample, then the run-long median (the

@@ -1089,18 +1089,12 @@ def main() -> None:
 
     def t_exact_substring(docs):
         # ExactSubstr dedup (dedup_exact_substring), real fn over
-        # blown-up docs — production xxhash64 window-hash path
-        import os
-
+        # blown-up docs
         from supabase_etl_spark.queries.llm_dedup import dedup_exact_substring
 
-        os.environ["SPARK_GRAFT_XS_HASH"] = "xxhash64"
-        try:
-            dedup_exact_substring(spark, docs.__sfdir__).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        finally:
-            os.environ.pop("SPARK_GRAFT_XS_HASH", None)
+        dedup_exact_substring(spark, docs.__sfdir__).write.format("noop").mode(
+            "overwrite"
+        ).save()
 
     def t_cdc_chunks(docs):
         # content-defined chunking dedup (dedup_cdc_chunks), real fn

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 # ref defaults (etl_supabase.py:45,55)
 YEAR_CANDIDATES = ("năm", "year")
 EXCLUDE_DEFAULT = ("năm", "year", "cp", "ticker")
+TICKER_DEFAULT = "FPT"  # ref :59, the ticker of a row with neither column
 
 
 def discover_column_ci(df: DataFrame, candidates=YEAR_CANDIDATES) -> str | None:
@@ -74,18 +75,14 @@ def pack_map(df: DataFrame, exclude_ci=EXCLUDE_DEFAULT) -> Column:
     return F.create_map(*pairs)
 
 
-def to_jsonb_records(
-    df: DataFrame,
-    ticker_default: str = "FPT",
-    exclude_ci=EXCLUDE_DEFAULT,
-    payload: str = "json",
-) -> DataFrame:
+def to_jsonb_records(df: DataFrame) -> DataFrame:
     """The reference's whole transform (T7, etl_supabase.py:35-68) as a
     single select: (ticker, year, data).
 
-    * ticker: truthy-coalesce of CP → ticker → default (ref :59)
+    * ticker: truthy-coalesce of CP → ticker → TICKER_DEFAULT (ref :59)
     * year:   discovered year column, null-safe int cast (ref :43-50)
-    * data:   non-excluded columns packed as JSON or map (ref :53-57)
+    * data:   the columns outside EXCLUDE_DEFAULT packed as one JSON
+              object (ref :53-57)
 
     NaN values in float columns are normalized to null first
     (ref :57; SURVEY §2.3.3).
@@ -101,14 +98,13 @@ def to_jsonb_records(
 
     ticker_cols = [c for c in df.columns if c.lower() in ("cp", "ticker")]
     ticker_expr = (
-        truthy_coalesce(*ticker_cols, default=ticker_default, df=df)
+        truthy_coalesce(*ticker_cols, default=TICKER_DEFAULT, df=df)
         if ticker_cols
-        else F.lit(ticker_default)
+        else F.lit(TICKER_DEFAULT)
     )
 
-    data_expr = pack_json(df, exclude_ci) if payload == "json" else pack_map(df, exclude_ci)
     return df.select(
         ticker_expr.cast("string").alias("ticker"),
         year_expr.alias("year"),
-        data_expr.alias("data"),
+        pack_json(df).alias("data"),
     )

@@ -10,12 +10,12 @@ exponential-backoff retry, which the reference lacks (SURVEY §4.1 "no
 retries/backoff").
 
 Delivery contract: at-least-once, idempotent when the target has a
-primary key and upsert=True. NOTE an intentional improvement over the
-reference: the reference sends only `Prefer: return=minimal`
-(etl_supabase.py:76-80), so its POST is a plain insert that fails on a
-primary-key conflict; this sink's default upsert=True adds
-`Prefer: resolution=merge-duplicates`, making re-runs idempotent.
-Set upsert=False for bit-exact reference wire behavior.
+primary key. NOTE an intentional improvement over the reference: the
+reference sends only `Prefer: return=minimal` (etl_supabase.py:76-80),
+so its POST is a plain insert that fails on a primary-key conflict;
+this sink always adds `Prefer: resolution=merge-duplicates`, making
+re-runs idempotent, and the storage upload always overwrites
+(`?upsert=true`).
 
 Payload: each row posts as one JSON object, rendered once in the JVM
 by Spark's JSON writer (`to_json`, nulls kept) — the writer that spells
@@ -59,16 +59,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+MAX_RETRIES = 3  # re-sends of one chunk before the sink gives up
+POST_TIMEOUT_S = 30.0
+UPLOAD_TIMEOUT_S = 60.0
+# 4xx replies that can succeed on re-send: request timeout and
+# PostgREST's rate limit. Every other 4xx fails fast.
+RETRYABLE_4XX = (408, 429)
+
+
 @dataclass
 class RestSinkConfig:
     base_url: str  # e.g. http://host:port/rest/v1
     table: str
     api_key: str = ""
     chunk_size: int = 300  # ref parity (etl_supabase.py:71)
-    max_retries: int = 3
     backoff_s: float = 0.5
-    timeout_s: float = 30.0
-    upsert: bool = True
 
 
 def _row_text(df: DataFrame, json_columns: tuple[str, ...]) -> Column:
@@ -92,15 +97,13 @@ def _row_text(df: DataFrame, json_columns: tuple[str, ...]) -> Column:
 
 def _post_chunk(cfg: RestSinkConfig, rows: list[bytes]) -> int:
     """POST one chunk of rendered rows (UTF-8 JSON objects) with
-    retry/backoff. 4xx fails fast (a malformed payload won't improve on
-    retry); 5xx / connection errors retry. Returns the number of POSTs
-    re-sent."""
+    retry/backoff. 5xx, 408, 429 and connection errors retry; any other
+    4xx fails fast (a malformed payload won't improve on retry).
+    Returns the number of POSTs re-sent."""
     body = b"[" + b",".join(rows) + b"]"
     headers = {
         "Content-Type": "application/json",
-        "Prefer": "resolution=merge-duplicates,return=minimal"
-        if cfg.upsert
-        else "return=minimal",
+        "Prefer": "resolution=merge-duplicates,return=minimal",
     }
     if cfg.api_key:
         headers["apikey"] = cfg.api_key
@@ -110,19 +113,19 @@ def _post_chunk(cfg: RestSinkConfig, rows: list[bytes]) -> int:
     while True:
         req = urllib.request.Request(url, data=body, headers=headers, method="POST")
         try:
-            with urllib.request.urlopen(req, timeout=cfg.timeout_s) as resp:
+            with urllib.request.urlopen(req, timeout=POST_TIMEOUT_S) as resp:
                 if resp.status >= 400:
                     raise urllib.error.HTTPError(url, resp.status, resp.reason, resp.headers, None)
                 return attempt
         except urllib.error.HTTPError as e:
-            if 400 <= e.code < 500:
+            if 400 <= e.code < 500 and e.code not in RETRYABLE_4XX:
                 raise  # fail fast, like raise_for_status (ref :83)
             attempt += 1
-            if attempt > cfg.max_retries:
+            if attempt > MAX_RETRIES:
                 raise
         except (urllib.error.URLError, TimeoutError, ConnectionError):
             attempt += 1
-            if attempt > cfg.max_retries:
+            if attempt > MAX_RETRIES:
                 raise
         time.sleep(cfg.backoff_s * (2 ** (attempt - 1)))
 
@@ -134,7 +137,8 @@ def upsert_rest(
     batches, partition-parallel. `json_columns` name string
     columns that hold JSON text to post as JSON values. Returns
     {'rows': n, 'batches': m, 'retries': r} observed via accumulators;
-    `retries` counts POSTs re-sent after a 5xx or a connection error."""
+    `retries` counts POSTs re-sent after a 5xx, a 408, a 429 or a
+    connection error."""
     sc = df.sparkSession.sparkContext
     rows_acc = sc.accumulator(0)
     batches_acc = sc.accumulator(0)
@@ -162,8 +166,6 @@ def upload_to_storage(
     storage_base_url: str,
     bucket: str = "processed-data",
     api_key: str = "",
-    upsert: bool = True,
-    timeout_s: float = 60.0,
 ) -> None:
     """Stream a local file to a Supabase-Storage-style object endpoint
     (ref L3, etl_supabase.py:88-108): POST {base}/object/{bucket}/{path}
@@ -176,14 +178,12 @@ def upload_to_storage(
     content_type = "text/csv" if local_path.endswith(".csv") else "application/octet-stream"
     with open(local_path, "rb") as f:
         body = f.read()
-    url = f"{storage_base_url.rstrip('/')}/object/{bucket}/{remote_path}"
-    if upsert:
-        url += "?upsert=true"
+    url = f"{storage_base_url.rstrip('/')}/object/{bucket}/{remote_path}?upsert=true"
     headers = {"Content-Type": content_type}
     if api_key:
         headers["apikey"] = api_key
         headers["Authorization"] = f"Bearer {api_key}"
     req = urllib.request.Request(url, data=body, headers=headers, method="POST")
-    with urllib.request.urlopen(req, timeout=timeout_s) as resp:
+    with urllib.request.urlopen(req, timeout=UPLOAD_TIMEOUT_S) as resp:
         if resp.status >= 400:
             raise urllib.error.HTTPError(url, resp.status, resp.reason, resp.headers, None)

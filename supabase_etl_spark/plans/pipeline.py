@@ -30,7 +30,7 @@ import json
 import os
 import sys
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,9 +53,7 @@ class PipelineConfig:
     rest_api_key: str = ""
     storage_base_url: str | None = None
     storage_bucket: str = "processed-data"
-    ticker_default: str = "FPT"
     chunk_size: int = 300  # ref parity (etl_supabase.py:71)
-    extra: dict = field(default_factory=dict)
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, dict]:
@@ -71,7 +69,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, dict]:
         metrics: dict = {}
         raw = source_fn(spark)
 
-        records = to_jsonb_records(raw, ticker_default=cfg.ticker_default).persist()
+        records = to_jsonb_records(raw).persist()
         try:
             # Counting the plan's rows fills the cache in one job;
             # DataFrame.count() adds an aggregate shuffle: two jobs.

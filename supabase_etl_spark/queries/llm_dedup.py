@@ -2516,25 +2516,17 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc window count — pinned (pinning.pin), the hygiene
     # gate's one sanctioned storage use (stores MEMORY_AND_DISK)
     tk = pin(d.select("doc_id", tokens(F.col("text")).alias("t")))
-    import os
-
-    # window-hash choice mirrors the DSIR precedent: md5 is the default
-    # ONLY because the DuckDB oracle must replay it bit-for-bit;
-    # deployments set SPARK_GRAFT_XS_HASH=xxhash64 (~27% faster
-    # end-to-end at sf0.1, identical ledger — pinned by
-    # tests/test_dedup_ops.py), and that's what the bench headline times
-    hfn = (
-        "xxhash64"
-        if os.environ.get("SPARK_GRAFT_XS_HASH", "md5") == "xxhash64"
-        else "md5"
-    )
+    # The window hash only finds repeated windows and the output is the
+    # per-document ledger, so any hash that merges no two distinct
+    # windows gives the oracle's md5 ledger (identical rows at
+    # sf0.001-0.1; tests/test_dedup_ops.py checks the no-merge premise).
     win = pin(tk.filter(F.size("t") >= XS_K).select(
         "doc_id",
         F.explode(
             F.expr(
                 f"transform(sequence(1, size(t) - {XS_K} + 1), "
                 f"i -> struct(i AS pos, "
-                f"{hfn}(array_join(slice(t, i, {XS_K}), ' ')) AS h))"
+                f"xxhash64(array_join(slice(t, i, {XS_K}), ' ')) AS h))"
             )
         ).alias("w"),
     ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h")))

@@ -285,31 +285,14 @@ _DSIR_SQL_BUCKET = (
 
 
 def dsir_bucket_expr(g) -> "F.Column":
-    """Gram → feature-bucket hash for the DSIR family.
-
-    Two paths, identical plan shape, selected by
-    ``SPARK_GRAFT_DSIR_HASH``:
-
-    * ``md5`` (default): 32-bit md5 prefix — the one hash DuckDB
-      replays bit-for-bit, so the oracle gate can value-hash the
-      selected corpus. ~2x the cost of xxhash64 per gram pass
-      (sf0.1 A/B in SCALE.md).
-    * ``xxhash64``: ``pmod(xxhash64(g), B)`` — the production path; a
-      64-bit JVM-side hash with no hex/conv detour. Bucket ids differ
-      from the md5 path (any uniform hash is a valid DSIR feature
-      space — the paper's buckets are arbitrary), so it is gated off
-      by default to keep oracle parity; tests pin that both paths
-      yield statistically indistinguishable bucket-count
-      distributions and overlapping top-k selections.
-    """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_DSIR_HASH", "md5")
-    if mode == "xxhash64":
-        return F.pmod(F.xxhash64(g), F.lit(DSIR_BUCKETS)).cast("bigint")
-    if mode != "md5":
-        raise ValueError(f"SPARK_GRAFT_DSIR_HASH must be md5|xxhash64, got {mode!r}")
+    """Gram → feature-bucket hash for the DSIR family: the 32-bit md5
+    prefix mod DSIR_BUCKETS, which DuckDB replays bit-for-bit as
+    `_DSIR_SQL_BUCKET`. The bucket ids are the result here (they pick
+    the sampled corpus), so any other hash would select different rows
+    than the oracle."""
     return F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("bigint") % DSIR_BUCKETS
+
+
 _DSIR_TOKS = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '')"
 
 
@@ -403,14 +386,11 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing quadratic. Per-doc sums go through exact small decimals so
     executor partition order cannot move the doubles.
 
-    Hash choice: the gram bucket hash defaults to md5-prefix ONLY
-    because the DuckDB oracle must replay it bit-for-bit; an A/B at
-    sf0.1 measured the md5+conv path at ~2x the cost of
-    ``pmod(xxhash64(g), B)`` (numbers in SCALE.md), so production
-    deployments set ``SPARK_GRAFT_DSIR_HASH=xxhash64``
-    (`dsir_bucket_expr`) — one swapped expression, identical plan;
-    tests/test_scale_ops.py pins the two paths' bucket distributions
-    and top-k overlap. Docstring numbers are interpolated from
+    Hash choice: the gram bucket hash is the md5 prefix
+    (`dsir_bucket_expr`), the one hash DuckDB replays bit-for-bit.
+    xxhash64 costs about half as much per gram pass (SCALE.md) but
+    buckets the grams differently, so it selects a different corpus
+    than the oracle. Docstring numbers are interpolated from
     DSIR_BUCKETS/DSIR_K.
     """
     d = load_table(spark, sf_dir, "documents").select(
@@ -1174,9 +1154,9 @@ def sample_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     when neighbors arrive, unlike row_number() % k). The output is the
     fold x language balance audit a CV harness checks before training:
     near-uniform fold sizes and per-language means confirm the hash is
-    not confounded with strata. Pure map + one grouped agg; the md5
-    path is oracle parity, production swaps to xxhash64 exactly as
-    dsir_bucket_expr documents."""
+    not confounded with strata. Pure map + one grouped agg; the fold
+    is the md5 prefix, the hash DuckDB replays bit-for-bit (as in
+    dsir_bucket_expr)."""
     d = load_table(spark, sf_dir, "documents")
     fold = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)

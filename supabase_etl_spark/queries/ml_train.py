@@ -739,9 +739,9 @@ def ml_feature_hash_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     featurizer that needs no fitted dictionary and therefore no
     driver-side state at any corpus size. The signed second hash makes
     bucket collisions unbiased. One explode + one (doc, bucket)
-    groupBy; values stay integer end-to-end. The md5-prefix hash is
-    the oracle-replayable path (the dsir_bucket_expr pattern); a
-    production swap to xxhash64 changes bucket ids only."""
+    groupBy; values stay integer end-to-end. The bucket hash is the md5
+    prefix, which DuckDB replays bit-for-bit (as in dsir_bucket_expr):
+    the bucket ids are part of the result."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
@@ -1549,8 +1549,8 @@ def ml_perceptron_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     misclassified docs re-aggregate to a bucket-keyed update. Two
     shuffles per epoch, both map-side combined; weights
     are pinned between epochs to keep plan depth constant. The
-    md5 bucket hash is the oracle-replayable choice (xxhash64 swaps in
-    for production, the dsir_bucket_expr pattern)."""
+    md5 bucket hash is the one DuckDB replays bit-for-bit (as in
+    dsir_bucket_expr)."""
     from supabase_etl_spark.operators.text import tokens as _toks
 
     d = load_table(spark, sf_dir, "documents")

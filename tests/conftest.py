@@ -46,6 +46,29 @@ def postgrest_mock():
     srv.shutdown()
 
 
+@pytest.fixture
+def pin_spy(monkeypatch):
+    """Record every (builder frame, eager flag) passed to
+    DataFrame.localCheckpoint during the test body."""
+    # Spark 4: classic instances override localCheckpoint on the classic
+    # subclass — patch THAT class, not the dispatch base.
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:
+        from pyspark.sql import DataFrame
+
+    monkeypatch.delenv("SPARK_GRAFT_PIN_MODE", raising=False)  # local: spied
+    recorded: list[DataFrame] = []
+    orig = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        recorded.append(self)
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return recorded
+
+
 @pytest.fixture(scope="session")
 def spark():
     from supabase_etl_spark.session import get_spark

@@ -96,22 +96,28 @@ def test_sorted_neighborhood_recovers_planted_near_dups(spark):
     assert not missed, f"SNM missed planted near-dup pairs: {sorted(missed)[:5]}"
 
 
-def test_exact_substring_hash_paths_agree(spark, monkeypatch):
-    """dedup_exact_substring's production xxhash64 window hash must
-    emit the IDENTICAL per-doc ledger as the md5 oracle-parity default
-    (a 64-bit collision over the test corpus would be the only way
-    they diverge — its absence is what licenses the bench override)."""
-    from supabase_etl_spark.queries import REGISTRY, load_all
+def test_exact_substring_window_hash_is_collision_free(spark):
+    """dedup_exact_substring keys its token windows by xxhash64; the
+    DuckDB oracle keys them by md5. Both give the exact-content ledger
+    as long as neither merges two distinct windows: over the test
+    corpus each hash is injective on window text."""
+    from supabase_etl_spark.operators.text import tokens
+    from supabase_etl_spark.queries.llm_dedup import XS_K
 
-    load_all()
-    fn = REGISTRY["dedup_exact_substring"].fn
-    monkeypatch.delenv("SPARK_GRAFT_XS_HASH", raising=False)
-    md5_rows = [tuple(r) for r in fn(spark, SF).collect()]
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_XS_HASH", "xxhash64")
-    xx_rows = [tuple(r) for r in fn(spark, SF).collect()]
-    spark.catalog.clearCache()
-    assert md5_rows == xx_rows
+    t = load_table(spark, SF, "documents").select(tokens(F.col("text")).alias("t"))
+    w = t.filter(F.size("t") >= XS_K).select(
+        F.explode(
+            F.expr(
+                f"transform(sequence(1, size(t) - {XS_K} + 1), "
+                f"i -> array_join(slice(t, i, {XS_K}), ' '))"
+            )
+        ).alias("w")
+    )
+    n_text, n_xx, n_md5 = w.agg(
+        F.count_distinct("w"), F.count_distinct(F.xxhash64("w")), F.count_distinct(F.md5("w"))
+    ).first()
+    assert n_text > 0
+    assert n_xx == n_md5 == n_text
 
 
 def test_dedup_cluster_labels_match_bruteforce(spark):

@@ -11,7 +11,7 @@ scan at 100 TB.
 
 Mechanism: ``pinning.pin`` is the engine's only pin path and, under
 the default ``local`` mode, calls ``DataFrame.localCheckpoint``; a spy
-wrapped around that method records the pre-pin DataFrame (the BUILDER
+(conftest's ``pin_spy``) wrapped around that method records the pre-pin DataFrame (the BUILDER
 frame) at every pin the query creates while its plan is being
 constructed — the frames the query ACTUALLY checkpoints, not a
 re-implementation that could drift. Each
@@ -44,29 +44,6 @@ from tests.test_scan_leaf_lint import scan_leaves
 SF = "/root/testdata/sf0.001"
 
 _REGISTRY = load_all()
-
-
-@pytest.fixture
-def pin_spy(monkeypatch):
-    """Record every (builder frame, eager flag) passed to
-    DataFrame.localCheckpoint during the test body."""
-    # Spark 4: classic instances override localCheckpoint on the classic
-    # subclass — patch THAT class, not the dispatch base.
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:
-        from pyspark.sql import DataFrame
-
-    monkeypatch.delenv("SPARK_GRAFT_PIN_MODE", raising=False)  # local: spied
-    recorded: list[DataFrame] = []
-    orig = DataFrame.localCheckpoint
-
-    def spy(self, eager=True):
-        recorded.append(self)
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-    return recorded
 
 
 @pytest.mark.parametrize("name", registry_sweep_params(sorted(_REGISTRY)))

@@ -1267,6 +1267,15 @@ def test_exact_substring_hash_keyed_no_pairs(spark):
     assert "Scan ExistingRDD" in plan
 
 
+def test_exact_substring_hashes_windows_with_xxhash64(spark, pin_spy):
+    """dedup_exact_substring has one window hash, xxhash64: no plan it
+    executes, its pinned builders included, computes md5."""
+    q = load_all()["dedup_exact_substring"]
+    plans = [_plan(q.fn(spark, SF))] + [_plan(b) for b in pin_spy]
+    assert any("xxhash64(" in p for p in plans)
+    assert not any("md5(" in p for p in plans)
+
+
 def test_cdc_chunks_row_local_boundaries(spark):
     """dedup_cdc_chunks: boundary detection is a row-local higher-order
     filter (no explode of the position stream before the chunk stage)

@@ -15,11 +15,13 @@ import json
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from supabase_etl_spark.functions.nulls import truthy_coalesce
 from supabase_etl_spark.functions.packing import (
     discover_column_ci,
     exclusion_project,
+    pack_map,
     to_jsonb_records,
 )
 
@@ -115,9 +117,10 @@ def test_unicode_payload_keys_survive(fin_df):
 
 
 def test_map_payload(fin_df):
-    out = to_jsonb_records(fin_df, payload="map").collect()
+    out = fin_df.select(F.col("`Năm`").alias("year"), pack_map(fin_df).alias("data")).collect()
     row = next(r for r in out if r["year"] == 2020)
     assert row["data"]["Doanh thu (Tỷ đồng)"] == "100.5"
+    assert not {k.lower() for k in row["data"]} & {"cp", "ticker", "năm", "year"}
 
 
 def test_nan_vs_null_distinction(spark):

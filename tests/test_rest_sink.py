@@ -1,10 +1,11 @@
 """REST sink tests against a local mock PostgREST (SURVEY §5.2.3, B3).
 
 Asserts: chunk sizes ≤ 300 (ref :71,:77-78), upsert headers, retry on
-5xx with eventual success, fail-fast on 4xx, at-least-once delivery
-accounting, the JSON spelling of every column type, one Spark job per
-upsert, and the EP1 pipeline end-to-end (extract → jsonb records →
-CSV → REST upsert → storage upload) against the mock.
+5xx, 408 and 429 with eventual success, fail-fast on other 4xx,
+at-least-once delivery accounting, the JSON spelling of every column
+type, one Spark job per upsert, and the EP1 pipeline end-to-end
+(extract → jsonb records → CSV → REST upsert → storage upload) against
+the mock.
 """
 
 from __future__ import annotations
@@ -93,6 +94,19 @@ def test_retry_on_500_then_success(spark, mock_server):
     metrics = upsert_rest(df, cfg)
     assert metrics["rows"] == 10
     # 2 failures + 1 success = 3 POSTs, at-least-once visible on the wire
+    assert len(store["requests"]) == 3
+    assert metrics["retries"] == 2
+
+
+def test_retry_on_429_and_408_then_success(spark, postgrest_mock):
+    """PostgREST's rate limit (429) and a request timeout (408) get
+    better on re-send, so they retry like a 5xx."""
+    srv, store = postgrest_mock
+    store["fail_next"]["/rest/v1/t4"] = [429, 408]
+    df = spark.range(10).coalesce(1)
+    cfg = RestSinkConfig(base_url=_base(srv), table="t4", backoff_s=0.01)
+    metrics = upsert_rest(df, cfg)
+    assert metrics["rows"] == 10
     assert len(store["requests"]) == 3
     assert metrics["retries"] == 2
 

@@ -111,68 +111,39 @@ def test_label_propagation_plan_bounded_in_rounds(spark):
     assert r3 == r10
 
 
-def test_dsir_hash_paths_statistically_equivalent(spark, monkeypatch):
-    """The production xxhash64 gram-bucket path must be a drop-in for
-    the oracle-parity md5 path: same plan shape, statistically
-    indistinguishable bucket-count distribution (uniform-hash moments),
-    and a top-k selection that overlaps beyond hash noise (logw values
-    shift only by which grams collide)."""
-    import importlib
-
+def test_dsir_bucket_hash_is_uniform(spark):
+    """The md5-prefix gram-bucket hash behaves as a uniform hash: on the
+    corpus it routes each word to its own bucket up to a few
+    collisions, and on a vocab >> buckets it fills every bucket with
+    binomial-thin spread."""
     from supabase_etl_spark.queries import llm_sampling as S
 
     sf = "/root/testdata/sf0.01"
-
-    def run(mode):
-        monkeypatch.setenv("SPARK_GRAFT_DSIR_HASH", mode)
-        return S.sample_dsir(spark, sf).collect()
-
-    def buckets(mode):
-        monkeypatch.setenv("SPARK_GRAFT_DSIR_HASH", mode)
-        d = load_table(spark, sf, "documents").select(
-            F.explode(F.split("text", r"\s+")).alias("g")
-        ).filter(F.col("g") != "")
-        return (
-            d.select(S.dsir_bucket_expr("g").alias("b"))
-            .groupBy("b").count().collect()
-        )
-
-    b_md5 = {r["b"]: r["count"] for r in buckets("md5")}
-    b_xx = {r["b"]: r["count"] for r in buckets("xxhash64")}
+    words = load_table(spark, sf, "documents").select(
+        F.explode(F.split("text", r"\s+")).alias("g")
+    ).filter(F.col("g") != "")
+    buckets = {
+        r["b"]: r["count"]
+        for r in words.select(S.dsir_bucket_expr("g").alias("b")).groupBy("b").count().collect()
+    }
     # the synthetic corpus has a ~31-word unigram vocabulary, so the
     # bucket histogram is word-frequency mass routed through the hash:
     # nonempty-bucket count ≈ vocab minus a few collisions (birthday
-    # model at V≈31, B=256 expects ≈2), and the sorted count vector is
-    # the word-frequency vector with at most those few entries merged
-    vocab = (
-        load_table(spark, sf, "documents")
-        .select(F.explode(F.split("text", r"\s+")).alias("g"))
-        .filter(F.col("g") != "").distinct().count()
-    )
-    assert sum(b_md5.values()) == sum(b_xx.values())
-    for b in (b_md5, b_xx):
-        assert vocab - 6 <= len(b) <= vocab, (len(b), vocab)
+    # model at V≈31, B=256 expects ≈2)
+    vocab = words.distinct().count()
+    assert sum(buckets.values()) == words.count()
+    assert vocab - 6 <= len(buckets) <= vocab, (len(buckets), vocab)
 
     # uniformity moments proper need a vocab >> B: hash 20k synthetic
-    # grams — both paths must fill every bucket with binomial-thin
+    # grams — the hash must fill every bucket with binomial-thin
     # spread (mean 78, sd ≈ 8.8; a biased hash blows the spread up)
     import statistics
 
     g20k = spark.range(20_000).select(F.concat(F.lit("gram_"), F.col("id")).alias("g"))
-    for mode in ("md5", "xxhash64"):
-        monkeypatch.setenv("SPARK_GRAFT_DSIR_HASH", mode)
-        counts = [
-            r["count"]
-            for r in g20k.select(S.dsir_bucket_expr("g").alias("b")).groupBy("b").count().collect()
-        ]
-        assert len(counts) == S.DSIR_BUCKETS, (mode, len(counts))
-        mean = 20_000 / S.DSIR_BUCKETS
-        assert statistics.pstdev(counts) < 0.25 * mean, mode
-
-    top_md5 = {r["doc_id"] for r in run("md5")}
-    top_xx = {r["doc_id"] for r in run("xxhash64")}
-    assert len(top_md5) == len(top_xx) == S.DSIR_K
-    # identical importance model up to bucket collisions: the two
-    # selections must agree on well over half the corpus picks
-    overlap = len(top_md5 & top_xx) / S.DSIR_K
-    assert overlap >= 0.6, f"top-k overlap {overlap:.2f} below hash-noise floor"
+    counts = [
+        r["count"]
+        for r in g20k.select(S.dsir_bucket_expr("g").alias("b")).groupBy("b").count().collect()
+    ]
+    assert len(counts) == S.DSIR_BUCKETS, len(counts)
+    mean = 20_000 / S.DSIR_BUCKETS
+    assert statistics.pstdev(counts) < 0.25 * mean
