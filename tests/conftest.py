@@ -22,6 +22,7 @@ class MockPostgrest(BaseHTTPRequestHandler):
             "path": self.path,
             "rows": json.loads(body) if body and self.path.startswith("/rest") else None,
             "raw_len": len(body),
+            "body": body,
             "headers": dict(self.headers),
         }
         self.store["requests"].append(entry)

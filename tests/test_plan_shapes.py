@@ -3,6 +3,7 @@ must be visible in the physical plan, not assumed."""
 
 from __future__ import annotations
 
+import re
 import tempfile
 
 from pyspark.sql import functions as F
@@ -1255,15 +1256,21 @@ def test_video_dedup_pipeline_signature_bucketed(spark):
     assert "sig" in cand_plan
 
 
-def test_exact_substring_hash_keyed_no_pairs(spark):
+def test_exact_substring_hash_keyed_no_pairs(spark, pin_spy):
     """dedup_exact_substring: the dup test must be hash-keyed (semi
     join after the window-hash aggregate), never doc x doc; the shared
     tokenized/window frames arrive through the localCheckpoint pin
-    (scan-once, hygiene-sanctioned)."""
+    (scan-once, hygiene-sanctioned). The semi join runs inside a pinned
+    builder, so the pinned plans are read too: one of them joins on the
+    window hash alone, with no residual condition (a doc x doc join of
+    the windows on ``h`` and ``doc_id <>`` carries one)."""
     q = load_all()["dedup_exact_substring"]
     plan = _plan(q.fn(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    plans = [plan] + [_plan(b) for b in pin_spy]
+    assert not any("CartesianProduct" in p for p in plans)
+    assert not any("BroadcastNestedLoopJoin" in p for p in plans)
+    semi = re.compile(r"Join \[h#\d+L\], \[h#\d+L\], LeftSemi(, Build\w+)?(, false)?$")
+    assert any(semi.search(line) for p in plans for line in p.splitlines())
     assert "Scan ExistingRDD" in plan
 
 

@@ -15,47 +15,10 @@ import csv
 import datetime
 import decimal
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
 from supabase_etl_spark.io.rest_sink import RestSinkConfig, upsert_rest
-
-
-class _MockPostgrest(BaseHTTPRequestHandler):
-    store = None  # set per-server: {"requests": [...], "fail_next": {path: [codes]}}
-
-    def do_POST(self):
-        length = int(self.headers.get("Content-Length", 0))
-        body = self.rfile.read(length)
-        entry = {
-            "path": self.path,
-            "rows": json.loads(body) if body and self.path.startswith("/rest") else None,
-            "raw_len": len(body),
-            "body": body,
-            "headers": dict(self.headers),
-        }
-        self.store["requests"].append(entry)
-        fail_queue = self.store["fail_next"].get(self.path, [])
-        code = fail_queue.pop(0) if fail_queue else 201
-        self.send_response(code)
-        self.send_header("Content-Length", "0")
-        self.end_headers()
-
-    def log_message(self, *args):  # silence
-        pass
-
-
-@pytest.fixture()
-def mock_server():
-    store = {"requests": [], "fail_next": {}}
-    handler = type("H", (_MockPostgrest,), {"store": store})
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield srv, store
-    srv.shutdown()
 
 
 def _base(srv):
@@ -70,8 +33,8 @@ def _csv_rows(csv_dir):
         return list(csv.reader(fh, escapechar="\\", doublequote=False))[1:]
 
 
-def test_chunking_and_headers(spark, mock_server):
-    srv, store = mock_server
+def test_chunking_and_headers(spark, postgrest_mock):
+    srv, store = postgrest_mock
     df = spark.range(750).selectExpr("id", "id * 2 AS v").coalesce(1)
     cfg = RestSinkConfig(base_url=_base(srv), table="t1", api_key="k123", chunk_size=300)
     metrics = upsert_rest(df, cfg)
@@ -86,8 +49,8 @@ def test_chunking_and_headers(spark, mock_server):
     assert all(r["path"] == "/rest/v1/t1" for r in store["requests"])
 
 
-def test_retry_on_500_then_success(spark, mock_server):
-    srv, store = mock_server
+def test_retry_on_500_then_success(spark, postgrest_mock):
+    srv, store = postgrest_mock
     store["fail_next"]["/rest/v1/t2"] = [500, 503]
     df = spark.range(10).coalesce(1)
     cfg = RestSinkConfig(base_url=_base(srv), table="t2", chunk_size=300, backoff_s=0.01)
@@ -111,8 +74,8 @@ def test_retry_on_429_and_408_then_success(spark, postgrest_mock):
     assert metrics["retries"] == 2
 
 
-def test_fail_fast_on_400(spark, mock_server):
-    srv, store = mock_server
+def test_fail_fast_on_400(spark, postgrest_mock):
+    srv, store = postgrest_mock
     store["fail_next"]["/rest/v1/t3"] = [400]
     df = spark.range(5).coalesce(1)
     cfg = RestSinkConfig(base_url=_base(srv), table="t3", backoff_s=0.01)
@@ -135,13 +98,13 @@ def _strict_rows(store):
     ]
 
 
-def test_payload_type_matrix(spark, mock_server):
+def test_payload_type_matrix(spark, postgrest_mock):
     """Each column type as Spark's JSON writer spells it (the writer of
     the packed `data` column and the CSV cell): NaN as "NaN", decimal as
     a number, timestamp as ISO-8601 UTC, binary as base64."""
     from pyspark.sql import Row
 
-    srv, store = mock_server
+    srv, store = postgrest_mock
     df = spark.createDataFrame(
         [(
             1, 2**40, True, 'say "hi"\nDoanh thu năm', float("nan"), 1e16, 0.1,
@@ -173,10 +136,10 @@ def test_payload_type_matrix(spark, mock_server):
     assert row["a b"] == "v" and row["Năm"] == 2024
 
 
-def test_json_column_only_frame(spark, mock_server):
+def test_json_column_only_frame(spark, postgrest_mock):
     """A frame of one `json_columns` column: its text is spliced in as
     the value, a null as null."""
-    srv, store = mock_server
+    srv, store = postgrest_mock
     df = spark.createDataFrame(
         [('{"Doanh thu": 1.5, "nested": [1, {"a": null}]}',), (None,)], "data string"
     ).coalesce(1)
@@ -188,10 +151,10 @@ def test_json_column_only_frame(spark, mock_server):
     ]
 
 
-def test_upsert_runs_one_job_on_a_cached_frame(spark, mock_server):
+def test_upsert_runs_one_job_on_a_cached_frame(spark, postgrest_mock):
     """The sink is one pass over its input: no collect, count or second
     scan of the frame it posts."""
-    srv, _ = mock_server
+    srv, _ = postgrest_mock
     df = spark.range(40).selectExpr("id", "CAST(id AS string) AS data").repartition(3)
     df.persist()
     try:
@@ -209,11 +172,11 @@ def test_upsert_runs_one_job_on_a_cached_frame(spark, mock_server):
         df.unpersist()
 
 
-def test_pipeline_end_to_end(spark, mock_server, tmp_path):
+def test_pipeline_end_to_end(spark, postgrest_mock, tmp_path):
     """EP1 parity: extract → records → CSV → REST → storage upload."""
     from supabase_etl_spark.plans.pipeline import PipelineConfig, run_pipeline
 
-    srv, store = mock_server
+    srv, store = postgrest_mock
 
     def source(s):
         return s.createDataFrame(
