@@ -54,15 +54,20 @@ def canon_rows(columns, rows):
     return cols_sorted, out
 
 
-def run_duckdb(sql: str, sf_dir: str):
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table at ``sf_dir``."""
+    from supabase_etl_spark.io.readers import TABLE_NAMES
+
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def run_duckdb(sql: str, sf_dir: str):
+    con = oracle_connection(sf_dir)
     rel = con.sql(sql)
     # The driver hashes via pandas, where DuckDB HUGEINT (the default
     # SUM-of-integer result type) degrades to float64 and prints

@@ -15,6 +15,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as a string."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -38,10 +45,7 @@ def main() -> None:
         "",
     ]
     for name in sorted(bench):
-        df = bench[name].fn(spark, args.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(bench[name].fn(spark, args.sf))
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
 
     with open(args.out, "w") as f:

@@ -136,8 +136,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     key = (path, _file_signature(path))
     facts = _FOOTERS.get(key)
     nanos_cols = facts[0] if facts else _nanos_timestamp_cols_uncached(path)
-    if nanos_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # set on every call, not only on a NANOS file: what a raw read of a
+    # NANOS file gives must not depend on what the session read before
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # scan-level (not cast-level) normalization: the reader emits
     # TIMESTAMP directly, so ts predicates still push down to parquet
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

@@ -82,6 +82,9 @@ def get_spark(
         # tz makes the field values identical either way); applies to both
         # path reads and catalog external tables
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # parquet TIMESTAMP(NANOS) reads as int64 instead of failing the
+        # scan; io/readers.py truncates it to a micros TIMESTAMP
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

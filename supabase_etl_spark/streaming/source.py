@@ -60,8 +60,7 @@ def read_events_stream(
         nanos = "ts" in _nanos_timestamp_cols_uncached(f"{sf_dir}/{glob}")
     except (IndexError, FileNotFoundError, OSError):
         nanos = False
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the file source wants a directory (it infers basePath); scope the
     # scan to the events file(s) with a glob filter
     raw = (

@@ -94,3 +94,14 @@ def registry_sweep_params(names):
         n if n in bench_names else pytest.param(n, marks=pytest.mark.slow)
         for n in names
     ]
+
+
+def persistent_rdds(spark) -> dict:
+    """{rdd_id: JavaRDD} snapshot of the executor storage registry."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    it = jmap.keySet().iterator()
+    out = {}
+    while it.hasNext():
+        rid = it.next()
+        out[rid] = jmap.get(rid)
+    return out

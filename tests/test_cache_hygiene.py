@@ -16,6 +16,8 @@ which is asynchronous by design.)
 
 from __future__ import annotations
 
+from conftest import persistent_rdds
+
 from supabase_etl_spark.queries import load_all
 
 SF = "/root/testdata/sf0.001"
@@ -39,23 +41,13 @@ FORMERLY_CACHING = [
 ]
 
 
-def _persistent_rdds(spark) -> dict:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    it = jmap.keySet().iterator()
-    out = {}
-    while it.hasNext():
-        k = it.next()
-        out[k] = jmap.get(k)
-    return out
-
-
 def test_composed_queries_leave_no_storage_behind(spark):
     qs = load_all()
-    before = set(_persistent_rdds(spark))
+    before = set(persistent_rdds(spark))
     for name in FORMERLY_CACHING:
         assert name in qs, f"registry lost {name}"
         qs[name].fn(spark, SF).write.format("noop").mode("overwrite").save()
-    after = _persistent_rdds(spark)
+    after = persistent_rdds(spark)
     unsanctioned = {
         k: v.toString()
         for k, v in after.items()

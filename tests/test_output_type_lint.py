@@ -36,13 +36,10 @@ import pytest
 from conftest import registry_sweep_params
 from pyspark.sql import types as T
 
+from scripts.check_correctness import oracle_connection
 from supabase_etl_spark.queries import load_all
 
 SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 _REGISTRY = load_all()
 
@@ -67,14 +64,7 @@ def test_spark_output_is_scalar_only(spark, name):
 
 @pytest.fixture(scope="module")
 def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
+    con = oracle_connection(SF)
     yield con
     con.close()
 

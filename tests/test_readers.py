@@ -114,6 +114,32 @@ def test_stream_start_reprobes_landing_zone(spark, tmp_path):
     assert rows[0].ts.microsecond == 123456
 
 
+def test_raw_nanos_read_does_not_depend_on_session_history(spark, tmp_path):
+    """A new session of the factory's context reads a NANOS column as
+    int64 on a raw ``read.parquet``, before any ``read_parquet`` call
+    in it: the factory sets ``nanosAsLong``, not the first NANOS file
+    a session happens to meet. A session without that conf gets it from
+    its first ``read_parquet`` call, whatever file that call reads."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from supabase_etl_spark.io.readers import read_parquet
+
+    path = str(tmp_path / "ns.parquet")
+    ts = pa.array([1_704_067_200_123_456_789], type=pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path)
+    fresh = spark.newSession()
+    assert isinstance(fresh.read.parquet(path).schema["ts"].dataType, LongType)
+
+    micros = str(tmp_path / "us.parquet")
+    pq.write_table(pa.table({"ts": ts.cast(pa.timestamp("us"), safe=False)}), micros)
+    other = spark.newSession()
+    other.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    read_parquet(other, micros)
+    assert isinstance(other.read.parquet(path).schema["ts"].dataType, LongType)
+
+
 def _group_jobs(spark, group, fn):
     """Job ids ``fn()`` starts under a job group of its own."""
     sc = spark.sparkContext

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import registry_sweep_params
+from conftest import persistent_rdds, registry_sweep_params
 
 from supabase_etl_spark.queries import load_all
 
@@ -45,26 +45,15 @@ _REGISTRY = load_all()
 MAX_CKPT_BLOCKS = 12
 
 
-def _persistent_rdds(spark):
-    """{rdd_id: JavaRDD} snapshot of the executor storage registry."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    it = jmap.keySet().iterator()
-    out = {}
-    while it.hasNext():
-        rid = it.next()
-        out[rid] = jmap.get(rid)
-    return out
-
-
 @pytest.mark.parametrize("name", registry_sweep_params(sorted(_REGISTRY)))
 def test_query_leaves_no_storage_behind(spark, name):
     spec = _REGISTRY[name]
-    before = set(_persistent_rdds(spark))
+    before = set(persistent_rdds(spark))
     df = spec.fn(spark, SF)
     df.write.format("noop").mode("overwrite").save()
     del df
 
-    after = _persistent_rdds(spark)
+    after = persistent_rdds(spark)
     leaked = {rid: rdd for rid, rdd in after.items() if rid not in before}
 
     non_ckpt = []

@@ -12,6 +12,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from conftest import persistent_rdds
 from pyspark.sql import functions as F
 
 
@@ -721,16 +722,6 @@ def test_incremental_replay_has_one_path():
     assert not offenders, offenders
 
 
-def _persistent_rdds(spark):
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    it = jmap.keySet().iterator()
-    out = {}
-    while it.hasNext():
-        k = it.next()
-        out[k] = jmap.get(k)
-    return out
-
-
 def _assert_ledger_and_no_leak(spark, name):
     """Run ingest capstone `name` and check its ledger and its state.
 
@@ -747,7 +738,7 @@ def _assert_ledger_and_no_leak(spark, name):
     residue."""
     from supabase_etl_spark.queries import load_all
 
-    before = set(_persistent_rdds(spark))
+    before = set(persistent_rdds(spark))
     out = load_all()[name].fn(spark, "/root/testdata/sf0.001").collect()
     assert [r["range_id"] for r in out] == [0, 1, 2]
     for r in out:
@@ -760,7 +751,7 @@ def _assert_ledger_and_no_leak(spark, name):
         )
     leaked = {
         k: v.toString()
-        for k, v in _persistent_rdds(spark).items()
+        for k, v in persistent_rdds(spark).items()
         if k not in before and not v.rdd().isLocallyCheckpointed()
     }
     assert not leaked, (
@@ -781,14 +772,14 @@ def test_incremental_replay_state_is_bounded(spark):
     survive the run."""
     from supabase_etl_spark.queries import load_all
 
-    before = set(_persistent_rdds(spark))
+    before = set(persistent_rdds(spark))
     q = load_all()["stream_incremental_curation_e2e"]
     q.fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
         "overwrite"
     ).save()
     leaked = {
         k: v.toString()
-        for k, v in _persistent_rdds(spark).items()
+        for k, v in persistent_rdds(spark).items()
         if k not in before and not v.rdd().isLocallyCheckpointed()
     }
     assert not leaked, (
